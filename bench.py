@@ -383,22 +383,6 @@ def main() -> None:
     timings_first["near_dup_pipeline"] = round(first, 3)
     timings["near_dup_pipeline"] = round(pipeline_sec, 3)
 
-    # same full pipeline under the OPH signature kernel (the recommended
-    # scale config, BASELINE.md round 3); headline stays kperm for
-    # round-over-round comparability.
-    def _headline_oph():
-        from rust_gd_spark.pipeline import DedupConfig, near_dup_pipeline, with_turn_uid
-
-        tr = with_turn_uid(entrymod._transcripts_from_docs(spark, sf_dir))
-        res = near_dup_pipeline(
-            tr, "uid", "text",
-            DedupConfig(jaccard_threshold=0.5, min_substring_len=120,
-                        minhash_scheme="oph"),
-            collect_stats=False,
-        )
-        return _force(res.clusters)
-
-    timed("near_dup_pipeline_oph", _headline_oph)
     timed("transcript_clusters", lambda: _force(q["transcript_clusters"](spark, sf_dir)))
 
     throughput = n_docs / pipeline_sec if pipeline_sec > 0 else 0.0

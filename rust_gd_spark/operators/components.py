@@ -14,11 +14,10 @@ each round is groupBy-min + join, both AQE-skew-splittable:
     small-star: orient edges high→low; attach u and its smaller neighbors
                 to m(u) = min over those neighbors
 
-Checkpointing: every super-round truncates lineage. The default is
+Checkpointing: every star round truncates lineage. The default is
 ``localCheckpoint`` (executor-memory blocks — fastest, but a lost executor
-loses its blocks and fails the job). Passing ``checkpoint_dir`` (or setting
-``GD_CC_CHECKPOINT_DIR``) switches every truncation to RELIABLE
-``df.checkpoint()`` into that directory (HDFS/S3/NFS on a real cluster):
+loses its blocks and fails the job). Passing ``checkpoint_dir`` switches
+every truncation to RELIABLE ``df.checkpoint()`` into that directory (HDFS/S3/NFS on a real cluster):
 a lost executor's partitions are re-read from the checkpoint files instead
 of recomputed-from-nothing, so the CC stage resumes mid-iteration — the
 north_rule's "resumes from checkpoint after executor loss" clause, tested
@@ -113,7 +112,6 @@ def _driver_unionfind(pdf) -> "pd.DataFrame":  # noqa: F821
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    rounds_per_barrier: int | None = None,
     small_graph_rows: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -136,38 +134,20 @@ def connected_components(
     ``incremental_clusters`` driver query do, so both paths stay
     oracle-checked and outputs are equality-tested).
 
-    ``rounds_per_barrier`` star-star rounds are chained LAZILY between
-    materializations: a fixpoint of one round is a fixpoint of k rounds, so
-    convergence detection is unaffected. The trade is explicit: each
-    skipped barrier removes a driver round-trip and a checkpoint
-    write+read of the edge set, but convergence is only DETECTED at
-    super-round granularity, so up to ``rounds_per_barrier`` extra
-    star-rounds run past the fixpoint — and a converged round still
-    shuffles the full edge set (the data does not shrink), so those extra
-    rounds are NOT free. Measured (800k-component graph, local[8], warm):
-    k=2 is ~38% slower than k=1 — barriers are cheap in one JVM. k>1 pays
-    off only where the per-barrier cost (driver latency + checkpoint I/O)
-    rivals two shuffles of the edge set, i.e. high-executor-count clusters
-    with fast shuffle fabric. Default 1; override per call or via the
-    ``GD_CC_ROUNDS_PER_BARRIER`` env var (driver-side) for cluster runs.
+    The fixpoint runs one large-star/small-star round per barrier: the
+    round's checkpoint and its convergence signature share one job.
+    Chaining several rounds per barrier was measured (800k-component
+    graph, local[8], warm) at ~38% slower for two rounds: a converged
+    round still shuffles the full edge set, while barriers are cheap in
+    one JVM.
 
     Raises RuntimeError if not converged within ``max_iter`` rounds (CC on
     n nodes needs O(log n) — 50 covers any realistic corpus).
     """
-    if rounds_per_barrier is None:
-        rounds_per_barrier = int(os.environ.get("GD_CC_ROUNDS_PER_BARRIER", "1"))
-    if rounds_per_barrier < 1:
-        # env-var sourced: a config typo must not surface as a cryptic
-        # range() error or a bogus "no fixpoint" RuntimeError
-        raise ValueError(
-            f"rounds_per_barrier must be >= 1, got {rounds_per_barrier}"
-        )
     if small_graph_rows is None:
         small_graph_rows = int(
             os.environ.get("GD_CC_SMALL_GRAPH_ROWS", "2000000")
         )
-    if checkpoint_dir is None:
-        checkpoint_dir = os.environ.get("GD_CC_CHECKPOINT_DIR") or None
     if checkpoint_dir:
         # Reliable mode: truncations write to the checkpoint dir and
         # survive executor loss (localCheckpoint blocks do not).
@@ -195,15 +175,12 @@ def connected_components(
                 "node long, component long",
             )
     prev_sig = None
-    for it in range(0, max_iter, rounds_per_barrier):
-        # clamp the final super-round so exactly max_iter star-rounds run
-        for _ in range(min(rounds_per_barrier, max_iter - it)):
-            cur = _canon(_small_star(_large_star(cur)))
+    for it in range(max_iter):
         # LAZY checkpoint: the signature action right below both
         # materializes the checkpoint and computes the convergence
-        # signature in ONE job — one driver barrier per super-round.
+        # signature in ONE job — one driver barrier per round.
         # Lineage still truncates to O(1) at the checkpoint.
-        cur = _ckpt(cur, eager=False)
+        cur = _ckpt(_canon(_small_star(_large_star(cur))), eager=False)
         with job_description(sc, f"cc:round{it}"):
             sig = _signature(cur)
         if sig == prev_sig:

@@ -352,9 +352,10 @@ def minhash_signatures(
     its generator matrix the same way, `rs/mod.rs:25-60` → SURVEY.md A12).
 
     ``scheme="oph"``: densified one-permutation hashing — O(m) per doc
-    instead of O(m·num_perm); see ``_oph_signatures_chunk``. The scale
-    default for the pipeline (``DedupConfig.minhash_scheme``); ``seed`` is
-    unused (the single permutation is the fixed splitmix64 rehash).
+    instead of O(m·num_perm); see ``_oph_signatures_chunk``. Only the
+    ``minhash_lsh_pairs_oph`` driver query uses it; the pipeline runs kperm.
+    ``seed`` is unused (the single permutation is the fixed splitmix64
+    rehash).
     """
     if scheme == "oph":
         from ._vectorize import iter_segments

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -36,58 +37,22 @@ class DedupConfig:
     num_perm: int = 128
     bands: int = 32
     rows: int = 4
-    # MinHash signature kernel:
-    # * "kperm" — num_perm independent (a·h+b) permutations, the textbook
-    #   family; O(m·num_perm) memory traffic per doc, measured as the
-    #   pipeline's bandwidth-bound non-scaling stage (BASELINE.md r3).
-    # * "oph"   — one-permutation hashing (Li'12) via fast similarity
-    #   sketching (Dahlgaard-Knudsen-Thorup FOCS'17): multi-round
-    #   rehash + bucket-min until every slot fills, O(m + k·log k) —
-    #   far less traffic than k-perm on long docs, per-slot collision
-    #   probability exactly J at EVERY set size (short turns included),
-    #   same banding semantics, verify still exact. The extreme-scale
-    #   kernel.
-    minhash_scheme: str = "kperm"
     jaccard_threshold: float = 0.7
     char_k: int = 8                  # char-gram width (SimHash path)
-    # SimHash candidate generation:
-    # * "banding"  — fixed sim_bands×(64/sim_bands)-bit bands; guarantees
-    #   every pair at Hamming distance ≤ sim_bands−1 co-buckets, but a
-    #   16-bit band's chance-collision stream grows QUADRATICALLY with
-    #   corpus size (verify absorbs it here; at extreme scale it is the
-    #   dominant cost).
-    # * "rotations" — Manku sorted-rotations (WWW'07,
-    #   simhash_rotation_candidate_pairs): candidate volume is LINEAR
-    #   (≤ sim_tables·sim_window per row) and co-bucketing is guaranteed
-    #   for d < 64/sim_prefix_bits (default 7 > banding's 3) — the
-    #   extreme-scale mode.
-    simhash_mode: str = "banding"
+    # SimHash candidates come from fixed sim_bands×(64/sim_bands)-bit
+    # bands: every pair at Hamming distance ≤ sim_bands−1 co-buckets.
     sim_bands: int = 4
-    sim_tables: int = 8
-    sim_prefix_bits: int = 8
-    sim_window: int = 8
-    # rotation prefix buckets hold ~n/2^prefix_bits members BY DESIGN (the
-    # sorted window bounds pair volume, not bucket size), so they get their
-    # own cap — a collect_list task over 200k (rk, id, fp) structs is
-    # ~7 MB, and salting only engages beyond that.
-    sim_rotation_max_bucket: int = 200_000
     max_hamming: int = 3
     min_substring_len: int = 200
+    # Buckets over this size are salted (SURVEY.md §4.2): hash-split into
+    # ~cap-sized sub-buckets whose representatives are chained, so
+    # connectivity (and therefore clustering recall) is preserved with
+    # O(size) edges. Audited as action='salted'.
     max_bucket_size: int = 2000
     # pairs per bucket member (band-graph width): bounds the per-bucket
     # pair blow-up to O(m·K) while CC restores full clusters via chain +
     # band redundancy. None = exact all-pairs (small corpora / oracles).
     neighbor_window: int | None = 8
-    # salt-and-keep for buckets over max_bucket_size (SURVEY.md §4.2):
-    # hash-split hot buckets into ~cap-sized sub-buckets + chain their
-    # representatives — connectivity (and therefore clustering recall) is
-    # preserved with O(size) edges instead of dropping the bucket. Audited
-    # either way (action='salted'/'dropped').
-    salt_oversized: bool = True
-    # substring verify: threshold decision only (False) vs exact LCS length
-    # (True). Clustering needs the decision; exact length is ~10× slower on
-    # long documents.
-    substring_exact_length: bool = False
     # Path toggles: the exact path always runs (it is also the
     # canonicalization step); the three near-dup paths can be disabled
     # individually (e.g. the oracle-checkable exact+minhash+substring
@@ -95,19 +60,6 @@ class DedupConfig:
     enable_minhash: bool = True
     enable_simhash: bool = True
     enable_substring: bool = True
-    # Submit the three candidate paths as CONCURRENT Spark jobs (driver
-    # threads; Spark schedules fairly across them — guide §2.6). Before the
-    # lazy-stage/pinned-base work this measured 35% WORSE on a saturated
-    # single-JVM local[N] box (3× python workers + 3× concurrent shuffles
-    # fighting one memory system); with the chains now barrier-bound it
-    # measured 23% (oracle shape) to 39% (full 4-path) FASTER, ABAB
-    # min-of-4 at sf0.1 — the overlap fills the driver-barrier gaps of one
-    # chain with another chain's stages. On a multi-executor cluster the
-    # same overlap keeps executors busy across per-stage barriers. Default
-    # on; GD_CONCURRENT_PATHS=0 restores sequential submission.
-    concurrent_paths: bool = field(
-        default_factory=lambda: os.environ.get("GD_CONCURRENT_PATHS", "1") != "0"
-    )
     seed: int = 1
 
 
@@ -362,12 +314,11 @@ def near_dup_pipeline(
             # signature kernel — the path's dominant cost — ran twice.
             bh = minhash.minhash_band_hashes(
                 shingles, cfg.num_perm, cfg.bands, cfg.rows, cfg.seed,
-                scheme=cfg.minhash_scheme,
             ).localCheckpoint(eager=True)
             bands = minhash.explode_band_hashes(bh)
             return minhash.lsh_candidate_pairs(
                 bands, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-                salt_oversized=cfg.salt_oversized,
+                salt_oversized=True,
             )
 
         cand, audit = _staged_candidates("minhash", _mh_cands)
@@ -400,30 +351,15 @@ def near_dup_pipeline(
             # (bucket-count checkpoint + oversized probe inside
             # bucket_pairs); the audit stage and the verify stage must
             # share ONE build, not pay those jobs twice.
-            if "r" in _sh_cache:
-                return _sh_cache["r"]
-            if cfg.simhash_mode == "rotations":
-                r = simhash.simhash_rotation_candidate_pairs(
-                    fps,
-                    tables=cfg.sim_tables,
-                    prefix_bits=cfg.sim_prefix_bits,
-                    window=cfg.sim_window,
-                    max_bucket_size=cfg.sim_rotation_max_bucket,
-                    salt_oversized=cfg.salt_oversized,
-                )
-            elif cfg.simhash_mode == "banding":
-                banded = simhash.simhash_bands(fps, bands=cfg.sim_bands)
-                r = simhash.simhash_candidate_pairs(
-                    banded,
+            if "r" not in _sh_cache:
+                _sh_cache["r"] = simhash.simhash_candidate_pairs(
+                    simhash.simhash_bands(fps, bands=cfg.sim_bands),
                     cfg.max_bucket_size,
                     neighbor_window=cfg.neighbor_window,
                     materialize=False,
-                    salt_oversized=cfg.salt_oversized,
+                    salt_oversized=True,
                 )
-            else:
-                raise ValueError(f"unknown simhash_mode {cfg.simhash_mode!r}")
-            _sh_cache["r"] = r
-            return r
+            return _sh_cache["r"]
 
         # the audit derives from the compact bucket-count agg — persist it
         # as its own stage. The raw 16-bit-band collision stream is
@@ -447,7 +383,7 @@ def near_dup_pipeline(
             fps = substring.winnow_fingerprints(reps, "id", "text", k=k, w=w)
             return substring.substring_candidate_pairs(
                 fps, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-                salt_oversized=cfg.salt_oversized,
+                salt_oversized=True,
             )
 
         cand, audit = _staged_candidates("substring", _ss_cands)
@@ -456,19 +392,18 @@ def near_dup_pipeline(
             "substring_pairs",
             lambda: substring.verify_common_substring(
                 cand, reps, "id", "text", cfg.min_substring_len,
-                exact_length=cfg.substring_exact_length,
+                # clustering needs only the threshold decision; the exact
+                # LCS length is ~10× slower on long documents
+                exact_length=False,
             ),
             lazy=True,
         )
 
-    # The three candidate paths are independent DAGs over `reps`. Default
-    # is SEQUENTIAL: measured on a saturated 32-core local[N] box,
-    # concurrent submission made the wall 35% WORSE — 3x the python UDF
-    # workers and 3x the concurrent shuffles fight for the same memory
-    # bandwidth. cfg.concurrent_paths=True submits them from driver
-    # threads instead — the multi-executor-cluster mode, where overlapping
-    # one chain's narrow/barrier stages with another's wide stages is what
-    # keeps executors busy (see DedupConfig.concurrent_paths).
+    # The candidate paths are independent DAGs over `reps`, each submitted
+    # from its own driver thread; Spark schedules their jobs fairly, so one
+    # chain's stages fill the driver-barrier gaps of another's (measured
+    # 23-39% faster than sequential submission on the full 4-path config
+    # at sf0.1, local[N]).
     chains = []
     if cfg.enable_minhash:
         chains.append((
@@ -488,14 +423,11 @@ def near_dup_pipeline(
             lambda ss: ss.select("id_l", "id_r", F.lit("substring").alias("path"),
                                  F.col("common_len").cast("double").alias("score")),
         ))
-    if cfg.concurrent_paths and len(chains) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-            futs = [pool.submit(build) for build, _ in chains]
-            path_pairs = [sel(f.result()) for f, (_, sel) in zip(futs, chains)]
-    else:
-        path_pairs = [sel(build()) for build, sel in chains]
+    # max_workers=0 raises, so a run with every near-dup path off still
+    # gets a (never used) one-thread pool
+    with ThreadPoolExecutor(max_workers=max(1, len(chains))) as pool:
+        futs = [pool.submit(build) for build, _ in chains]
+        path_pairs = [sel(f.result()) for f, (_, sel) in zip(futs, chains)]
 
     # --- union + clustering ---------------------------------------------------
     def _all_pairs():
@@ -628,6 +560,18 @@ def cluster_representatives(
     )
 
 
+def _publish_manifest(path: str, manifest: dict) -> None:
+    """Write the manifest LAST and atomically (temp file + ``os.replace``):
+    its existence marks a complete, readable output set, so a crash
+    mid-write leaves either no manifest or the whole one."""
+    import json
+
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+
+
 def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -> dict:
     """Persist the pipeline's output contract — the engine's analogue of the
     reference's ``Deduped`` output struct (`src/lib.rs:90-94`):
@@ -643,8 +587,6 @@ def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -
     snapshot commit (SURVEY.md §1.2/§4.3); on a real cluster these are
     ``df.writeTo(tbl).append()`` calls. Returns the manifest dict.
     """
-    import json
-
     base = os.path.join(out_dir, run_id)
     tables = {"clusters": result.clusters, "pairs": result.pairs,
               "metrics": result.metrics, "lineage": result.lineage}
@@ -657,9 +599,7 @@ def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -
         path = os.path.join(base, "audits", name)
         adf.write.mode("overwrite").parquet(path)
         manifest["audits"][name] = {"path": path, "rows": adf.count()}
-    # manifest last: its existence marks a complete, readable output set
-    with open(os.path.join(base, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
+    _publish_manifest(os.path.join(base, "manifest.json"), manifest)
     return manifest
 
 
@@ -684,11 +624,15 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
     last_chunk_pad)`` — together lossless (reconstruct = deviations ⋈ bases
     → gd_reconstruct). Reference analogue: the packed record stream
     `src/gd_byte_unit.rs:78-98`, as columnar tables."""
-    import json
-
     from .gd.spark import assign_base_ids
 
     base = os.path.join(out_dir, run_id)
+    manifest_path = os.path.join(base, "gd_manifest.json")
+    # a rewrite of an existing archive unpublishes it first: a crash while
+    # the tables are overwritten must not leave the old manifest pointing
+    # at half-written tables
+    if os.path.exists(manifest_path):
+        os.remove(manifest_path)
     bases, with_id = assign_base_ids(chunks)
     paths = {"bases": os.path.join(base, "bases"),
              "deviations": os.path.join(base, "deviations")}
@@ -697,17 +641,28 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
         "conv_id", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
     ).write.mode("overwrite").parquet(paths["deviations"])
     manifest = {"run_id": run_id, "tables": paths}
-    with open(os.path.join(base, "gd_manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
+    _publish_manifest(manifest_path, manifest)
     return manifest
 
 
 def read_gd_outputs(spark, out_dir: str, run_id: str = "run-0") -> DataFrame:
     """Inverse of ``write_gd_outputs``: join deviations back to bases,
-    returning the full chunk table gd_reconstruct expects."""
-    base = os.path.join(out_dir, run_id)
-    bases = spark.read.parquet(os.path.join(base, "bases"))
-    devs = spark.read.parquet(os.path.join(base, "deviations"))
+    returning the full chunk table gd_reconstruct expects. Table paths
+    come from the manifest; an archive without one (a write that never
+    finished) raises ``FileNotFoundError`` instead of being read."""
+    import json
+
+    path = os.path.join(out_dir, run_id, "gd_manifest.json")
+    try:
+        with open(path) as fh:
+            tables = json.load(fh)["tables"]
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"GD archive {run_id!r} under {out_dir!r} has no gd_manifest.json: "
+            "its write never completed"
+        ) from None
+    bases = spark.read.parquet(tables["bases"])
+    devs = spark.read.parquet(tables["deviations"])
     return devs.join(bases.select("base_id", "base"), "base_id").select(
         "conv_id", "chunk_idx", "base", "deviation", "last_chunk_pad"
     )

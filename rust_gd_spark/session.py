@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# ensure_min_partitions' default width: one partition per this many bytes
+# of input file (128 KiB of parquet ≈ 1 MB of text)
+SCAN_TARGET_BYTES = 128 << 10
+
 
 @contextlib.contextmanager
 def job_description(sc, desc: str):
@@ -32,6 +36,23 @@ def job_description(sc, desc: str):
         sc.setJobDescription(prev)
 
 
+def host_defaults() -> tuple[int, str]:
+    """``(cores, driver_memory)`` for a session whose caller sized neither.
+
+    ``$SPARK_GRAFT_CPUS`` else the cores this process may run on;
+    ``$SPARK_DRIVER_MEM`` else a quarter of physical RAM (at least 1g).
+    In local mode the driver JVM also hosts the executors, but every
+    Python UDF worker is its own process outside that heap, so the rest
+    of RAM is left to them.
+    """
+    cores = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or f"{max(1024, phys_mb // 4)}m"
+    return cores, driver_mem
+
+
 def get_spark(
     app_name: str = "rust_gd_spark",
     cores: int | None = None,
@@ -40,7 +61,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores defaults to $SPARK_GRAFT_CPUS (driver contract) else 32.
+    cores and driver memory default to ``host_defaults()``.
     shuffle partitions default to 2x cores — small enough to avoid tiny-task
     overhead locally, and AQE coalesces further at runtime; on a real cluster
     this would be ~2-3x total executor cores.
@@ -52,8 +73,9 @@ def get_spark(
     # BEFORE the JVM launches (python workers inherit it through the JVM).
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "268435456")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
+    host_cores, driver_mem = host_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = host_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
     builder = (
@@ -67,22 +89,16 @@ def get_spark(
         # guide §2.2: let AQE size partitions by bytes (advisory size)
         # instead of splitting down to defaultParallelism — measured ~4%
         # across join/pipeline queries here, and the documented setting
-        # for right-sizing reducers on clusters too. Env-overridable.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("GD_AQE_PARALLELISM_FIRST", "false"),
-        )
+        # for right-sizing reducers on clusters too.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         # guide §3.1: allow shuffled-hash join where its size conditions
         # hold (sort-merge stays available; AQE still rewrites at runtime).
-        # Measured ~5% on the join-heavy families. Env-overridable.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("GD_PREFER_SMJ", "false"),
-        )
+        # Measured ~5% on the join-heavy families.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -109,8 +125,8 @@ def ensure_min_partitions(
     The default target is SIZE-DERIVED, not the fixed 2×cores it used to
     be (guide §2: make partitioning scale-adaptive — derive from input
     size — rather than a constant tuned for either local mode or the
-    cluster): one partition per ``GD_SCAN_TARGET_BYTES`` of input file
-    (default 128 KiB of parquet ≈ 1 MB of text), capped at
+    cluster): one partition per ``SCAN_TARGET_BYTES`` of input file
+    (128 KiB of parquet ≈ 1 MB of text), capped at
     defaultParallelism. Measured on the bench corpus: the old blanket
     2×cores spread a sub-MB table over 64 partitions and every downstream
     stage paid 64 task launches for micro-batches — kernel-heavy queries
@@ -134,9 +150,7 @@ def ensure_min_partitions(
     if min_parts is None:
         sc = df.sparkSession.sparkContext
         cap = sc.defaultParallelism * max(1, cap_factor)
-        target = target_bytes if target_bytes is not None else int(
-            os.environ.get("GD_SCAN_TARGET_BYTES", str(128 << 10))
-        )
+        target = target_bytes if target_bytes is not None else SCAN_TARGET_BYTES
         # Fallback when input sizes are unreadable (non-POSIX paths,
         # object stores): plain defaultParallelism, never the
         # oversubscribed cap — cap_factor is only ever earned by a

@@ -1,9 +1,7 @@
 """Direct unit tests for the large-star/small-star connected components.
 
-Oracle: a driver-side union-find over the same edges. Pins that chaining
-multiple star-rounds per materialization barrier (``rounds_per_barrier``)
-never changes the fixpoint — the barrier-halving optimization is purely a
-scheduling change.
+Oracle: a driver-side union-find over the same edges, for both the
+distributed star-round fixpoint and the small-graph driver fast path.
 """
 
 from __future__ import annotations
@@ -71,13 +69,6 @@ def test_components_match_union_find(spark, name):
     assert got == want
 
 
-def test_rounds_per_barrier_invariant(spark):
-    edges = EDGE_SETS["random"]
-    base = _spark_components(spark, edges, rounds_per_barrier=1)
-    for k in (2, 3):
-        assert _spark_components(spark, edges, rounds_per_barrier=k) == base
-
-
 @pytest.mark.parametrize("name", sorted(EDGE_SETS))
 def test_small_graph_fast_path_matches_distributed(spark, name):
     edges = EDGE_SETS[name]
@@ -117,14 +108,3 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
         for f in files
     ]
     assert written, "reliable mode must write checkpoint files"
-
-
-def test_reliable_checkpoint_env_var(spark, tmp_path, monkeypatch):
-    import os
-
-    ckpt = str(tmp_path / "cc_env_ckpt")
-    monkeypatch.setenv("GD_CC_CHECKPOINT_DIR", ckpt)
-    edges = [(1, 2), (2, 3), (10, 11)]
-    got = _spark_components(spark, edges)
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    assert os.path.isdir(ckpt)

@@ -231,6 +231,20 @@ def test_write_read_gd_outputs_roundtrip(spark, transcripts_df, tmp_path):
     assert orig.exceptAll(restored).isEmpty()
 
 
+def test_read_gd_outputs_requires_manifest(spark, transcripts_df, tmp_path):
+    """An archive whose manifest never landed (a write cut short) must raise,
+    not be read back from whatever tables are on disk."""
+    from rust_gd_spark.gd.spark import gd_decompose
+    from rust_gd_spark.pipeline import read_gd_outputs, write_gd_outputs
+
+    out = str(tmp_path / "gdout")
+    tr = transcripts_df.limit(20)
+    write_gd_outputs(gd_decompose(tr, n=128, k=124), out, run_id="g1")
+    os.remove(os.path.join(out, "g1", "gd_manifest.json"))
+    with pytest.raises(FileNotFoundError, match="gd_manifest.json"):
+        read_gd_outputs(spark, out, run_id="g1")
+
+
 def test_path_toggles_disable_stages(spark, turns_df):
     res = near_dup_pipeline(
         turns_df, "uid", "text",
@@ -243,55 +257,15 @@ def test_path_toggles_disable_stages(spark, turns_df):
     assert paths <= {"exact", "minhash"}
 
 
-def test_simhash_rotation_mode_matches_banding(spark, turns_df):
-    """simhash_mode='rotations' (Manku WWW'07) through the FULL pipeline
-    must produce the same cluster partition as the banding mode at matched
-    verify distance: banding guarantees candidates at d ≤ sim_bands−1 = 3,
-    rotations co-bucket every pair at d ≤ 7 ⊇ 3, and at this corpus size
-    prefix buckets are smaller than the sorted window so adjacency is
-    exhaustive — both candidate sets then verify to the same d ≤ 3 pairs."""
-    base = DedupConfig(enable_minhash=False, enable_substring=False)
-    from dataclasses import replace
-
-    res_band = near_dup_pipeline(turns_df, "uid", "text", base)
-    res_rot = near_dup_pipeline(
-        turns_df, "uid", "text", replace(base, simhash_mode="rotations")
+def test_exact_only_pipeline(spark, turns_df):
+    """Every near-dup path off: no chain to submit, exact clusters only."""
+    res = near_dup_pipeline(
+        turns_df, "uid", "text",
+        DedupConfig(enable_minhash=False, enable_simhash=False, enable_substring=False),
     )
-
-    def partition(df):
-        by = {}
-        for r in df.collect():
-            by.setdefault(r.cluster_id, set()).add(r.id)
-        return frozenset(frozenset(v) for v in by.values())
-
-    assert partition(res_band.clusters) == partition(res_rot.clusters)
-    # the rotation path really ran (stage present, pairs labeled simhash)
-    assert "simhash_pairs" in {r.stage for r in res_rot.metrics.collect()}
-
-
-def test_minhash_oph_scheme_matches_kperm(spark, turns_df):
-    """minhash_scheme='oph' (densified one-permutation hashing) through the
-    FULL pipeline must produce the same cluster partition as the k-perm
-    kernel: both candidate generators have per-band miss probability ≪ 1
-    on the fixture's high-margin near-dups, and the exact-Jaccard verify
-    makes precision identical — so the verified edge set, hence the CC
-    partition, coincides."""
-    base = DedupConfig(enable_simhash=False, enable_substring=False)
-    from dataclasses import replace
-
-    res_kperm = near_dup_pipeline(turns_df, "uid", "text", base)
-    res_oph = near_dup_pipeline(
-        turns_df, "uid", "text", replace(base, minhash_scheme="oph")
-    )
-
-    def partition(df):
-        by = {}
-        for r in df.collect():
-            by.setdefault(r.cluster_id, set()).add(r.id)
-        return frozenset(frozenset(v) for v in by.values())
-
-    assert partition(res_kperm.clusters) == partition(res_oph.clusters)
-    assert "minhash_pairs" in {r.stage for r in res_oph.metrics.collect()}
+    paths = {r.path for r in res.pairs.select("path").distinct().collect()}
+    assert paths <= {"exact"}
+    assert res.clusters.count() == turns_df.count()
 
 
 def test_null_text_rows_survive(spark):

@@ -32,18 +32,6 @@ def main() -> None:
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument("--granularity", choices=["turn", "conv"], default="turn")
     ap.add_argument(
-        "--minhash-scheme", choices=["kperm", "oph"], default="kperm",
-        help="MinHash signature kernel: kperm (textbook k permutations) or "
-        "oph (densified one-permutation hashing — O(m) per doc, the "
-        "bandwidth fix for the measured non-scaling signature stage)",
-    )
-    ap.add_argument(
-        "--concurrent-paths", action="store_true",
-        help="submit the three candidate paths as concurrent Spark jobs "
-        "(DedupConfig.concurrent_paths) — the multi-executor-cluster mode; "
-        "measured worse on a saturated single-JVM local[N] box",
-    )
-    ap.add_argument(
         "--mode", choices=["local", "cluster"], default="local",
         help="recorded in the result row: local[N] (one shared JVM) vs "
         "standalone cluster (N single-core executor JVMs — "
@@ -123,10 +111,7 @@ def main() -> None:
 
     from rust_gd_spark.pipeline import DedupConfig
 
-    cfg = DedupConfig(
-        concurrent_paths=args.concurrent_paths,
-        minhash_scheme=args.minhash_scheme,
-    )
+    cfg = DedupConfig()
 
     if args.warmup_frac > 0:
         warm = near_dup_pipeline(
@@ -171,8 +156,6 @@ def main() -> None:
         "granularity": args.granularity,
         "steal_pct": steal_pct,
         "mode": args.mode,
-        "minhash_scheme": args.minhash_scheme,
-        "concurrent_paths": bool(args.concurrent_paths),
     }
     line = json.dumps(rec)
     print(line)
