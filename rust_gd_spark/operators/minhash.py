@@ -184,6 +184,25 @@ def _shingle_hash_batch(
     return np.split(vals, np.cumsum(counts)[:-1])
 
 
+def shingle_hashes(
+    texts: list[str], w: int, chunk_bytes: int = 1 << 20
+) -> list[np.ndarray]:
+    """``_shingle_hash_batch`` over byte-bounded chunks of ``texts`` (one
+    sorted distinct hash array per NORMALIZED text): ``chunk_bytes``
+    bounds the kernel's scratch (~5 arrays × 8n) whatever the batch size.
+    The kernel of ``shingle_df`` and of the fused sketch pass."""
+    out: list[np.ndarray] = []
+    i, n_rows = 0, len(texts)
+    while i < n_rows:
+        j, tot = i, 0
+        while j < n_rows and (tot == 0 or tot + len(texts[j]) <= chunk_bytes):
+            tot += len(texts[j])
+            j += 1
+        out.extend(_shingle_hash_batch(texts[i:j], w))
+        i = j
+    return out
+
+
 def shingle_df(
     df: DataFrame,
     id_col: str = "uid",
@@ -209,23 +228,9 @@ def shingle_df(
     as a single shingle (so short rows still participate).
     """
     if hashed:
-        _CHUNK_BYTES = chunk_bytes  # bounds kernel scratch (~5 arrays × 8n)
-
         @F.pandas_udf(T.ArrayType(T.LongType()))
         def shingle_udf(norm: pd.Series) -> pd.Series:
-            texts = list(norm)
-            out: list[np.ndarray] = []
-            i, n_rows = 0, len(texts)
-            while i < n_rows:
-                j, tot = i, 0
-                while j < n_rows and (
-                    tot == 0 or tot + len(texts[j]) <= _CHUNK_BYTES
-                ):
-                    tot += len(texts[j])
-                    j += 1
-                out.extend(_shingle_hash_batch(texts[i:j], w))
-                i = j
-            return pd.Series(out)
+            return pd.Series(shingle_hashes(list(norm), w, chunk_bytes))
 
         return df.select(
             F.col(id_col).alias("id"),
@@ -340,6 +345,72 @@ def _oph_signatures_chunk(
     return sig & _MAX_HASH
 
 
+_KPERM_BUDGET = 1 << 11  # 2048 shingles x 128 perms x 8B = 2 MB, cache-resident
+
+
+def kperm_coefficients(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k-permutation family ``(a, b)``, drawn once from a seeded RNG on
+    the driver and captured in the UDF closure (the reference broadcasts
+    its generator matrix the same way, `rs/mod.rs:25-60` → SURVEY.md A12)."""
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, MERSENNE_P, size=num_perm, dtype=np.uint64)
+    b = rng.integers(0, MERSENNE_P, size=num_perm, dtype=np.uint64)
+    return a, b
+
+
+def kperm_signatures(
+    col: pd.Series, a: np.ndarray, b: np.ndarray, scratch: dict
+) -> np.ndarray:
+    """``(len(col), num_perm)`` uint64 k-permutation MinHash signatures of
+    a column of shingle-hash arrays.
+
+    Segment-vectorized in bounded chunks: (chunk_shingles × num_perm) hash
+    matrix + np.minimum.reduceat — no per-row Python loop, no per-batch
+    gigabyte allocations. The multiply wraps mod 2^64 then masks to 61
+    bits: not the textbook (a·h+b) mod p family, but a fixed, uniform,
+    deterministic one — all MinHash needs. ``scratch`` holds the hash
+    matrix across calls (python workers are long-lived): fresh large
+    allocations page-fault at ~30 MB/s in sandboxed containers, reuse runs
+    at memory bandwidth.
+    """
+    from ._vectorize import iter_segments
+
+    num_perm = len(a)
+    sig = np.full((len(col), num_perm), _MAX_HASH, dtype=np.uint64)
+    for idx, flat, starts in iter_segments(col, budget=_KPERM_BUDGET):
+        v = scratch.get("v")
+        if v is None or v.shape[0] < len(flat):
+            v = scratch["v"] = np.empty(
+                (max(len(flat), _KPERM_BUDGET), num_perm), dtype=np.uint64
+            )
+        v = v[: len(flat)]
+        np.multiply(flat.astype(np.uint64)[:, None], a[None, :], out=v)
+        np.add(v, b[None, :], out=v)
+        np.bitwise_and(v, _MAX_HASH, out=v)
+        sig[idx] = np.minimum.reduceat(v, starts, axis=0)
+    return sig
+
+
+def fold_bands(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
+    """``(n, bands)`` int64 band hashes: each band's ``rows`` signature
+    values folded by a polynomial hash (base _SH_B, mod 2^64 wrap)."""
+    m = sig.reshape(len(sig), bands, rows)
+    h = m[:, :, 0].copy()
+    for j in range(1, rows):
+        np.multiply(h, _SH_B, out=h)
+        np.add(h, m[:, :, j], out=h)
+    return h.view(np.int64)
+
+
+def kperm_band_hashes(
+    col: pd.Series, a: np.ndarray, b: np.ndarray, bands: int, rows: int,
+    scratch: dict,
+) -> np.ndarray:
+    """``(len(col), bands)`` int64 fused MinHash band hashes — the kernel of
+    ``minhash_band_hashes`` and of the fused sketch pass."""
+    return fold_bands(kperm_signatures(col, a, b, scratch), bands, rows)
+
+
 def minhash_signatures(
     shingles: DataFrame, num_perm: int = 128, seed: int = 1,
     scheme: str = "kperm",
@@ -374,40 +445,12 @@ def minhash_signatures(
         return shingles.select("id", oph_sig_udf("shingles").alias("sig"))
     if scheme != "kperm":
         raise ValueError(f"unknown minhash scheme {scheme!r}")
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, MERSENNE_P, size=num_perm, dtype=np.uint64)
-    b = rng.integers(0, MERSENNE_P, size=num_perm, dtype=np.uint64)
-
-    from ._vectorize import iter_segments
-
-    _BUDGET = 1 << 11  # 2048 shingles x 128 perms x 8B = 2 MB, cache-resident
+    a, b = kperm_coefficients(num_perm, seed)
     scratch: dict = {}
-
-    def _buf(n: int) -> np.ndarray:
-        # Reused across Arrow batches (python workers are long-lived):
-        # fresh large allocations page-fault at ~30 MB/s in sandboxed
-        # containers, reuse runs at memory bandwidth.
-        buf = scratch.get("v")
-        if buf is None or buf.shape[0] < n:
-            buf = np.empty((max(n, _BUDGET), num_perm), dtype=np.uint64)
-            scratch["v"] = buf
-        return buf[:n]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(col: pd.Series) -> pd.Series:
-        # Segment-vectorized in bounded chunks: (chunk_shingles × num_perm)
-        # hash matrix + np.minimum.reduceat — no per-row Python loop, no
-        # per-batch gigabyte allocations. The multiply wraps mod 2^64 then
-        # masks to 61 bits: not the textbook (a·h+b) mod p family, but a
-        # fixed, uniform, deterministic one — all MinHash needs.
-        out_rows = np.full((len(col), num_perm), np.int64(_MAX_HASH), dtype=np.int64)
-        for idx, flat, starts in iter_segments(col, budget=_BUDGET):
-            v = _buf(len(flat))
-            np.multiply(flat.astype(np.uint64)[:, None], a[None, :], out=v)
-            np.add(v, b[None, :], out=v)
-            np.bitwise_and(v, _MAX_HASH, out=v)
-            out_rows[idx] = np.minimum.reduceat(v, starts, axis=0).astype(np.int64)
-        return pd.Series(list(out_rows))
+        return pd.Series(list(kperm_signatures(col, a, b, scratch).view(np.int64)))
 
     return shingles.select("id", sig_udf("shingles").alias("sig"))
 
@@ -443,14 +486,6 @@ def minhash_band_hashes(
     """
     assert bands * rows == num_perm
 
-    def _fold_bands(sig: np.ndarray, n: int) -> pd.Series:
-        m = sig.reshape(n, bands, rows)
-        h = m[:, :, 0].copy()
-        for j in range(1, rows):
-            np.multiply(h, _SH_B, out=h)
-            np.add(h, m[:, :, j], out=h)
-        return pd.Series(list(h.view(np.int64)))
-
     if scheme == "oph":
         from ._vectorize import iter_segments
 
@@ -459,38 +494,18 @@ def minhash_band_hashes(
             sig = np.full((len(col), num_perm), _MAX_HASH, dtype=np.uint64)
             for idx, flat, starts in iter_segments(col, budget=1 << 16):
                 sig[idx] = _oph_signatures_chunk(flat, starts, num_perm)
-            return _fold_bands(sig, len(col))
+            return pd.Series(list(fold_bands(sig, bands, rows)))
 
         return shingles.select("id", oph_band_udf("shingles").alias("bands"))
     if scheme != "kperm":
         raise ValueError(f"unknown minhash scheme {scheme!r}")
 
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, MERSENNE_P, size=num_perm, dtype=np.uint64)
-    b = rng.integers(0, MERSENNE_P, size=num_perm, dtype=np.uint64)
-
-    from ._vectorize import iter_segments
-
-    _BUDGET = 1 << 11
+    a, b = kperm_coefficients(num_perm, seed)
     scratch: dict = {}
-
-    def _buf(n: int) -> np.ndarray:
-        buf = scratch.get("v")
-        if buf is None or buf.shape[0] < n:
-            buf = np.empty((max(n, _BUDGET), num_perm), dtype=np.uint64)
-            scratch["v"] = buf
-        return buf[:n]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_udf(col: pd.Series) -> pd.Series:
-        sig = np.full((len(col), num_perm), _MAX_HASH, dtype=np.uint64)
-        for idx, flat, starts in iter_segments(col, budget=_BUDGET):
-            v = _buf(len(flat))
-            np.multiply(flat.astype(np.uint64)[:, None], a[None, :], out=v)
-            np.add(v, b[None, :], out=v)
-            np.bitwise_and(v, _MAX_HASH, out=v)
-            sig[idx] = np.minimum.reduceat(v, starts, axis=0)
-        return _fold_bands(sig, len(col))
+        return pd.Series(list(kperm_band_hashes(col, a, b, bands, rows, scratch)))
 
     return shingles.select("id", band_udf("shingles").alias("bands"))
 

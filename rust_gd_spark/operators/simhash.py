@@ -85,6 +85,54 @@ def simhash_fingerprints(grams_df: DataFrame) -> DataFrame:
     return grams_df.select("id", fp_udf("grams").alias("fp"))
 
 
+_CHUNK_BYTES = 1 << 18  # text bytes hashed per kernel call
+
+
+def simhash_text_fps(texts, k: int = 8) -> np.ndarray:
+    """int64 SimHash fingerprints of raw texts (NULL = ''), one per text —
+    the kernel of ``simhash_fingerprints_from_text`` and of the fused
+    sketch pass."""
+    from .substring import _HashLevels, _rolling_hashes
+
+    shifts = np.arange(64, dtype=np.uint64)
+    out = np.zeros(len(texts), dtype=np.int64)
+    enc = [(t or "").encode("utf-8") for t in texts]
+    row = 0
+    i, n_rows = 0, len(enc)
+    while i < n_rows:
+        j, tot = i, 0
+        while j < n_rows and (tot == 0 or tot + len(enc[j]) <= _CHUNK_BYTES):
+            tot += len(enc[j])
+            j += 1
+        chunk = enc[i:j]
+        flat_b = np.frombuffer(b"".join(chunk), dtype=np.uint8)
+        H = _HashLevels(flat_b).window_hashes(k) if len(flat_b) >= k else None
+        uniq: list[np.ndarray] = []
+        pos = 0
+        for b in chunk:
+            n = len(b)
+            if n < k:  # whole (short) text as the single gram
+                uniq.append(_rolling_hashes(b, k))
+            else:
+                uniq.append(np.unique(H[pos : pos + n - k + 1]))
+            pos += n
+        lens = np.fromiter((len(u) for u in uniq), np.int64, len(uniq))
+        flat = np.concatenate(uniq)
+        starts = np.zeros(len(uniq), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        bits = np.unpackbits(
+            flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+        )
+        ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+        fp_bits = (2 * ones > lens[:, None]).astype(np.uint64)
+        out[row : row + len(uniq)] = (
+            (fp_bits << shifts[None, :]).sum(axis=1, dtype=np.uint64).astype(np.int64)
+        )
+        row += len(uniq)
+        i = j
+    return out
+
+
 def simhash_fingerprints_from_text(
     df: DataFrame, id_col: str = "uid", text_col: str = "text", k: int = 8
 ) -> DataFrame:
@@ -98,52 +146,14 @@ def simhash_fingerprints_from_text(
     all SimHash needs from its gram hash; fingerprints are NOT numerically
     identical to the xxhash64-gram path, but banding/verify semantics are
     unchanged), dedups grams per row, and bit-tallies with the same
-    unpackbits kernel. The pipeline uses this form; the two-step form stays
-    for gram-level inspection.
+    unpackbits kernel. The pipeline's fused sketch pass runs the same kernel
+    (``simhash_text_fps``); the two-step form stays for gram-level
+    inspection.
     """
-    from .substring import _HashLevels, _rolling_hashes
-
-    _CHUNK_BYTES = 1 << 18
 
     @F.pandas_udf(T.LongType())
     def fp_udf(texts: pd.Series) -> pd.Series:
-        shifts = np.arange(64, dtype=np.uint64)
-        out = np.zeros(len(texts), dtype=np.int64)
-        enc = [(t or "").encode("utf-8") for t in texts]
-        row = 0
-        i, n_rows = 0, len(enc)
-        while i < n_rows:
-            j, tot = i, 0
-            while j < n_rows and (tot == 0 or tot + len(enc[j]) <= _CHUNK_BYTES):
-                tot += len(enc[j])
-                j += 1
-            chunk = enc[i:j]
-            flat_b = np.frombuffer(b"".join(chunk), dtype=np.uint8)
-            H = _HashLevels(flat_b).window_hashes(k) if len(flat_b) >= k else None
-            uniq: list[np.ndarray] = []
-            pos = 0
-            for b in chunk:
-                n = len(b)
-                if n < k:  # whole (short) text as the single gram
-                    uniq.append(_rolling_hashes(b, k))
-                else:
-                    uniq.append(np.unique(H[pos : pos + n - k + 1]))
-                pos += n
-            lens = np.fromiter((len(u) for u in uniq), np.int64, len(uniq))
-            flat = np.concatenate(uniq)
-            starts = np.zeros(len(uniq), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            bits = np.unpackbits(
-                flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-            )
-            ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-            fp_bits = (2 * ones > lens[:, None]).astype(np.uint64)
-            out[row : row + len(uniq)] = (
-                (fp_bits << shifts[None, :]).sum(axis=1, dtype=np.uint64).astype(np.int64)
-            )
-            row += len(uniq)
-            i = j
-        return pd.Series(out)
+        return pd.Series(simhash_text_fps(texts, k))
 
     return df.select(F.col(id_col).alias("id"), fp_udf(text_col).alias("fp"))
 

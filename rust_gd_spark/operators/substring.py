@@ -79,6 +79,39 @@ def _sliding_min(h: np.ndarray, w: int) -> np.ndarray:
     return np.minimum(suff[:nw], pref[w - 1 : w - 1 + nw])
 
 
+_CHUNK_BYTES = 1 << 18  # text bytes hashed per kernel call
+
+
+def winnow_text_fps(texts, k: int = 64, w: int = 137) -> list[list[int]]:
+    """Distinct winnowing fingerprints per raw text (NULL = '', which has
+    none) — the kernel of ``winnow_fingerprints`` and of the fused sketch
+    pass."""
+    out: list = []
+    enc = [(t or "").encode("utf-8") for t in texts]
+    i, n_rows = 0, len(enc)
+    while i < n_rows:
+        j, tot = i, 0
+        while j < n_rows and (tot == 0 or tot + len(enc[j]) <= _CHUNK_BYTES):
+            tot += len(enc[j])
+            j += 1
+        chunk = enc[i:j]
+        flat = np.frombuffer(b"".join(chunk), dtype=np.uint8)
+        H = _HashLevels(flat).window_hashes(k) if len(flat) >= k else None
+        pos = 0
+        for b in chunk:
+            n = len(b)
+            if n == 0:
+                out.append([])
+            elif n < k:
+                out.append(_rolling_hashes(b, k).astype(np.int64).tolist())
+            else:
+                hs = H[pos : pos + n - k + 1]
+                out.append(np.unique(_sliding_min(hs, w)).astype(np.int64).tolist())
+            pos += n
+        i = j
+    return out
+
+
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "uid",
@@ -96,38 +129,10 @@ def winnow_fingerprints(
     fingerprint VALUE set is identical: the set of per-window minima equals
     the set of values at winnowing-selected positions.
     """
-    _CHUNK_BYTES = 1 << 18
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def fp_udf(texts: pd.Series) -> pd.Series:
-        out: list = []
-        enc = [(t or "").encode("utf-8") for t in texts]
-        i, n_rows = 0, len(enc)
-        while i < n_rows:
-            j, tot = i, 0
-            while j < n_rows and (tot == 0 or tot + len(enc[j]) <= _CHUNK_BYTES):
-                tot += len(enc[j])
-                j += 1
-            chunk = enc[i:j]
-            flat = np.frombuffer(b"".join(chunk), dtype=np.uint8)
-            H = _HashLevels(flat).window_hashes(k) if len(flat) >= k else None
-            pos = 0
-            for b in chunk:
-                n = len(b)
-                if n == 0:
-                    out.append([])
-                elif n < k:
-                    out.append(
-                        _rolling_hashes(b, k).astype(np.int64).tolist()
-                    )
-                else:
-                    hs = H[pos : pos + n - k + 1]
-                    out.append(
-                        np.unique(_sliding_min(hs, w)).astype(np.int64).tolist()
-                    )
-                pos += n
-            i = j
-        return pd.Series(out)
+        return pd.Series(winnow_text_fps(texts, k, w))
 
     return df.select(F.col(id_col).alias("id"), fp_udf(text_col).alias("fps"))
 

@@ -1,9 +1,10 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
 north_rule shape: transcripts → (turn or conversation granularity) →
-three candidate paths (MinHash/LSH, SimHash, winnowing-substring) + exact
-hash dedup → union of verified pair edges → large-star/small-star connected
-components → cluster table, with per-stage materialization (resume from
+exact hash dedup → one fused sketch pass over the representatives → three
+candidate paths (MinHash/LSH, SimHash, winnowing-substring) → union of
+verified pair edges → large-star/small-star connected components →
+cluster table, with per-stage materialization (resume from
 checkpoint), per-partition lineage rows, and dedup-ratio metrics.
 
 Resumability (SURVEY.md §4.3): when ``checkpoint_dir`` is set, every stage
@@ -76,6 +77,67 @@ class PipelineResult:
     # scan + the caller's own upstream shuffles). None for results loaded
     # from disk (read_outputs).
     source: DataFrame | None = None
+
+
+def sketches(
+    df: DataFrame,
+    cfg: DedupConfig,
+    id_col: str = "id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Every per-rep sketch the enabled near-dup paths need, from ONE
+    Arrow pass over ``(id, normalize_text(text), text)``:
+
+    * MinHash: ``shingles`` (distinct w-shingle hashes, the verify side)
+      and ``bands`` (fused k-permutation MinHash band hashes);
+    * SimHash: ``fp`` (64-bit fingerprint of the char k-grams);
+    * substring: ``fps`` (winnowing fingerprints).
+
+    Each column is computed by the same kernel as its standalone operator
+    (``shingle_df``, ``minhash_band_hashes``,
+    ``simhash_fingerprints_from_text``, ``winnow_fingerprints``), so the
+    values are identical. One pass instead of four: every Python task pays
+    a fixed start-up cost that dwarfs the kernels at transcript sizes, and
+    each pass ships every rep's text to the Python workers again.
+    ``near_dup_pipeline`` and ``process_batch`` both sketch through here.
+    """
+    import pandas as pd
+
+    on_mh, on_sh, on_ss = cfg.enable_minhash, cfg.enable_simhash, cfg.enable_substring
+    cols = [F.col(id_col).alias("id")]
+    fields = [f"id {df.schema[id_col].dataType.simpleString()}"]
+    if on_mh:
+        cols.append(minhash.normalize_text(F.col(text_col)).alias("norm"))
+        fields += ["shingles array<long>", "bands array<long>"]
+        a, b = minhash.kperm_coefficients(cfg.num_perm, cfg.seed)
+        scratch: dict = {}
+    if on_sh or on_ss:
+        cols.append(F.col(text_col).alias("text"))
+    if on_sh:
+        fields.append("fp long")
+    if on_ss:
+        fields.append("fps array<long>")
+        # winnow k-gram and window: any common span of min_substring_len
+        # bytes shares a fingerprint (k + w - 1 = min_substring_len)
+        wk = max(16, cfg.min_substring_len // 3)
+        ww = cfg.min_substring_len - wk + 1
+
+    def sketch(batches):
+        for pdf in batches:
+            out = {"id": pdf["id"].to_numpy()}
+            if on_mh:
+                sh = pd.Series(minhash.shingle_hashes(list(pdf["norm"]), cfg.w))
+                out["shingles"] = sh
+                out["bands"] = pd.Series(list(minhash.kperm_band_hashes(
+                    sh, a, b, cfg.bands, cfg.rows, scratch
+                )))
+            if on_sh:
+                out["fp"] = pd.Series(simhash.simhash_text_fps(pdf["text"], cfg.char_k))
+            if on_ss:
+                out["fps"] = pd.Series(substring.winnow_text_fps(pdf["text"], wk, ww))
+            yield pd.DataFrame(out)
+
+    return df.select(*cols).mapInPandas(sketch, ", ".join(fields))
 
 
 class _StageRunner:
@@ -300,22 +362,25 @@ def near_dup_pipeline(
         audit = runner.run(f"{name}_skew_audit", lambda: _memo()[1], lazy=True)
         return cand, audit
 
+    # --- shared sketch pass ------------------------------------------------
+    # ONE Arrow pass over the reps computes every sketch the enabled paths
+    # read (shingles + fused MinHash bands, SimHash fp, winnow fps); the
+    # chains below fork from this pinned frame with plain selects. The
+    # exact-only config runs no sketch pass at all.
+    near_dup = cfg.enable_minhash or cfg.enable_simhash or cfg.enable_substring
+    sk = runner.run("sketches", lambda: sketches(reps, cfg)) if near_dup else None
+
     # --- MinHash/LSH path -------------------------------------------------
     def _mh_chain():
-        shingles = runner.run(
-            "shingles", lambda: minhash.shingle_df(reps, "id", "text", w=cfg.w)
-        )
+        shingles = sk.select("id", "shingles")
 
         def _mh_cands():
-            # Checkpoint the FUSED band-hash table (bands longs/row — see
-            # minhash.minhash_band_hashes), not the num_perm-long signature
-            # or the bands×-exploded band table: bucket_pairs scans its
-            # input twice (count agg + prune join), and without this the
-            # signature kernel — the path's dominant cost — ran twice.
-            bh = minhash.minhash_band_hashes(
-                shingles, cfg.num_perm, cfg.bands, cfg.rows, cfg.seed,
-            ).localCheckpoint(eager=True)
-            bands = minhash.explode_band_hashes(bh)
+            # No checkpoint of its own: the fused band-hash table (bands
+            # longs/row — see minhash.minhash_band_hashes) is a column of
+            # the pinned sketch frame, so the two scans of bucket_pairs
+            # (count agg + prune join) each re-derive the band table with
+            # a codegen posexplode, never the signature kernel.
+            bands = minhash.explode_band_hashes(sk.select("id", "bands"))
             return minhash.lsh_candidate_pairs(
                 bands, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
                 salt_oversized=True,
@@ -324,7 +389,7 @@ def near_dup_pipeline(
         cand, audit = _staged_candidates("minhash", _mh_cands)
         runner_audits["lsh_skew"] = audit
         # lazy: the verify joins read only checkpointed frames (cand,
-        # shingles) and feed exactly one consumer — the pair union.
+        # sketches) and feed exactly one consumer — the pair union.
         return runner.run(
             "minhash_pairs",
             lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
@@ -333,16 +398,10 @@ def near_dup_pipeline(
 
     # --- SimHash path -------------------------------------------------------
     def _sh_chain():
-        # fused text→fp kernel: no JVM gram-string explosion, 8× less
-        # Arrow traffic than char_ngram_df → simhash_fingerprints. The fp
-        # table is compact (one int64 per rep) — staging it makes the band
-        # explode a cheap JVM re-derivation for both consumers below.
-        fps = runner.run(
-            "simhash_fps",
-            lambda: simhash.simhash_fingerprints_from_text(
-                reps, "id", "text", k=cfg.char_k
-            ),
-        )
+        # the fp column is compact (one int64 per rep) — the band explode
+        # is a cheap JVM re-derivation from the pinned sketch frame for
+        # both consumers below.
+        fps = sk.select("id", "fp")
 
         _sh_cache: dict = {}
 
@@ -378,12 +437,9 @@ def near_dup_pipeline(
     # --- substring path -----------------------------------------------------
     def _ss_chain():
         def _ss_cands():
-            k = max(16, cfg.min_substring_len // 3)
-            w = cfg.min_substring_len - k + 1
-            fps = substring.winnow_fingerprints(reps, "id", "text", k=k, w=w)
             return substring.substring_candidate_pairs(
-                fps, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-                salt_oversized=True,
+                sk.select("id", "fps"), cfg.max_bucket_size,
+                neighbor_window=cfg.neighbor_window, salt_oversized=True,
             )
 
         cand, audit = _staged_candidates("substring", _ss_cands)
@@ -399,11 +455,12 @@ def near_dup_pipeline(
             lazy=True,
         )
 
-    # The candidate paths are independent DAGs over `reps`, each submitted
-    # from its own driver thread; Spark schedules their jobs fairly, so one
-    # chain's stages fill the driver-barrier gaps of another's (measured
-    # 23-39% faster than sequential submission on the full 4-path config
-    # at sf0.1, local[N]).
+    # The candidate paths fork after the one shared sketch pass into
+    # independent DAGs over `sketches` (and `reps` for the substring
+    # verify), each submitted from its own driver thread; Spark schedules
+    # their jobs fairly, so one chain's stages fill the driver-barrier gaps
+    # of another's (measured 23-39% faster than sequential submission on
+    # the full 4-path config at sf0.1, local[N]).
     chains = []
     if cfg.enable_minhash:
         chains.append((
@@ -439,7 +496,7 @@ def near_dup_pipeline(
         return out
 
     # lazy: every input of the union is either checkpointed (cands,
-    # shingles, exact_groups) or a cheap derivation of one; the single
+    # sketches, exact_groups) or a cheap derivation of one; the single
     # consumer is the CC edge canonicalization inside the clusters stage,
     # which materializes the union exactly once.
     pairs = runner.run("pairs", _all_pairs, lazy=True)
@@ -633,7 +690,10 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
     # at half-written tables
     if os.path.exists(manifest_path):
         os.remove(manifest_path)
-    bases, with_id = assign_base_ids(chunks)
+    # both tables derive from the same chunks: pin them once (at the
+    # width the upstream shuffle left them) so the decompose kernel runs
+    # once per archive, not once per table write
+    bases, with_id = assign_base_ids(chunks.localCheckpoint(eager=True))
     paths = {"bases": os.path.join(base, "bases"),
              "deviations": os.path.join(base, "deviations")}
     bases.write.mode("overwrite").parquet(paths["bases"])

@@ -21,11 +21,12 @@ Design (scale-first):
   the reference's bounded LRU dictionary (`src/dict.rs:50-63`).
 * **Per micro-batch**: exact-dedup the batch against the content-key store
   (new key → the batch's min uid becomes canonical); for new reps, compute
-  shingles + fused band hashes with the SAME kernels as the batch pipeline
-  (identical config ⇒ identical candidate semantics); candidate pairs =
-  in-batch bucket pairs ∪ batch-vs-history band joins; exact-Jaccard
-  verify against the shingle store; emit ``(id_l, id_r, path, score)``
-  edges to ``edges/``.
+  shingles + fused band hashes with the batch pipeline's own sketch pass —
+  literally the same function, ``pipeline.sketches``, run with only the
+  MinHash outputs (identical config ⇒ identical candidate semantics);
+  candidate pairs = in-batch bucket pairs ∪ batch-vs-history band joins;
+  exact-Jaccard verify against the shingle store; emit
+  ``(id_l, id_r, path, score)`` edges to ``edges/``.
 * **Skew guard on the history join**: the batch-vs-history candidate join
   emits |new postings| × |history postings| rows per band key, and the
   history side grows every batch — the exact mega-bucket blow-up
@@ -74,6 +75,7 @@ from pyspark.errors import AnalysisException
 
 from .operators import minhash
 from .operators.components import assign_clusters
+from .pipeline import DedupConfig, sketches, with_turn_uid
 
 _STORE_SCHEMAS = {
     "content_keys": "content_key string, canonical_id string, epoch long",
@@ -223,9 +225,16 @@ def _process_batch_inner(
         .join(batch, "uid")
         .select("uid", "text")
     )
-    sh = minhash.shingle_df(reps, "uid", "text", w=w).localCheckpoint(eager=True)
-    bh = minhash.minhash_band_hashes(sh, num_perm, bands, rows, seed)
-    banded = minhash.explode_band_hashes(bh).localCheckpoint(eager=True)
+    # the batch pipeline's sketch pass with only the MinHash outputs: one
+    # pin holds shingles (store + verify side) and fused band hashes; the
+    # band explode below re-derives from it in codegen for every consumer
+    cfg = DedupConfig(
+        w=w, num_perm=num_perm, bands=bands, rows=rows, seed=seed,
+        enable_simhash=False, enable_substring=False,
+    )
+    sk = sketches(reps, cfg, "uid", "text").localCheckpoint(eager=True)
+    sh = sk.select("id", "shingles")
+    banded = minhash.explode_band_hashes(sk.select("id", "bands"))
 
     # in-batch candidates: one-shuffle bucket pairs (capped + audited)
     new_pairs, batch_audit = minhash.lsh_candidate_pairs(
@@ -427,8 +436,6 @@ def incremental_dedup_stream(
     schema; rows get the stable per-turn uid and flow through
     ``process_batch`` per micro-batch. Returns the started query.
     """
-    from .pipeline import with_turn_uid
-
     def _each(batch_df, epoch_id):  # pragma: no cover - thin driver glue
         process_batch(with_turn_uid(batch_df), state_dir, **kwargs)
 

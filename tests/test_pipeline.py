@@ -137,7 +137,7 @@ def test_cluster_recall_vs_oracle(spark, turns_df, oracle_pairs, tmp_path):
 def test_pipeline_metrics_and_lineage(spark, turns_df):
     res = near_dup_pipeline(turns_df, "uid", "text")
     stages = {r.stage for r in res.metrics.collect()}
-    assert {"exact_groups", "shingles", "minhash_pairs", "simhash_pairs",
+    assert {"exact_groups", "sketches", "minhash_pairs", "simhash_pairs",
             "substring_pairs", "pairs", "clusters"} <= stages
     lin = res.lineage.groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
     by_stage = {r.stage: r.rows for r in lin}
@@ -164,7 +164,7 @@ def test_resume_from_checkpoint(spark, turns_df, tmp_path):
     c2 = sorted((r.id, r.cluster_id) for r in r2.clusters.collect())
     assert c1 == c2
     resumed = {r.stage: r.resumed for r in r2.metrics.collect()}
-    assert resumed["shingles"] and resumed["minhash_pairs"]
+    assert resumed["sketches"] and resumed["minhash_pairs"]
     assert not resumed["pairs"] and not resumed["clusters"]
 
 
@@ -266,6 +266,7 @@ def test_exact_only_pipeline(spark, turns_df):
     paths = {r.path for r in res.pairs.select("path").distinct().collect()}
     assert paths <= {"exact"}
     assert res.clusters.count() == turns_df.count()
+    assert "sketches" not in {r.stage for r in res.metrics.collect()}
 
 
 def test_null_text_rows_survive(spark):
