@@ -286,7 +286,6 @@ def _q_soft_dedup_weights(spark, sf_dir):
             jaccard_threshold=0.5, min_substring_len=120,
             enable_simhash=False, neighbor_window=None,
         ),
-        collect_stats=False,  # weights read only res.clusters
     )
     return soft_dedup_weights(
         canonical_clusters(res.clusters), "id", "cluster_id"
@@ -1135,7 +1134,6 @@ def _q_cluster_quality_audit(spark, sf_dir):
             jaccard_threshold=JACCARD_T, min_substring_len=120,
             enable_simhash=False, neighbor_window=None,
         ),
-        collect_stats=False,  # audit reads only res.clusters
     )
     clusters = canonical_clusters(res.clusters).select(
         F.col("id").alias("uid"), "cluster_id"
@@ -2317,7 +2315,6 @@ def _q_transcript_clusters(spark, sf_dir):
             jaccard_threshold=0.5, min_substring_len=120,
             enable_simhash=False, neighbor_window=None,
         ),
-        collect_stats=False,  # only res.clusters is consumed
     )
     return canonical_clusters(res.clusters)
 
@@ -2339,7 +2336,6 @@ def _q_cluster_representatives(spark, sf_dir):
             jaccard_threshold=0.5, min_substring_len=120,
             enable_simhash=False, neighbor_window=None,
         ),
-        collect_stats=False,  # clusters + the pinned source are consumed
     )
     # res.source: the pipeline's pinned (id, text) — joining texts against
     # it skips re-deriving the transcripts (scan + window) a second time
@@ -2541,7 +2537,6 @@ def _q_incremental_clusters(spark, sf_dir):
             tr.filter(F.col("even") == flag).select("uid", "text"),
             state,
             threshold=JACCARD_T,
-            collect_stats=False,  # counters unused; stores are identical
         )
     # small_graph_rows=0 pins the distributed large-star/small-star
     # fixpoint (not the adaptive driver union-find) so the oracle gate
@@ -2594,7 +2589,6 @@ def _q_cluster_deltas(spark, sf_dir):
             jaccard_threshold=0.5, min_substring_len=120,
             enable_simhash=False, neighbor_window=None,
         ),
-        collect_stats=False,  # clusters + the pinned source are consumed
     )
     return cluster_delta_encode(
         canonical_clusters(res.clusters),

@@ -133,7 +133,6 @@ def main() -> None:
         res = near_dup_pipeline(
             tr.sample(0.1, seed=7), "uid", "text",
             DedupConfig(jaccard_threshold=0.5, min_substring_len=120),
-            collect_stats=False,
         )
         res.clusters.count()
 
@@ -370,7 +369,6 @@ def main() -> None:
         res = near_dup_pipeline(
             tr, "uid", "text",
             DedupConfig(jaccard_threshold=0.5, min_substring_len=120),
-            collect_stats=False,
         )
         return _force(res.clusters)
 

@@ -34,7 +34,7 @@ job cost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def _explode_pairs(
@@ -133,10 +133,15 @@ def bucket_pairs(
         .filter(F.col("bucket_size") >= 2)
     )
     if salt_oversized:
-        # The pruned counts table is tiny; checkpointing it lets the
-        # oversized-bucket probe below (and the caller's audit stage) reuse
-        # one computation instead of re-deriving the posting agg per scan.
-        counts = counts.localCheckpoint(eager=True)
+        # The pruned counts table is tiny; checkpointing it lets the salted
+        # branch below (and the caller's audit stage) reuse one computation
+        # instead of re-deriving the posting agg per scan. The checkpoint
+        # also counts the oversized buckets on the way through, so deciding
+        # whether to salt costs no probe job.
+        n_over = Observation()
+        counts = counts.observe(
+            n_over, F.count_if(F.col("bucket_size") > max_bucket_size).alias("n")
+        ).localCheckpoint(eager=True)
     over = counts.filter(F.col("bucket_size") > max_bucket_size)
     audit = over.select(
         *key_cols,
@@ -156,9 +161,9 @@ def bucket_pairs(
 
     # The salted branch adds two more scans of the posting table (the
     # oversized join + the representative agg). Hot buckets are the
-    # exception, not the rule — probe the checkpointed counts and build the
-    # branch only when an oversized bucket actually exists.
-    if salt_oversized and not over.isEmpty():
+    # exception, not the rule — build the branch only when the counts
+    # checkpoint saw an oversized bucket.
+    if salt_oversized and n_over.get["n"]:
         # Salt-and-keep: split each hot bucket into ceil(size/cap) hash
         # sub-buckets (AQE-splittable agg on the wider key; each task sees
         # ~cap members whp), pair within sub-buckets, then CHAIN the

@@ -47,7 +47,6 @@ def dedup_funnel(
     text_col: str,
     url_col: str | None = None,
     config=None,
-    collect_stats: bool = False,
 ) -> DataFrame:
     """Run the dedup tiers in sequence and account for each.
 
@@ -108,15 +107,10 @@ def dedup_funnel(
         from ..pipeline import near_dup_pipeline
 
         tier_idx += 1
-        # the funnel consumes only res.clusters (a count-distinct); the
-        # per-stage partition-stats pass is a full extra job per pipeline
-        # stage that nothing here reads (guide §1.2) — off by default,
-        # opt back in for lineage-audited runs.
         res = near_dup_pipeline(
             cur.select(F.col("_fid").alias("id"),
                        F.col("_ftext").alias("text")),
             "id", "text", config,
-            collect_stats=collect_stats,
         )
         rows.append(_tier_row(
             "near_dup", cur,

@@ -5,7 +5,7 @@ exact hash dedup → one fused sketch pass over the representatives → three
 candidate paths (MinHash/LSH, SimHash, winnowing-substring) → union of
 verified pair edges → large-star/small-star connected components →
 cluster table, with per-stage materialization (resume from
-checkpoint), per-partition lineage rows, and dedup-ratio metrics.
+checkpoint), per-stage row counts, and dedup-ratio metrics.
 
 Resumability (SURVEY.md §4.3): when ``checkpoint_dir`` is set, every stage
 writes parquet under ``{checkpoint_dir}/{run_id}/{stage}``; a stage whose
@@ -22,7 +22,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .operators import exactdup, minhash, simhash, substring
 from .operators.components import assign_clusters
@@ -68,8 +68,9 @@ class DedupConfig:
 class PipelineResult:
     clusters: DataFrame              # (id, cluster_id)
     pairs: DataFrame                 # (id_l, id_r, path, score)
-    metrics: DataFrame               # (run_id, stage, rows, wall_ms)
-    lineage: DataFrame               # (run_id, stage, partition_id, rows)
+    # (run_id, stage, rows, wall_ms, resumed); rows is NULL for lazy and
+    # resumed stages
+    metrics: DataFrame
     audits: dict = field(default_factory=dict)
     # (id, text) in the caller's id space, backed by the pipeline's pinned
     # ``base`` stage — survivorship/encoding consumers join texts against
@@ -141,29 +142,24 @@ def sketches(
 
 
 class _StageRunner:
-    """Materialize-or-resume per stage + lineage/metrics bookkeeping.
+    """Materialize-or-resume per stage + metrics bookkeeping.
 
-    ``collect_stats=False`` skips the per-stage partition-count job (a full
-    extra pass over each stage's output) — rows are recorded as -1 and the
-    lineage table is empty. Bench/scaling runs use this; correctness runs
-    keep the default.
+    One materialization mode. A stage's ``rows`` come from an unnamed
+    ``Observation`` on the action the stage already runs (its eager
+    checkpoint, or its parquet write in resume mode), so counting costs
+    no job of its own. ``rows`` is NULL for a lazy stage (observing it
+    would block filter pushdown into its consumer, and ``get`` would wait
+    forever on an audit frame nothing reads) and for a resumed stage; the
+    ``resumed`` column says which.
     """
 
-    def __init__(
-        self,
-        spark,
-        checkpoint_dir: str | None,
-        run_id: str,
-        collect_stats: bool = True,
-    ):
+    def __init__(self, spark, checkpoint_dir: str | None, run_id: str):
         import threading
 
         self.spark = spark
         self.dir = checkpoint_dir
         self.run_id = run_id
-        self.collect_stats = collect_stats
         self.metrics: list[tuple] = []
-        self.lineage: list[tuple] = []
         self._lock = threading.Lock()  # stages run from concurrent threads
 
     def _path(self, stage: str) -> str:
@@ -182,81 +178,56 @@ class _StageRunner:
         """``lazy=True`` marks a stage whose output is consumed at most
         once downstream (verify-pair frames, the pair union) or is an
         optional side-product (skew-audit frames): with no checkpoint_dir
-        AND ``collect_stats=False`` it is returned unmaterialized — the
-        single consumer's action evaluates it exactly once from the
-        already-checkpointed upstream stages, and an unread audit costs
-        zero jobs (guide §1.2: don't compute what you throw away — every
-        removed ``localCheckpoint`` barrier is one fewer driver
-        round-trip + eager job). With ``collect_stats=True`` (the
-        default) the stage materializes as before, so the documented
-        metrics/lineage contract — a real row count for EVERY stage, and
-        a ``PipelineResult.pairs`` that multiple consumers (e.g.
-        ``write_outputs``) can read without re-running verify joins —
-        holds exactly; bench/cluster-only callers opt into the lean mode
-        explicitly. With a checkpoint_dir the stage still materializes so
-        resumed runs keep their parquet and the resume contract is
-        unchanged.
+        it is returned unmaterialized — the single consumer's action
+        evaluates it exactly once from the already-checkpointed upstream
+        stages, and an unread audit costs zero jobs (guide §1.2: don't
+        compute what you throw away — every removed ``localCheckpoint``
+        barrier is one fewer driver round-trip + eager job). Its ``rows``
+        is NULL. With a checkpoint_dir every stage is written to parquet,
+        so resumed runs keep their parquet and the resume contract is
+        unchanged; a stage whose parquet is already committed is read back
+        with NULL ``rows``.
 
         ``local_only=True`` marks a REUSE point that is worth pinning in
         executor memory interactively but not worth a full parquet write
         in resume mode (the ``base`` stage: id-hashed corpus text — in
         resume mode downstream stages inline it, exactly the pre-round-6
-        plan shape)."""
-        t0 = time.monotonic()
-        resumed = False
-        if self.dir is None and lazy and not self.collect_stats:
-            out = build()
-            with self._lock:
-                self.metrics.append(
-                    (self.run_id, stage, -1,
-                     int((time.monotonic() - t0) * 1000), False)
-                )
-            return out
+        plan shape).
+
+        Every job the stage submits — including eager sub-jobs of a lazy
+        ``build()`` (internal checkpoints) — runs under the label
+        ``stage:<name>`` (guide §1.5)."""
+        from .session import job_description
+
         if self.dir is not None and local_only:
             # inline in resume mode — not a materialized stage, so it has
             # no metrics row (a fully-resumed run stays all-resumed)
             return build()
-        if self.dir is None:
-            # label the stage's jobs (guide §1.5) — build() may itself run
-            # eager sub-jobs (internal checkpoints/probes), so set the
-            # description around the whole block
-            from .session import job_description
-
-            with job_description(
-                self.spark.sparkContext, f"stage:{stage}"
-            ):
-                out = build().localCheckpoint(eager=True)
-        elif self._committed(stage):
-            out = self.spark.read.parquet(self._path(stage))
-            resumed = True
-        else:
-            build().write.mode("overwrite").parquet(self._path(stage))
-            out = self.spark.read.parquet(self._path(stage))
-        if self.collect_stats:
-            part_rows = (
-                out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            )
-            total = sum(r.rows for r in part_rows)
-        else:
-            part_rows, total = [], -1
+        t0 = time.monotonic()
+        obs, resumed = None, False
+        with job_description(self.spark.sparkContext, f"stage:{stage}"):
+            if self.dir is None and lazy:
+                out = build()
+            elif self.dir is not None and self._committed(stage):
+                out = self.spark.read.parquet(self._path(stage))
+                resumed = True
+            else:
+                obs = Observation()
+                df_ = build().observe(obs, F.count(F.lit(1)).alias("rows"))
+                if self.dir is None:
+                    out = df_.localCheckpoint(eager=True)
+                else:
+                    df_.write.mode("overwrite").parquet(self._path(stage))
+                    out = self.spark.read.parquet(self._path(stage))
+        rows = None if obs is None else obs.get["rows"]
         wall_ms = int((time.monotonic() - t0) * 1000)
         with self._lock:
-            self.metrics.append((self.run_id, stage, total, wall_ms, resumed))
-            self.lineage.extend(
-                (self.run_id, stage, int(r.pid), int(r.rows)) for r in part_rows
-            )
+            self.metrics.append((self.run_id, stage, rows, wall_ms, resumed))
         return out
 
     def metrics_df(self) -> DataFrame:
         return self.spark.createDataFrame(
             self.metrics, "run_id string, stage string, rows long, wall_ms long, resumed boolean"
-        )
-
-    def lineage_df(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            self.lineage, "run_id string, stage string, partition_id int, rows long"
         )
 
 
@@ -294,12 +265,14 @@ def near_dup_pipeline(
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
     run_id: str = "run-0",
-    collect_stats: bool = True,
+    collect_stats: bool = False,
 ) -> PipelineResult:
-    """The full dedup DAG. ``df`` must have unique ``id_col`` values."""
+    """The full dedup DAG. ``df`` must have unique ``id_col`` values.
+
+    ``collect_stats`` is accepted and ignored (``perfbench`` still passes it)."""
     cfg = cfg or DedupConfig()
     spark = df.sparkSession
-    runner = _StageRunner(spark, checkpoint_dir, run_id, collect_stats=collect_stats)
+    runner = _StageRunner(spark, checkpoint_dir, run_id)
 
     src = df.select(F.col(id_col).alias("orig_id"), F.col(text_col).alias("text"))
     # Internal node key: xxhash64 of the caller id. Every downstream stage
@@ -406,10 +379,10 @@ def near_dup_pipeline(
         _sh_cache: dict = {}
 
         def _sh_cands():
-            # memoized: building the candidate DAG runs eager sub-jobs
-            # (bucket-count checkpoint + oversized probe inside
-            # bucket_pairs); the audit stage and the verify stage must
-            # share ONE build, not pay those jobs twice.
+            # memoized: building the candidate DAG runs an eager sub-job
+            # (the bucket-count checkpoint inside bucket_pairs); the audit
+            # stage and the verify stage must share ONE build, not pay it
+            # twice.
             if "r" not in _sh_cache:
                 _sh_cache["r"] = simhash.simhash_candidate_pairs(
                     simhash.simhash_bands(fps, bands=cfg.sim_bands),
@@ -543,7 +516,6 @@ def near_dup_pipeline(
         clusters=clusters,
         pairs=pairs,
         metrics=runner.metrics_df(),
-        lineage=runner.lineage_df(),
         audits=runner_audits,
         source=keyed.select(F.col("orig_id").alias("id"), "text"),
     )
@@ -636,9 +608,10 @@ def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -
         {out_dir}/{run_id}/clusters/   (id, cluster_id)
         {out_dir}/{run_id}/pairs/      (id_l, id_r, path, score)
         {out_dir}/{run_id}/metrics/    (run_id, stage, rows, wall_ms, resumed)
-        {out_dir}/{run_id}/lineage/    (run_id, stage, partition_id, rows)
         {out_dir}/{run_id}/audits/<name>/  skew-audit frames
         {out_dir}/{run_id}/manifest.json
+
+    The manifest records each audit's row count, observed on its write.
 
     Parquet-dir-with-_SUCCESS is the sandbox stand-in for an Iceberg
     snapshot commit (SURVEY.md §1.2/§4.3); on a real cluster these are
@@ -646,7 +619,7 @@ def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -
     """
     base = os.path.join(out_dir, run_id)
     tables = {"clusters": result.clusters, "pairs": result.pairs,
-              "metrics": result.metrics, "lineage": result.lineage}
+              "metrics": result.metrics}
     manifest: dict = {"run_id": run_id, "tables": {}, "audits": {}}
     for name, df_ in tables.items():
         path = os.path.join(base, name)
@@ -654,8 +627,11 @@ def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -
         manifest["tables"][name] = {"path": path, "schema": df_.schema.simpleString()}
     for name, adf in result.audits.items():
         path = os.path.join(base, "audits", name)
-        adf.write.mode("overwrite").parquet(path)
-        manifest["audits"][name] = {"path": path, "rows": adf.count()}
+        obs = Observation()
+        adf.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        manifest["audits"][name] = {"path": path, "rows": obs.get["rows"]}
     _publish_manifest(os.path.join(base, "manifest.json"), manifest)
     return manifest
 
@@ -671,7 +647,7 @@ def read_outputs(spark, out_dir: str, run_id: str = "run-0") -> PipelineResult:
     audits = {n: spark.read.parquet(m["path"]) for n, m in manifest["audits"].items()}
     return PipelineResult(
         clusters=t["clusters"], pairs=t["pairs"], metrics=t["metrics"],
-        lineage=t["lineage"], audits=audits,
+        audits=audits,
     )
 
 

@@ -67,7 +67,6 @@ def training_data_prep(
     ngram_n: int = 5,
     contamination_max: float = 0.5,
     cfg: DedupConfig | None = None,
-    collect_stats: bool = False,
 ) -> DataFrame:
     """One row per KEPT training document (= one per dedup cluster among
     the quality-passing, uncontaminated survivors):
@@ -104,11 +103,7 @@ def training_data_prep(
         "id",
     )
 
-    res = near_dup_pipeline(
-        clean, "id", "text",
-        cfg or DedupConfig(),
-        collect_stats=collect_stats,
-    )
+    res = near_dup_pipeline(clean, "id", "text", cfg or DedupConfig())
     # res.source is the pipeline's pinned copy of `clean` — joining texts
     # against it skips re-running the quality/decontam gates a second time
     reps = cluster_representatives(

@@ -69,7 +69,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from pyspark.errors import AnalysisException
 
@@ -158,15 +158,16 @@ def process_batch(
     threshold: float = 0.7,
     max_bucket_size: int = 2000,
     seed: int = 1,
-    collect_stats: bool = True,
+    collect_stats: bool = False,
 ) -> dict:
     """One micro-batch of incremental dedup. ``batch_df`` must carry
     ``(uid, text)``. Returns counters (for tests/monitoring); appends to
     the state stores and the ``edges``/``assignments`` logs.
 
-    ``collect_stats=False`` skips the three driver count() jobs that feed
-    the counters (they return -1) — bench/production mode, mirroring the
-    batch pipeline's ``collect_stats``.
+    The ``rows``/``new_keys``/``edges`` counters are observed on frames the
+    batch materializes anyway (the batch pin, the new-key pin, the edges
+    append), so they are exact on every call at no extra job.
+    ``collect_stats`` is accepted and ignored (``perfbench`` still passes it).
     """
     spark = batch_df.sparkSession
     os.makedirs(state_dir, exist_ok=True)
@@ -176,15 +177,25 @@ def process_batch(
     with job_description(spark.sparkContext, f"stream:epoch{epoch}"):
         return _process_batch_inner(
             spark, batch_df, state_dir, epoch, w, num_perm, bands, rows,
-            threshold, max_bucket_size, seed, collect_stats,
+            threshold, max_bucket_size, seed,
         )
+
+
+def _pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` pinned (eager local checkpoint) and its row count, observed
+    on the checkpoint job itself — no count job of its own."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
+    return pinned, obs.get["rows"]
 
 
 def _process_batch_inner(
     spark, batch_df, state_dir, epoch, w, num_perm, bands, rows,
-    threshold, max_bucket_size, seed, collect_stats,
+    threshold, max_bucket_size, seed,
 ) -> dict:
-    batch = batch_df.select("uid", "text").localCheckpoint(eager=True)
+    batch, n_rows = _pin_counted(batch_df.select("uid", "text"))
 
     # --- exact path vs history ------------------------------------------
     keyed = batch.select(
@@ -198,17 +209,19 @@ def _process_batch_inner(
         # first batch of a fresh state dir: no history ⇒ every batch-min
         # key is new and canonical (the merge join below would left-join
         # an empty frame and coalesce to batch_min anyway)
-        new_keys = batch_min.select(
+        new_keys, n_new_keys = _pin_counted(batch_min.select(
             "content_key", F.col("batch_min").alias("canonical_id")
-        ).localCheckpoint(eager=True)
+        ))
         canon = new_keys
     else:
         merged = batch_min.join(
             store_keys.select("content_key", "canonical_id"), "content_key", "left"
         )
-        new_keys = merged.filter(F.col("canonical_id").isNull()).select(
-            "content_key", F.col("batch_min").alias("canonical_id")
-        ).localCheckpoint(eager=True)
+        new_keys, n_new_keys = _pin_counted(
+            merged.filter(F.col("canonical_id").isNull()).select(
+                "content_key", F.col("batch_min").alias("canonical_id")
+            )
+        )
         canon = merged.select(
             "content_key",
             F.coalesce("canonical_id", "batch_min").alias("canonical_id"),
@@ -253,9 +266,9 @@ def _process_batch_inner(
             banded.select("band_idx", "band_hash")
         )
     ).groupBy("band_idx", "band_hash").agg(F.count("*").alias("bucket_size"))
-    hot_keys = key_counts.filter(
-        F.col("bucket_size") > max_bucket_size
-    ).localCheckpoint(eager=True)
+    hot_keys, n_hot = _pin_counted(
+        key_counts.filter(F.col("bucket_size") > max_bucket_size)
+    )
     hist_audit = hot_keys.select(
         "band_idx", "band_hash", "bucket_size",
         F.lit("dropped").alias("action"), F.lit(epoch).alias("epoch"),
@@ -287,25 +300,14 @@ def _process_batch_inner(
     if shingle_store is not None:
         all_sh = all_sh.unionByName(shingle_store.select("id", "shingles"))
     verified = minhash.verify_jaccard(cand, all_sh, threshold=threshold)
+    # the append is the edges' only evaluation: it records their count
+    n_edges = Observation()
     edges = verified.select(
         "id_l", "id_r", F.lit("minhash").alias("path"),
         F.col("jaccard").alias("score"),
-    )
-    if collect_stats:
-        # two consumers (counter + write) — pin once; without stats the
-        # write is the only evaluation, so the barrier is pure overhead
-        edges = edges.localCheckpoint(eager=True)
+    ).observe(n_edges, F.count(F.lit(1)).alias("rows"))
 
     # --- persist ---------------------------------------------------------
-    if collect_stats:
-        counters = {
-            "epoch": epoch,
-            "rows": batch.count(),
-            "new_keys": new_keys.count(),
-            "edges": edges.count(),
-        }
-    else:
-        counters = {"epoch": epoch, "rows": -1, "new_keys": -1, "edges": -1}
     ep = F.lit(epoch).cast("long")
     writes = [
         ("content_keys", new_keys.withColumn("epoch", ep)),
@@ -316,10 +318,9 @@ def _process_batch_inner(
     ]
     # Audit rows exist only when some band key is over the cap. Every
     # in-batch bucket is a subset of the same key's total (history+batch)
-    # bucket, so batch_audit nonempty ⇒ hot_keys nonempty — probing the
-    # already-checkpointed hot_keys (no shuffle) replaces an isEmpty()
-    # that re-ran the in-batch bucket-count aggregation every epoch.
-    if not hot_keys.isEmpty():
+    # bucket, so batch_audit nonempty ⇒ hot_keys nonempty — the row count
+    # observed on the hot_keys checkpoint decides, with no probe job.
+    if n_hot:
         audits = batch_audit.select(
             "band_idx",
             "band_hash",
@@ -355,7 +356,12 @@ def _process_batch_inner(
     _write(writes[0])  # content_keys — the commit-order anchor
     with ThreadPoolExecutor(max_workers=3) as pool:
         list(pool.map(_write, writes[1:]))
-    return counters
+    return {
+        "epoch": epoch,
+        "rows": n_rows,
+        "new_keys": n_new_keys,
+        "edges": n_edges.get["rows"],
+    }
 
 
 def compact_state(

@@ -1,6 +1,6 @@
 """End-to-end pipeline tests: cluster recall >= 0.99 vs a brute-force
 oracle at identical config (BASELINE.json criterion), resume-from-
-checkpoint, lineage/metrics shape."""
+checkpoint, metrics shape."""
 
 import os
 import re
@@ -134,16 +134,21 @@ def test_cluster_recall_vs_oracle(spark, turns_df, oracle_pairs, tmp_path):
     assert precision >= 0.95, precision
 
 
-def test_pipeline_metrics_and_lineage(spark, turns_df):
+def test_pipeline_metrics(spark, turns_df):
+    """Materialized stages report exact rows (observed on their own
+    checkpoint); lazy stages report NULL."""
     res = near_dup_pipeline(turns_df, "uid", "text")
-    stages = {r.stage for r in res.metrics.collect()}
+    by_stage = {r.stage: r.rows for r in res.metrics.collect()}
     assert {"exact_groups", "sketches", "minhash_pairs", "simhash_pairs",
-            "substring_pairs", "pairs", "clusters"} <= stages
-    lin = res.lineage.groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
-    by_stage = {r.stage: r.rows for r in lin}
+            "substring_pairs", "pairs", "clusters"} <= set(by_stage)
     n = turns_df.count()
-    assert by_stage["clusters"] == n
+    n_reps = turns_df.select(F.coalesce("text", F.lit(""))).distinct().count()
     assert by_stage["exact_groups"] == n
+    assert by_stage["reps"] == n_reps
+    assert by_stage["sketches"] == n_reps
+    assert by_stage["clusters"] == n
+    for lazy in ("minhash_pairs", "simhash_pairs", "substring_pairs", "pairs"):
+        assert by_stage[lazy] is None, lazy
     m = dedup_metrics(res.clusters).collect()[0]
     assert m.n_rows == n and 0 < m.n_clusters < n and 0 < m.dup_fraction < 1
 
@@ -166,6 +171,27 @@ def test_resume_from_checkpoint(spark, turns_df, tmp_path):
     resumed = {r.stage: r.resumed for r in r2.metrics.collect()}
     assert resumed["sketches"] and resumed["minhash_pairs"]
     assert not resumed["pairs"] and not resumed["clusters"]
+
+
+def test_resume_metrics_rows(spark, turns_df, tmp_path):
+    """In resume mode a stage written to parquet reports its exact rows
+    (lazy ones included: they are written too); a stage read back from a
+    committed checkpoint reports NULL."""
+    import shutil
+
+    ckpt = str(tmp_path / "ckpt_rows")
+    n = turns_df.count()
+    r1 = near_dup_pipeline(turns_df, "uid", "text", checkpoint_dir=ckpt, run_id="rr")
+    rows1 = {r.stage: r.rows for r in r1.metrics.collect()}
+    assert rows1["exact_groups"] == n and rows1["clusters"] == n
+    assert rows1["pairs"] == r1.pairs.count()
+
+    shutil.rmtree(os.path.join(ckpt, "rr", "clusters"))
+    r2 = near_dup_pipeline(turns_df, "uid", "text", checkpoint_dir=ckpt, run_id="rr")
+    m2 = {r.stage: r for r in r2.metrics.collect()}
+    assert m2["exact_groups"].resumed and m2["exact_groups"].rows is None
+    assert m2["pairs"].resumed and m2["pairs"].rows is None
+    assert not m2["clusters"].resumed and m2["clusters"].rows == n
 
 
 def test_conversation_reassembly_stable_order(spark, transcripts_df):
@@ -202,7 +228,7 @@ def test_write_read_outputs_roundtrip(spark, turns_df, tmp_path):
     out = str(tmp_path / "out")
     res = near_dup_pipeline(turns_df, "uid", "text")
     manifest = write_outputs(res, out, run_id="w1")
-    assert set(manifest["tables"]) == {"clusters", "pairs", "metrics", "lineage"}
+    assert set(manifest["tables"]) == {"clusters", "pairs", "metrics"}
     assert _os.path.exists(_os.path.join(out, "w1", "manifest.json"))
     with open(_os.path.join(out, "w1", "manifest.json")) as fh:
         assert json.load(fh)["run_id"] == "w1"

@@ -61,10 +61,14 @@ def test_incremental_state_counters(spark, turn_batches, tmp_path):
         spark.createDataFrame(turn_batches[0][["conv_id", "turn_idx", "text"]])
     ).select("uid", "text")
     c0 = st.process_batch(df0, state)
+    # fresh state dir: the counters match the batch and the edges store
+    assert c0["rows"] == len(turn_batches[0])
+    assert c0["edges"] == spark.read.parquet(f"{state}/edges").count()
     # replay batch 0 verbatim: zero new keys, zero new edges
     c_replay = st.process_batch(df0, state)
     assert c_replay["rows"] == c0["rows"]
     assert c_replay["new_keys"] == 0
+    assert c_replay["edges"] == 0
     assigns = spark.read.parquet(f"{state}/assignments")
     # every replayed row resolves to the original canonical (one per key)
     keys = spark.read.parquet(f"{state}/content_keys")

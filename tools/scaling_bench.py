@@ -39,11 +39,6 @@ def main() -> None:
     )
     ap.add_argument("--out", default=None, help="append JSON line here")
     ap.add_argument(
-        "--collect-stats", action="store_true",
-        help="include per-stage partition-count/lineage jobs in the timed "
-        "region (correctness-run behavior); off for pure throughput legs",
-    )
-    ap.add_argument(
         "--profile", action="store_true",
         help="print per-stage wall_ms after the run (scaling diagnosis)",
     )
@@ -115,35 +110,23 @@ def main() -> None:
 
     if args.warmup_frac > 0:
         warm = near_dup_pipeline(
-            base.sample(args.warmup_frac, seed=7), "uid", "text", cfg,
-            collect_stats=False,
+            base.sample(args.warmup_frac, seed=7), "uid", "text", cfg
         )
         warm.clusters.select("cluster_id").distinct().count()
 
     tot0, st0 = _cpu_times(args.cores)
     t0 = time.monotonic()
-    result = near_dup_pipeline(
-        base, "uid", "text", cfg, collect_stats=args.collect_stats
-    )
+    result = near_dup_pipeline(base, "uid", "text", cfg)
     n_clusters = result.clusters.select("cluster_id").distinct().count()
     wall = time.monotonic() - t0
     tot1, st1 = _cpu_times(args.cores)
     steal_pct = round(100.0 * (st1 - st0) / max(tot1 - tot0, 1e-9), 2)
 
     if args.profile:
-        lin = {}
-        if args.collect_stats:
-            for r in result.lineage.collect():
-                lin.setdefault(r.stage, []).append(int(r.rows))
         for run_id, stage, rows, wall_ms, resumed in sorted(
             result.metrics.collect(), key=lambda r: -r[3]
         ):
-            parts = sorted(lin.get(stage, []), reverse=True)
-            extra = (
-                f" parts={len(parts)} max={parts[0]} med={parts[len(parts)//2]}"
-                if parts else ""
-            )
-            print(f"  stage {stage:24s} {wall_ms/1000.0:8.2f}s rows={rows}{extra}")
+            print(f"  stage {stage:24s} {wall_ms/1000.0:8.2f}s rows={rows}")
 
     rec = {
         "metric": "dedup_throughput_turns_per_sec",
