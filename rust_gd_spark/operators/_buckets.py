@@ -75,6 +75,7 @@ def bucket_pairs(
     materialize: bool = True,
     salt_oversized: bool = False,
     order_col: str | None = None,
+    oversized: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """``(pairs, audit)`` — pairs has ``id_l, id_r`` (+ ``<payload>_l/_r``);
     audit has ``(*key_cols, bucket_size, action)`` for every bucket over
@@ -89,6 +90,11 @@ def bucket_pairs(
     it instead of the id (Manku-style sorted-neighborhood: members near in
     the ordered value are paired). With ``order_col`` the caller must
     canonicalize ``id_l``/``id_r`` before any (id_l, id_r) dedup.
+
+    ``oversized``: an unnamed ``Observation`` that receives ``n``, the
+    number of buckets over the cap, from the salting checkpoint — so a
+    caller learns whether ``audit`` has rows without a probe job (only
+    with ``salt_oversized``; otherwise nothing is observed).
 
     ``neighbor_window=K`` bounds pair generation to each member's next K
     neighbors in the sorted bucket (a K-wide band graph) instead of all
@@ -138,7 +144,7 @@ def bucket_pairs(
         # instead of re-deriving the posting agg per scan. The checkpoint
         # also counts the oversized buckets on the way through, so deciding
         # whether to salt costs no probe job.
-        n_over = Observation()
+        n_over = oversized or Observation()
         counts = counts.observe(
             n_over, F.count_if(F.col("bucket_size") > max_bucket_size).alias("n")
         ).localCheckpoint(eager=True)

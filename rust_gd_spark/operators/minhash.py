@@ -537,6 +537,7 @@ def lsh_candidate_pairs(
     max_bucket_size: int = 2000,
     neighbor_window: int | None = None,
     salt_oversized: bool = False,
+    oversized=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Bucket pairs on (band_idx, band_hash) → distinct pairs (id_l < id_r).
 
@@ -548,6 +549,7 @@ def lsh_candidate_pairs(
     ``skew_audit(band_idx, band_hash, bucket_size)`` — never dropped
     silently. A 2000-member bucket alone would emit 2M pairs; at 10^12
     turns that is the difference between a job and an outage.
+    ``oversized`` is passed to ``bucket_pairs``.
     """
     from ._buckets import bucket_pairs
 
@@ -558,6 +560,7 @@ def lsh_candidate_pairs(
         neighbor_window=neighbor_window,
         materialize=False,  # 32×-exploded band table: recompute beats storing
         salt_oversized=salt_oversized,
+        oversized=oversized,
     )
     return raw.dropDuplicates(["id_l", "id_r"]), audit
 

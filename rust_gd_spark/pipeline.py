@@ -17,6 +17,7 @@ equivalent of an Iceberg snapshot commit.)
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -231,6 +232,159 @@ class _StageRunner:
         )
 
 
+def _edges(pairs: DataFrame, path: str, score) -> DataFrame:
+    """``(id_l, id_r, path, score)`` — the edge rows every path emits."""
+    return pairs.select("id_l", "id_r", F.lit(path).alias("path"), score.alias("score"))
+
+
+def _staged_candidates(runner: _StageRunner, name: str, build_cands, lazy=False):
+    """Materialize a candidate-pair stage AND its skew-audit frame as
+    two resumable stages sharing one (memoized) build. On resume both
+    read back from parquet, so ``PipelineResult.audits`` is populated
+    on resumed runs too — oversized buckets are never silently
+    invisible just because the run restarted. ``lazy`` leaves the
+    candidate stage unmaterialized (its verify is its only reader)."""
+    build = functools.cache(build_cands)
+    cand = runner.run(f"{name}_cands", lambda: build()[0], lazy=lazy)
+    return cand, runner.run(f"{name}_skew_audit", lambda: build()[1], lazy=True)
+
+
+def exact_stages(
+    runner: _StageRunner, base: DataFrame, known: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The exact path: ``exact_groups(id, content_key, canonical_id, new)``
+    for every ``base`` row (``exactdup.exact_dup_groups``: canonical = the
+    group's min id) and ``reps(id, text)``, the canonical rows of the new
+    groups. With ``known(content_key, canonical_id)`` (the stream's
+    ``content_keys`` store) a stored key keeps its canonical id and is
+    not new.
+
+    Every near-dup path runs on one representative per exact-text group;
+    exact star edges re-attach the copies through connected components
+    (transitive closure ⇒ identical final clusters). At web scale this is
+    the load-bearing reduction — candidate-join and verify cost scale with
+    DISTINCT content, not corpus size, and verbatim boilerplate collapses
+    to one node instead of flooding LSH buckets. ``reps`` is lazy: the
+    sketch pass is its only reader.
+    """
+
+    def _groups():
+        # base is pinned, so the group agg and the join back inside
+        # exact_dup_groups re-read it instead of pinning their own
+        # (id, key) table; resume mode inlines base and keeps that pin
+        groups = exactdup.exact_dup_groups(
+            base, "id", "text", materialize=runner.dir is not None
+        )
+        if known is None:
+            return groups.withColumn("new", F.lit(True)).drop("group_size")
+        stored = known.select("content_key", F.col("canonical_id").alias("known"))
+        return groups.join(stored, "content_key", "left").select(
+            "id", "content_key", F.coalesce("known", "canonical_id").alias("canonical_id"),
+            F.col("known").isNull().alias("new"),
+        )
+
+    exact_groups = runner.run("exact_groups", _groups)
+    new_reps = F.col("new") & (F.col("id") == F.col("canonical_id"))
+    reps = runner.run(
+        "reps", lambda: exact_groups.filter(new_reps).select("id").join(base, "id"),
+        lazy=True,
+    )
+    return exact_groups, reps
+
+
+_BAND_KEY = ["band_idx", "band_hash"]
+
+
+def minhash_stages(
+    runner: _StageRunner,
+    sk: DataFrame,
+    cfg: DedupConfig,
+    bands_hist: DataFrame | None = None,
+    shingles_hist: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, int | None]:
+    """The MinHash candidate, skew-audit and verify stages over the pinned
+    sketch frame ``sk(id, shingles, bands)``: ``(pairs, audit, n_audit)``,
+    pairs as edge rows scored by Jaccard. Candidates are
+    ``minhash.lsh_candidate_pairs`` over the band postings (oversized
+    buckets salted) plus, with ``bands_hist(band_idx, band_hash, id)``, the
+    batch-vs-history band join; ``minhash.verify_jaccard`` checks them
+    against ``sk``'s shingles plus ``shingles_hist(id, shingles)``. ``audit`` lists the salted
+    buckets and the keys the history join skipped (``dropped``);
+    ``n_audit``, its row count from the stage's own pins (None if the
+    candidate stage was resumed), lets a caller append it only when
+    non-empty without a probe job.
+
+    Skew guard: the history join emits |new| × |history| postings per key,
+    and history grows every batch, so a key whose TOTAL posting count
+    exceeds the cap is excluded from it (reachable still through the other
+    ``bands − 1`` keys and the exact path). Salting there instead would
+    re-read a hot key's whole stored posting list every batch. Only the
+    history postings of keys the batch posts are read (a semi-join): no
+    batch aggregates all of history, and a key is audited only in an
+    epoch that skipped its join.
+    """
+    cap = cfg.max_bucket_size
+    # the band explode re-derives from the pinned sketch frame in codegen
+    # for every reader (bucket_pairs' count agg and prune join, the
+    # history join): never the signature kernel
+    banded = minhash.explode_band_hashes(sk.select("id", "bands"))
+    n_audit: list = []
+
+    def _cands():
+        salted = Observation()
+        pairs, audit = minhash.lsh_candidate_pairs(
+            banded, cap, neighbor_window=cfg.neighbor_window,
+            salt_oversized=True, oversized=salted,
+        )
+        pairs = pairs.select("id_l", "id_r")
+        n = salted.get["n"]
+        if bands_hist is not None:
+            keys = banded.select(*_BAND_KEY)
+            hist = bands_hist.select(*_BAND_KEY, "id").join(keys, _BAND_KEY, "left_semi")
+            n_hot = Observation()
+            hot = (
+                hist.select(*_BAND_KEY, F.lit(1).alias("h"))
+                .unionByName(keys.withColumn("h", F.lit(0)))
+                .groupBy(*_BAND_KEY)
+                .agg(F.count("*").alias("bucket_size"), F.sum("h").alias("n_hist"))
+                .filter((F.col("bucket_size") > cap) & (F.col("n_hist") > 0))
+                .observe(n_hot, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            n += n_hot.get["n"]
+            hist_pairs = (
+                banded.join(hot.select(*_BAND_KEY), _BAND_KEY, "left_anti")
+                .join(hist.withColumnRenamed("id", "hist_id"), _BAND_KEY)
+                .select(
+                    F.least("id", "hist_id").alias("id_l"),
+                    F.greatest("id", "hist_id").alias("id_r"),
+                )
+                .filter(F.col("id_l") != F.col("id_r"))
+                .dropDuplicates(["id_l", "id_r"])
+            )
+            pairs = pairs.unionByName(hist_pairs)
+            audit = audit.unionByName(
+                hot.select(*_BAND_KEY, "bucket_size", F.lit("dropped").alias("action"))
+            )
+        n_audit.append(n)
+        return pairs, audit
+
+    # lazy: the verify is the candidates' only reader
+    cand, audit = _staged_candidates(runner, "minhash", _cands, lazy=True)
+    shingles = sk.select("id", "shingles")
+    if shingles_hist is not None:
+        shingles = shingles.unionByName(shingles_hist.select("id", "shingles"))
+    # lazy: the verify joins read only pinned frames and feed exactly one
+    # consumer (the pair union, or the stream's edges append)
+    pairs = runner.run(
+        "minhash_pairs",
+        lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
+        lazy=True,
+    )
+    n_audit = n_audit[0] if n_audit else None
+    return _edges(pairs, "minhash", F.col("jaccard")), audit, n_audit
+
+
 def with_turn_uid(transcripts: DataFrame) -> DataFrame:
     """uid = conv_id:turn_idx — the stable per-turn key (input_hint)."""
     return transcripts.withColumn(
@@ -297,43 +451,9 @@ def near_dup_pipeline(
     )
     base = keyed.select("id", "text")
 
-    # --- exact path -------------------------------------------------------
-    exact_groups = runner.run(
-        "exact_groups", lambda: exactdup.exact_dup_groups(base, "id", "text")
-    )
+    exact_groups, reps = exact_stages(runner, base)
     exact_pairs = exactdup.exact_dup_pairs(exact_groups)
-
-    # Canonicalization: every near-dup path runs on ONE representative per
-    # exact-text group; exact star edges re-attach the copies through
-    # connected components (transitive closure ⇒ identical final clusters).
-    # At web scale this is the load-bearing reduction — candidate-join and
-    # verify cost scale with DISTINCT content, not corpus size, and verbatim
-    # boilerplate collapses to one node instead of flooding LSH buckets.
-    reps = runner.run(
-        "reps",
-        lambda: exact_groups.filter(F.col("id") == F.col("canonical_id"))
-        .select("id")
-        .join(base, "id"),
-    )
-
     runner_audits: dict = {}
-
-    def _staged_candidates(name: str, build_cands):
-        """Materialize a candidate-pair stage AND its skew-audit frame as
-        two resumable stages sharing one (memoized) build. On resume both
-        read back from parquet, so ``PipelineResult.audits`` is populated
-        on resumed runs too — oversized buckets are never silently
-        invisible just because the run restarted."""
-        cache: dict = {}
-
-        def _memo():
-            if "r" not in cache:
-                cache["r"] = build_cands()
-            return cache["r"]
-
-        cand = runner.run(f"{name}_cands", lambda: _memo()[0])
-        audit = runner.run(f"{name}_skew_audit", lambda: _memo()[1], lazy=True)
-        return cand, audit
 
     # --- shared sketch pass ------------------------------------------------
     # ONE Arrow pass over the reps computes every sketch the enabled paths
@@ -345,29 +465,8 @@ def near_dup_pipeline(
 
     # --- MinHash/LSH path -------------------------------------------------
     def _mh_chain():
-        shingles = sk.select("id", "shingles")
-
-        def _mh_cands():
-            # No checkpoint of its own: the fused band-hash table (bands
-            # longs/row — see minhash.minhash_band_hashes) is a column of
-            # the pinned sketch frame, so the two scans of bucket_pairs
-            # (count agg + prune join) each re-derive the band table with
-            # a codegen posexplode, never the signature kernel.
-            bands = minhash.explode_band_hashes(sk.select("id", "bands"))
-            return minhash.lsh_candidate_pairs(
-                bands, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-                salt_oversized=True,
-            )
-
-        cand, audit = _staged_candidates("minhash", _mh_cands)
-        runner_audits["lsh_skew"] = audit
-        # lazy: the verify joins read only checkpointed frames (cand,
-        # sketches) and feed exactly one consumer — the pair union.
-        return runner.run(
-            "minhash_pairs",
-            lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
-            lazy=True,
-        )
+        pairs, runner_audits["lsh_skew"], _ = minhash_stages(runner, sk, cfg)
+        return pairs
 
     # --- SimHash path -------------------------------------------------------
     def _sh_chain():
@@ -376,22 +475,19 @@ def near_dup_pipeline(
         # both consumers below.
         fps = sk.select("id", "fp")
 
-        _sh_cache: dict = {}
-
+        # memoized: building the candidate DAG runs an eager sub-job
+        # (the bucket-count checkpoint inside bucket_pairs); the audit
+        # stage and the verify stage must share ONE build, not pay it
+        # twice.
+        @functools.cache
         def _sh_cands():
-            # memoized: building the candidate DAG runs an eager sub-job
-            # (the bucket-count checkpoint inside bucket_pairs); the audit
-            # stage and the verify stage must share ONE build, not pay it
-            # twice.
-            if "r" not in _sh_cache:
-                _sh_cache["r"] = simhash.simhash_candidate_pairs(
-                    simhash.simhash_bands(fps, bands=cfg.sim_bands),
-                    cfg.max_bucket_size,
-                    neighbor_window=cfg.neighbor_window,
-                    materialize=False,
-                    salt_oversized=True,
-                )
-            return _sh_cache["r"]
+            return simhash.simhash_candidate_pairs(
+                simhash.simhash_bands(fps, bands=cfg.sim_bands),
+                cfg.max_bucket_size,
+                neighbor_window=cfg.neighbor_window,
+                materialize=False,
+                salt_oversized=True,
+            )
 
         # the audit derives from the compact bucket-count agg — persist it
         # as its own stage. The raw 16-bit-band collision stream is
@@ -401,11 +497,12 @@ def near_dup_pipeline(
         runner_audits["simhash_skew"] = runner.run(
             "simhash_skew_audit", lambda: _sh_cands()[1], lazy=True
         )
-        return runner.run(
+        pairs = runner.run(
             "simhash_pairs",
             lambda: simhash.verify_hamming(_sh_cands()[0], cfg.max_hamming),
             lazy=True,
         )
+        return _edges(pairs, "simhash", 1.0 - F.col("hamming_dist") / 64.0)
 
     # --- substring path -----------------------------------------------------
     def _ss_chain():
@@ -415,64 +512,44 @@ def near_dup_pipeline(
                 neighbor_window=cfg.neighbor_window, salt_oversized=True,
             )
 
-        cand, audit = _staged_candidates("substring", _ss_cands)
+        cand, audit = _staged_candidates(runner, "substring", _ss_cands)
         runner_audits["substring_skew"] = audit
-        return runner.run(
+        pairs = runner.run(
             "substring_pairs",
+            # texts from the pinned base: candidate ids are all reps
             lambda: substring.verify_common_substring(
-                cand, reps, "id", "text", cfg.min_substring_len,
+                cand, base, "id", "text", cfg.min_substring_len,
                 # clustering needs only the threshold decision; the exact
                 # LCS length is ~10× slower on long documents
                 exact_length=False,
             ),
             lazy=True,
         )
+        return _edges(pairs, "substring", F.col("common_len").cast("double"))
 
     # The candidate paths fork after the one shared sketch pass into
-    # independent DAGs over `sketches` (and `reps` for the substring
+    # independent DAGs over `sketches` (and `base` for the substring
     # verify), each submitted from its own driver thread; Spark schedules
     # their jobs fairly, so one chain's stages fill the driver-barrier gaps
     # of another's (measured 23-39% faster than sequential submission on
     # the full 4-path config at sf0.1, local[N]).
-    chains = []
-    if cfg.enable_minhash:
-        chains.append((
-            _mh_chain,
-            lambda mh: mh.select("id_l", "id_r", F.lit("minhash").alias("path"),
-                                 F.col("jaccard").alias("score")),
-        ))
-    if cfg.enable_simhash:
-        chains.append((
-            _sh_chain,
-            lambda sh: sh.select("id_l", "id_r", F.lit("simhash").alias("path"),
-                                 (1.0 - F.col("hamming_dist") / 64.0).alias("score")),
-        ))
-    if cfg.enable_substring:
-        chains.append((
-            _ss_chain,
-            lambda ss: ss.select("id_l", "id_r", F.lit("substring").alias("path"),
-                                 F.col("common_len").cast("double").alias("score")),
-        ))
+    chains = [chain for on, chain in ((cfg.enable_minhash, _mh_chain),
+                                      (cfg.enable_simhash, _sh_chain),
+                                      (cfg.enable_substring, _ss_chain)) if on]
     # max_workers=0 raises, so a run with every near-dup path off still
     # gets a (never used) one-thread pool
     with ThreadPoolExecutor(max_workers=max(1, len(chains))) as pool:
-        futs = [pool.submit(build) for build, _ in chains]
-        path_pairs = [sel(f.result()) for f, (_, sel) in zip(futs, chains)]
+        path_pairs = list(pool.map(lambda chain: chain(), chains))
 
     # --- union + clustering ---------------------------------------------------
-    def _all_pairs():
-        out = exact_pairs.select(
-            "id_l", "id_r", F.lit("exact").alias("path"), F.lit(1.0).alias("score")
-        )
-        for p in path_pairs:
-            out = out.unionByName(p)
-        return out
-
     # lazy: every input of the union is either checkpointed (cands,
     # sketches, exact_groups) or a cheap derivation of one; the single
     # consumer is the CC edge canonicalization inside the clusters stage,
     # which materializes the union exactly once.
-    pairs = runner.run("pairs", _all_pairs, lazy=True)
+    pairs = runner.run("pairs", lambda: functools.reduce(
+        DataFrame.unionByName, path_pairs,
+        _edges(exact_pairs, "exact", F.lit(1.0)),
+    ), lazy=True)
 
     def _clusters():
         # CC runs over the REP-LEVEL near-dup graph only; exact-dup members
@@ -496,7 +573,8 @@ def near_dup_pipeline(
             else None
         )
         rep_clusters = assign_clusters(
-            reps.select("id"), near, "id", checkpoint_dir=cc_dir
+            exact_groups.filter(F.col("id") == F.col("canonical_id")).select("id"),
+            near, "id", checkpoint_dir=cc_dir,
         )
         expanded = exact_groups.select("id", "canonical_id").join(
             rep_clusters.select(

@@ -19,23 +19,23 @@ Design (scale-first):
   uses for checkpoints). ``epoch`` is the micro-batch counter — the
   insertion-order clock that makes an age/LRU bound possible, mirroring
   the reference's bounded LRU dictionary (`src/dict.rs:50-63`).
-* **Per micro-batch**: exact-dedup the batch against the content-key store
-  (new key → the batch's min uid becomes canonical); for new reps, compute
-  shingles + fused band hashes with the batch pipeline's own sketch pass —
-  literally the same function, ``pipeline.sketches``, run with only the
-  MinHash outputs (identical config ⇒ identical candidate semantics);
-  candidate pairs = in-batch bucket pairs ∪ batch-vs-history band joins;
-  exact-Jaccard verify against the shingle store; emit
-  ``(id_l, id_r, path, score)`` edges to ``edges/``.
-* **Skew guard on the history join**: the batch-vs-history candidate join
-  emits |new postings| × |history postings| rows per band key, and the
-  history side grows every batch — the exact mega-bucket blow-up
-  ``_buckets.bucket_pairs`` caps in the batch paths. Band keys whose
-  TOTAL posting count (history + batch) exceeds ``max_bucket_size`` are
-  excluded from the join and audited to the ``band_audits`` store
-  (``action='dropped'``) — same exclude-and-audit contract; pairs inside
-  a hot band are still reachable through the other ``bands − 1`` keys of
-  each signature and the exact path.
+* **Per micro-batch**: the batch pipeline's own stages on a
+  ``_StageRunner`` (run id ``epoch<N>``), with the stores as history
+  inputs — ``pipeline.exact_stages`` groups the batch against the
+  ``content_keys`` store (a stored key keeps its canonical id; a new key's
+  canonical is the batch's min uid); ``pipeline.sketches`` sketches the
+  new reps (MinHash outputs only); ``pipeline.minhash_stages`` unions the
+  in-batch bucket pairs (oversized buckets salted, as in the batch
+  pipeline) with the batch-vs-history band join and verifies exact
+  Jaccard against the batch's and the stored shingles. Identical config
+  ⇒ identical candidate semantics. Edges ``(id_l, id_r, path, score)``
+  are appended to ``edges/``.
+* **Skew guard on the history join**: a band key the batch posts whose
+  TOTAL posting count (history + batch) exceeds ``max_bucket_size`` is
+  excluded from the history join and audited to ``band_audits`` as
+  ``dropped`` — "this epoch skipped the history join for this key";
+  salted in-batch buckets are audited as ``salted``. Why history is
+  excluded rather than salted: ``pipeline.minhash_stages``.
 * **Assignments are eventually-exact**: per-batch output assigns each row
   its exact-dup canonical; cluster structure over near-dup edges is
   recovered by ``compact_clusters`` — a batch connected-components job
@@ -53,11 +53,9 @@ Design (scale-first):
   dict's LRU eviction (an evicted text that reappears becomes a new
   canonical, exactly as a re-inserted LRU entry gets a fresh id).
 
-NULL doctrine: NULL text keys as '' (``md5(coalesce(text, ''))``) —
-consistent with the batch pipeline's ``exact_dup_groups`` /
-``normalize_text``. A raw ``md5(text)`` would produce a NULL content key,
-silently fall out of every null-unsafe equi-join, and append one duplicate
-store row per batch.
+NULL doctrine: NULL text keys as '' (``exactdup.exact_dup_groups``, as
+in the batch pipeline): a NULL content key would silently fall out of
+every null-unsafe equi-join and append one duplicate store row per batch.
 
 Restart/resume: all state is on disk; the streaming checkpoint dir
 (Spark's own) plus these stores make the job resumable after loss — the
@@ -68,14 +66,15 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from pyspark.errors import AnalysisException
-
 from .operators import minhash
 from .operators.components import assign_clusters
-from .pipeline import DedupConfig, sketches, with_turn_uid
+from .pipeline import (DedupConfig, _StageRunner, exact_stages, minhash_stages,
+                       sketches, with_turn_uid)
+from .session import job_description
 
 _STORE_SCHEMAS = {
     "content_keys": "content_key string, canonical_id string, epoch long",
@@ -99,12 +98,14 @@ def _empty_1part(spark, schema: str):
 
 
 def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame:
-    """Read a state store; an ABSENT store is empty, a BROKEN store raises.
+    """Read a state store; an ABSENT store is empty, a BROKEN store raises
+    (treating a mis-permissioned or corrupt store as empty history would
+    produce wrong, missed-duplicate output).
 
-    A bare ``except Exception`` here would silently treat a
-    mis-permissioned or corrupt store as empty history and produce wrong
-    (missed-duplicate) output; only the path-not-found case may mean
-    "no state yet".
+    The schema is known, so the read skips the inference job a plain
+    parquet read runs (one per store per micro-batch), and an empty dir
+    left by a crashed first write reads as empty. Partitioned rewrites
+    (``compact_state``'s bands) read the same way.
     """
     # empty stores COALESCE to one partition: createDataFrame([], schema)
     # spreads zero rows over defaultParallelism empty slices, and every
@@ -114,14 +115,7 @@ def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame:
     path = _store_path(state_dir, name)
     if not os.path.exists(path):
         return _empty_1part(spark, schema)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        # partitionBy-rewritten stores read fine; an empty dir left by a
-        # crashed first write is the one benign AnalysisException
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return _empty_1part(spark, schema)
-        raise
+    return spark.read.schema(schema).parquet(path)
 
 
 def _read_store_opt(spark, state_dir: str, name: str, schema: str) -> DataFrame | None:
@@ -164,171 +158,56 @@ def process_batch(
     ``(uid, text)``. Returns counters (for tests/monitoring); appends to
     the state stores and the ``edges``/``assignments`` logs.
 
-    The ``rows``/``new_keys``/``edges`` counters are observed on frames the
-    batch materializes anyway (the batch pin, the new-key pin, the edges
-    append), so they are exact on every call at no extra job.
+    The counters cost no job: ``rows`` and ``new_keys`` are the ``base``
+    and ``sketches`` stage rows (one sketch per new content key), ``edges``
+    is observed on the edges append.
     ``collect_stats`` is accepted and ignored (``perfbench`` still passes it).
     """
     spark = batch_df.sparkSession
+    sc = spark.sparkContext
     os.makedirs(state_dir, exist_ok=True)
     epoch = _next_epoch(state_dir)
-    from .session import job_description
-
-    with job_description(spark.sparkContext, f"stream:epoch{epoch}"):
-        return _process_batch_inner(
-            spark, batch_df, state_dir, epoch, w, num_perm, bands, rows,
-            threshold, max_bucket_size, seed,
-        )
-
-
-def _pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """``df`` pinned (eager local checkpoint) and its row count, observed
-    on the checkpoint job itself — no count job of its own."""
-    obs = Observation()
-    pinned = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-        eager=True
-    )
-    return pinned, obs.get["rows"]
-
-
-def _process_batch_inner(
-    spark, batch_df, state_dir, epoch, w, num_perm, bands, rows,
-    threshold, max_bucket_size, seed,
-) -> dict:
-    batch, n_rows = _pin_counted(batch_df.select("uid", "text"))
-
-    # --- exact path vs history ------------------------------------------
-    keyed = batch.select(
-        "uid", F.md5(F.coalesce("text", F.lit(""))).alias("content_key")
-    )
-    store_keys = _read_store_opt(
-        spark, state_dir, "content_keys", _STORE_SCHEMAS["content_keys"]
-    )
-    batch_min = keyed.groupBy("content_key").agg(F.min("uid").alias("batch_min"))
-    if store_keys is None:
-        # first batch of a fresh state dir: no history ⇒ every batch-min
-        # key is new and canonical (the merge join below would left-join
-        # an empty frame and coalesce to batch_min anyway)
-        new_keys, n_new_keys = _pin_counted(batch_min.select(
-            "content_key", F.col("batch_min").alias("canonical_id")
-        ))
-        canon = new_keys
-    else:
-        merged = batch_min.join(
-            store_keys.select("content_key", "canonical_id"), "content_key", "left"
-        )
-        new_keys, n_new_keys = _pin_counted(
-            merged.filter(F.col("canonical_id").isNull()).select(
-                "content_key", F.col("batch_min").alias("canonical_id")
-            )
-        )
-        canon = merged.select(
-            "content_key",
-            F.coalesce("canonical_id", "batch_min").alias("canonical_id"),
-        )
-    assignments = keyed.join(canon, "content_key").select(
-        "uid", "canonical_id", F.lit("exact").alias("path")
-    )
-
-    # --- near-dup path: new reps only -----------------------------------
-    # one rep per NEW content key (history reps are already in the stores)
-    reps = (
-        keyed.join(new_keys.select("content_key", "canonical_id"), "content_key")
-        .filter(F.col("uid") == F.col("canonical_id"))
-        .join(batch, "uid")
-        .select("uid", "text")
-    )
-    # the batch pipeline's sketch pass with only the MinHash outputs: one
-    # pin holds shingles (store + verify side) and fused band hashes; the
-    # band explode below re-derives from it in codegen for every consumer
     cfg = DedupConfig(
-        w=w, num_perm=num_perm, bands=bands, rows=rows, seed=seed,
-        enable_simhash=False, enable_substring=False,
+        w=w, num_perm=num_perm, bands=bands, rows=rows,
+        jaccard_threshold=threshold, max_bucket_size=max_bucket_size,
+        neighbor_window=None, enable_simhash=False, enable_substring=False,
+        seed=seed,
     )
-    sk = sketches(reps, cfg, "uid", "text").localCheckpoint(eager=True)
-    sh = sk.select("id", "shingles")
-    banded = minhash.explode_band_hashes(sk.select("id", "bands"))
+    runner = _StageRunner(spark, None, f"epoch{epoch}")
+    # every job of the batch, store reads included, carries the epoch label
+    # (the stages relabel their own jobs stage:<name>)
+    with job_description(sc, f"stream:epoch{epoch}"):
+        hist = {
+            name: _read_store_opt(spark, state_dir, name, schema)
+            for name, schema in _STORE_SCHEMAS.items()
+        }
+        base = runner.run("base", lambda: batch_df.select(
+            F.col("uid").alias("id"), "text"), local_only=True)
+        groups, reps = exact_stages(runner, base, hist["content_keys"])
+        sk = runner.run("sketches", lambda: sketches(reps, cfg))
+        pairs, audit, n_audit = minhash_stages(runner, sk, cfg, hist["bands"],
+                                               hist["shingles"])
 
-    # in-batch candidates: one-shuffle bucket pairs (capped + audited)
-    new_pairs, batch_audit = minhash.lsh_candidate_pairs(
-        banded, max_bucket_size=max_bucket_size
-    )
-
-    # batch-vs-history candidates: equi-join new postings against the store,
-    # EXCLUDING band keys whose total posting count (history + batch)
-    # exceeds the cap — the join would otherwise emit |new|x|hist| rows per
-    # hot key, growing with every micro-batch. Excluded keys are audited.
-    band_store = _read_store_opt(spark, state_dir, "bands", _STORE_SCHEMAS["bands"])
-    key_counts = (
-        banded.select("band_idx", "band_hash")
-        if band_store is None
-        else band_store.select("band_idx", "band_hash").unionByName(
-            banded.select("band_idx", "band_hash")
-        )
-    ).groupBy("band_idx", "band_hash").agg(F.count("*").alias("bucket_size"))
-    hot_keys, n_hot = _pin_counted(
-        key_counts.filter(F.col("bucket_size") > max_bucket_size)
-    )
-    hist_audit = hot_keys.select(
-        "band_idx", "band_hash", "bucket_size",
-        F.lit("dropped").alias("action"), F.lit(epoch).alias("epoch"),
-    )
-    if band_store is None:
-        cand = new_pairs.select("id_l", "id_r")
-    else:
-        hist_pairs = (
-            banded.join(hot_keys.select("band_idx", "band_hash"),
-                        ["band_idx", "band_hash"], "left_anti")
-            .join(
-                band_store.select("band_idx", "band_hash", F.col("id").alias("hist_id")),
-                ["band_idx", "band_hash"],
-            )
-            .select(
-                F.least("id", "hist_id").alias("id_l"),
-                F.greatest("id", "hist_id").alias("id_r"),
-            )
-            .filter(F.col("id_l") != F.col("id_r"))
-            .dropDuplicates(["id_l", "id_r"])
-        )
-        cand = new_pairs.select("id_l", "id_r").unionByName(hist_pairs)
-
-    # verify against batch + historical shingles
-    shingle_store = _read_store_opt(
-        spark, state_dir, "shingles", _STORE_SCHEMAS["shingles"]
-    )
-    all_sh = sh.select(F.col("id"), "shingles")
-    if shingle_store is not None:
-        all_sh = all_sh.unionByName(shingle_store.select("id", "shingles"))
-    verified = minhash.verify_jaccard(cand, all_sh, threshold=threshold)
     # the append is the edges' only evaluation: it records their count
     n_edges = Observation()
-    edges = verified.select(
-        "id_l", "id_r", F.lit("minhash").alias("path"),
-        F.col("jaccard").alias("score"),
-    ).observe(n_edges, F.count(F.lit(1)).alias("rows"))
-
-    # --- persist ---------------------------------------------------------
-    ep = F.lit(epoch).cast("long")
+    ep = F.lit(epoch).cast("long").alias("epoch")
     writes = [
-        ("content_keys", new_keys.withColumn("epoch", ep)),
-        ("bands", banded.select("band_idx", "band_hash", "id").withColumn("epoch", ep)),
-        ("shingles", sh.withColumn("epoch", ep)),
-        ("edges", edges),
-        ("assignments", assignments),
+        ("content_keys", groups.filter(
+            F.col("new") & (F.col("id") == F.col("canonical_id"))
+        ).select("content_key", "canonical_id", ep)),
+        ("bands", minhash.explode_band_hashes(sk.select("id", "bands")).select(
+            "band_idx", "band_hash", "id", ep
+        )),
+        ("shingles", sk.select("id", "shingles", ep)),
+        ("edges", pairs.observe(n_edges, F.count(F.lit(1)).alias("rows"))),
+        ("assignments", groups.select(
+            F.col("id").alias("uid"), "canonical_id", F.lit("exact").alias("path")
+        )),
     ]
-    # Audit rows exist only when some band key is over the cap. Every
-    # in-batch bucket is a subset of the same key's total (history+batch)
-    # bucket, so batch_audit nonempty ⇒ hot_keys nonempty — the row count
-    # observed on the hot_keys checkpoint decides, with no probe job.
-    if n_hot:
-        audits = batch_audit.select(
-            "band_idx",
-            "band_hash",
-            "bucket_size",
-            F.concat(F.lit("in_batch_"), "action").alias("action"),
-            F.lit(epoch).alias("epoch"),
-        ).unionByName(hist_audit)
-        writes.append(("band_audits", audits))
+    # audit rows exist only when a bucket was salted or a history join
+    # skipped: counted on the candidate stage's own pins, no probe job
+    if n_audit:
+        writes.append(("band_audits", audit.withColumn("epoch", F.lit(epoch))))
 
     # The store writes are independent within a batch (distinct append
     # paths, no read-after-write); submitting them from a small driver
@@ -342,24 +221,19 @@ def _process_batch_inner(
     # the orphaned postings still join as history. Writing the dictionary
     # before its references makes that state unreachable (the converse —
     # keys without postings — only costs recall on the crashed batch).
-    from .session import job_description
-
     def _write(item):
         name, df_ = item
-        with job_description(
-            spark.sparkContext, f"stream:epoch{epoch}:write:{name}"
-        ):
+        with job_description(sc, f"stream:epoch{epoch}:write:{name}"):
             df_.write.mode("append").parquet(_store_path(state_dir, name))
-
-    from concurrent.futures import ThreadPoolExecutor
 
     _write(writes[0])  # content_keys — the commit-order anchor
     with ThreadPoolExecutor(max_workers=3) as pool:
         list(pool.map(_write, writes[1:]))
+    stage_rows = {m[1]: m[2] for m in runner.metrics}
     return {
         "epoch": epoch,
-        "rows": n_rows,
-        "new_keys": n_new_keys,
+        "rows": stage_rows["base"],
+        "new_keys": stage_rows["sketches"],
         "edges": n_edges.get["rows"],
     }
 
@@ -465,7 +339,9 @@ def compact_clusters(
     (or on demand); equivalent to re-running the batch pipeline on the
     union of all micro-batches at identical config.
     """
-    assigns = spark.read.parquet(_store_path(state_dir, "assignments"))
+    assigns = spark.read.schema("uid string, canonical_id string, path string").parquet(
+        _store_path(state_dir, "assignments")
+    )
     exact_edges = assigns.filter(F.col("uid") != F.col("canonical_id")).select(
         F.col("canonical_id").alias("id_l"), F.col("uid").alias("id_r")
     )

@@ -64,6 +64,7 @@ def test_incremental_state_counters(spark, turn_batches, tmp_path):
     # fresh state dir: the counters match the batch and the edges store
     assert c0["rows"] == len(turn_batches[0])
     assert c0["edges"] == spark.read.parquet(f"{state}/edges").count()
+    assert c0["new_keys"] == spark.read.parquet(f"{state}/content_keys").count()
     # replay batch 0 verbatim: zero new keys, zero new edges
     c_replay = st.process_batch(df0, state)
     assert c_replay["rows"] == c0["rows"]
@@ -118,6 +119,50 @@ def test_streaming_history_join_cap_and_audit(spark, tmp_path):
     # pairs through non-hot keys still verified (recall via band redundancy)
     edges = spark.read.parquet(f"{state}/edges")
     assert edges.count() > 0
+
+
+def _six_variants():
+    """The six near-identical texts of the history-join test above."""
+    return [
+        (f"u{i}", "alpha beta gamma delta epsilon zeta eta theta iota "
+                  f"kappa lambda mu nu xi omicron pi rho variant{i}")
+        for i in range(6)
+    ]
+
+
+def test_streaming_salts_oversized_batch_buckets(spark, tmp_path):
+    """In-batch buckets over the cap are salted (the batch pipeline's one
+    policy), not dropped; with no history there is no history join, so
+    nothing is audited as dropped, and the salted chain keeps the six
+    near-duplicates in one cluster."""
+    state = str(tmp_path / "state")
+    st.process_batch(
+        spark.createDataFrame(_six_variants(), "uid string, text string"),
+        state, max_bucket_size=4,
+    )
+    actions = {
+        r.action for r in spark.read.parquet(f"{state}/band_audits").collect()
+    }
+    assert actions == {"salted"}
+    clusters = _clusters_as_partition(st.compact_clusters(spark, state))
+    assert clusters == {frozenset(f"u{i}" for i in range(6))}
+
+
+def test_streaming_skew_guard_counts_only_batch_keys(spark, tmp_path):
+    """A key hot in history is audited only in an epoch whose batch posts
+    it: a batch of unrelated text appends no ``dropped`` rows."""
+    texts = _six_variants()
+    state = str(tmp_path / "state")
+    mk = lambda rs: spark.createDataFrame(rs, "uid string, text string")
+    st.process_batch(mk(texts[:3]), state, max_bucket_size=4)
+    st.process_batch(mk(texts[3:]), state, max_bucket_size=4)
+    st.process_batch(
+        mk([("z", "an unrelated sentence about something else entirely")]),
+        state, max_bucket_size=4,
+    )
+    audits = spark.read.parquet(f"{state}/band_audits")
+    assert audits.filter(F.col("epoch") == 1).count() > 0
+    assert audits.filter(F.col("epoch") == 2).count() == 0
 
 
 def test_compact_state_mid_stream(spark, turn_batches, tmp_path):
