@@ -38,14 +38,16 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def _explode_pairs(
-    grouped: DataFrame, payload_cols: list[str], neighbor_window: int | None
+    grouped: DataFrame, payload_cols: list[str], neighbor_window: int | None,
+    n_open: str | None = None,
 ) -> DataFrame:
     """Pair explosion over a ``ms`` (sorted member-struct array) column as
     TWO Generate operators (posexplode the left member, explode a slice for
     its right neighbors) — codegen-friendly. The flatten(transform(…))
     formulation builds the same pairs via interpreted higher-order lambdas:
     3× slower on a 6M-row band table. ``neighbor_window=K`` bounds each
-    member to its next K sorted neighbors (band graph), else all C(m,2)."""
+    member to its next K sorted neighbors (band graph), else all C(m,2).
+    Only the first ``n_open`` (a column) members open a pair, if given."""
     span = (
         F.greatest(F.size("ms") - F.col("i") - 1, F.lit(0))
         if neighbor_window is None
@@ -54,7 +56,8 @@ def _explode_pairs(
             F.lit(neighbor_window),
         )
     )
-    left = grouped.select("ms", F.posexplode("ms").alias("i", "l"))
+    opens = "ms" if n_open is None else F.slice("ms", 1, F.col(n_open))
+    left = grouped.select("ms", F.posexplode(opens).alias("i", "l"))
     return left.select(
         F.col("l"), F.explode(F.slice("ms", F.col("i") + 2, span)).alias("r")
     ).select(
@@ -76,6 +79,7 @@ def bucket_pairs(
     salt_oversized: bool = False,
     order_col: str | None = None,
     oversized: Observation | None = None,
+    history: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """``(pairs, audit)`` — pairs has ``id_l, id_r`` (+ ``<payload>_l/_r``);
     audit has ``(*key_cols, bucket_size, action)`` for every bucket over
@@ -92,9 +96,22 @@ def bucket_pairs(
     canonicalize ``id_l``/``id_r`` before any (id_l, id_r) dedup.
 
     ``oversized``: an unnamed ``Observation`` that receives ``n``, the
-    number of buckets over the cap, from the salting checkpoint — so a
-    caller learns whether ``audit`` has rows without a probe job (only
-    with ``salt_oversized``; otherwise nothing is observed).
+    number of audit rows, from the salting checkpoint — so a caller learns
+    whether ``audit`` has rows without a probe job (only with
+    ``salt_oversized``; otherwise nothing is observed).
+
+    ``history``: stored postings (the stream's ``bands`` store). Only keys
+    ``df`` posts are read (a semi-join); the union with ``df`` reads a
+    store, so it is pinned whatever ``materialize`` says. History counts
+    toward ``bucket_size``; batch members sort first and alone open pairs:
+    new × (new + history) rows, never history × history, with
+    ``id_l < id_r`` and no self pairs. A key whose total is over the cap
+    drops its history, audited ``dropped`` with the total; its batch
+    members are then paired, or salted (or dropped) with the batch-only
+    size. History is dropped, not salted, because it grows every batch:
+    salting would re-read a hot key's whole stored list in every later
+    batch that posts it, while those members are already connected, and
+    reachable via other keys and exact dups.
 
     ``neighbor_window=K`` bounds pair generation to each member's next K
     neighbors in the sorted bucket (a K-wide band graph) instead of all
@@ -109,6 +126,15 @@ def bucket_pairs(
     oracle test pins it ≥ 0.99. ``None`` = exact all-pairs semantics.
     """
     payload_cols = payload_cols or []
+    cap = max_bucket_size
+    lead = [F.col(order_col).alias(order_col)] if order_col else []
+    if history is not None:
+        cols = [*key_cols, id_col, *payload_cols, *filter(None, [order_col])]
+        hist = history.select(*cols).join(df.select(*key_cols), key_cols, "left_semi")
+        df = df.select(*cols, F.lit(False).alias("__old")).unionByName(
+            hist.withColumn("__old", F.lit(True))
+        )
+        lead.insert(0, F.col("__old").alias("__old"))  # batch members first
     # The posting table is scanned below for bucket-size counts, the prune
     # join, and (when salting) the oversized join. materialize=True
     # computes it once (right when the upstream UDF is the expensive part —
@@ -116,28 +142,29 @@ def bucket_pairs(
     # huge but derives cheaply from an already-materialized parent (band
     # explodes over a checkpointed signature/fp table: checkpointing the
     # bands×-exploded table measured slower than recomputing it).
-    if materialize:
+    if materialize or history is not None:
         df = df.localCheckpoint(eager=True)
-    lead = [F.col(order_col).alias(order_col)] if order_col else []
     member = F.struct(
         *lead,
         F.col(id_col).alias("id"),
         *[F.col(c).alias(c) for c in payload_cols],
     )
-    # Prune singleton buckets BEFORE collecting member arrays. With
-    # high-entropy keys (64-bit LSH band hashes) almost every bucket has one
-    # member; collect_list over those allocates hundreds of millions of tiny
-    # arrays and spills. The count agg shuffles compact (key, n) rows, the
-    # surviving multi-member key set is small (O(duplicate pairs)) so AQE
-    # picks a broadcast join, and only the pruned rows pay the list agg.
-    # Singletons (the overwhelming majority under high-entropy keys) are
-    # useless to every consumer below — prune them INSIDE the agg output,
-    # so the surviving counts table is O(duplicate content), not O(corpus).
+    # Prune singleton buckets INSIDE the count agg, BEFORE collecting
+    # member arrays. With high-entropy keys (64-bit LSH band hashes) almost
+    # every bucket has one member; collect_list over those allocates
+    # hundreds of millions of tiny arrays and spills. The surviving counts
+    # table is O(duplicate content), not O(corpus), so AQE can broadcast it
+    # into the prune join and only the pruned rows pay the list agg.
+    n_new = [] if history is None else [F.count_if(~F.col("__old")).alias("n_new")]
     counts = (
         df.groupBy(*key_cols)
-        .agg(F.count("*").alias("bucket_size"))
+        .agg(F.count("*").alias("bucket_size"), *n_new)
         .filter(F.col("bucket_size") >= 2)
     )
+    # total and batch-only sizes; hot = over the cap with history
+    total = F.col("bucket_size")
+    new = total if history is None else F.col("n_new")
+    hot = (total > cap) & (total > new)
     if salt_oversized:
         # The pruned counts table is tiny; checkpointing it lets the salted
         # branch below (and the caller's audit stage) reuse one computation
@@ -145,38 +172,49 @@ def bucket_pairs(
         # also counts the oversized buckets on the way through, so deciding
         # whether to salt costs no probe job.
         n_over = oversized or Observation()
+        n_salted = F.count_if(new > cap)
         counts = counts.observe(
-            n_over, F.count_if(F.col("bucket_size") > max_bucket_size).alias("n")
+            n_over, n_salted.alias("salted"), (n_salted + F.count_if(hot)).alias("n")
         ).localCheckpoint(eager=True)
-    over = counts.filter(F.col("bucket_size") > max_bucket_size)
+    over = counts.filter(new > cap)
     audit = over.select(
         *key_cols,
-        "bucket_size",
+        new.alias("bucket_size"),
         F.lit("salted" if salt_oversized else "dropped").alias("action"),
     )
-    multi = counts.filter(F.col("bucket_size") <= max_bucket_size).select(*key_cols)
+    if history is None:
+        multi = counts.filter(total <= cap).select(*key_cols)
+        members, n_open = df.join(multi, key_cols), []
+    else:
+        audit = counts.filter(hot).select(
+            *key_cols, "bucket_size", F.lit("dropped").alias("action")
+        ).unionByName(audit)
+        # under the cap: every posting; over it: the batch's own, if 2..cap
+        multi = counts.filter((total <= cap) | ((new >= 2) & (new <= cap)))
+        members = df.join(multi, key_cols).filter((total <= cap) | ~F.col("__old"))
+        n_open = ["n_new"]  # the batch members, sorted first, open the pairs
     ok = (
-        df.join(multi, key_cols)
-        .groupBy(*key_cols)
+        members.groupBy(*key_cols, *n_open)
         .agg(F.collect_list(member).alias("ms"))
         # sorted by the struct's first field: id (⇒ id_l < id_r), or
         # order_col when set (⇒ sorted-neighborhood pairing)
-        .select(F.array_sort("ms").alias("ms"))
+        .select(F.array_sort("ms").alias("ms"), *n_open)
     )
-    pairs = _explode_pairs(ok, payload_cols, neighbor_window)
+    pairs = _explode_pairs(ok, payload_cols, neighbor_window, *n_open)
 
     # The salted branch adds two more scans of the posting table (the
     # oversized join + the representative agg). Hot buckets are the
     # exception, not the rule — build the branch only when the counts
     # checkpoint saw an oversized bucket.
-    if salt_oversized and n_over.get["n"]:
+    if salt_oversized and n_over.get["salted"]:
         # Salt-and-keep: split each hot bucket into ceil(size/cap) hash
         # sub-buckets (AQE-splittable agg on the wider key; each task sees
         # ~cap members whp), pair within sub-buckets, then CHAIN the
         # per-sub-bucket min members within the original key. Connectivity
         # of the hot bucket is fully preserved; edge count is O(size).
-        n_sub = F.ceil(F.col("bucket_size") / F.lit(max_bucket_size))
-        salted = df.join(over, key_cols).withColumn(
+        n_sub = F.ceil(new / F.lit(cap))
+        batch = df if history is None else df.filter(~F.col("__old"))
+        salted = batch.join(over, key_cols).withColumn(
             "__salt", F.pmod(F.xxhash64(id_col), n_sub)
         )
         sub = (
@@ -198,5 +236,14 @@ def bucket_pairs(
             # output regardless of sub-bucket count
             _explode_pairs(reps, payload_cols, neighbor_window=1)
         )
+
+    if history is not None:
+        # batch-first order breaks id order: swap both sides where needed,
+        # and drop the self pair of an id in both batch and history
+        swap = F.col("id_l") > F.col("id_r")
+        pairs = pairs.filter(F.col("id_l") != F.col("id_r")).select(*[
+            F.when(swap, F.col(f"{c}_{o}")).otherwise(F.col(f"{c}_{s}")).alias(f"{c}_{s}")
+            for s, o in (("l", "r"), ("r", "l")) for c in ["id", *payload_cols]
+        ])
 
     return pairs, audit

@@ -19,10 +19,10 @@ Scale notes (the parts that matter at 10^12 turns):
   singleton buckets pruned by a compact count-agg before any member list is
   collected — see ``_buckets.bucket_pairs``). Boilerplate text (the
   reference's Jugemu/"padpadpad" corpus, `src/lib.rs:104-105`) creates
-  mega-buckets; buckets larger than ``max_bucket_size`` are excluded from
-  the O(m²) pair expansion with an audit count (pairs inside a mega-bucket
-  are near-certainly covered by other bands or by the exact-dup pass; the
-  drop is logged, not silent — see ``lsh_candidate_pairs`` return).
+  mega-buckets; buckets larger than ``max_bucket_size`` are salted (hashed
+  into chained ~cap-sized sub-buckets) or excluded from the O(m²)
+  expansion, per ``salt_oversized``, and audited either way — never
+  silent (see ``lsh_candidate_pairs`` return).
 * Verification joins the (small) candidate-pair table back to per-doc
   shingle arrays — 2 hash joins, broadcast when the pair table is small.
 
@@ -538,6 +538,7 @@ def lsh_candidate_pairs(
     neighbor_window: int | None = None,
     salt_oversized: bool = False,
     oversized=None,
+    history: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Bucket pairs on (band_idx, band_hash) → distinct pairs (id_l < id_r).
 
@@ -545,11 +546,11 @@ def lsh_candidate_pairs(
     ``_buckets.bucket_pairs``) instead of window-count + self-join — the
     posting table is shuffled once, not three times. Returns
     ``(pairs, skew_audit)``; buckets with more than ``max_bucket_size``
-    members are excluded from the O(m²) expansion and reported in
-    ``skew_audit(band_idx, band_hash, bucket_size)`` — never dropped
-    silently. A 2000-member bucket alone would emit 2M pairs; at 10^12
-    turns that is the difference between a job and an outage.
-    ``oversized`` is passed to ``bucket_pairs``.
+    members are salted (``salt_oversized``) or excluded from the O(m²)
+    expansion, and reported in ``skew_audit(band_idx, band_hash,
+    bucket_size, action)`` — never dropped silently. A 2000-member bucket
+    alone would emit 2M pairs. ``oversized`` and ``history`` (stored
+    postings, paired against ``bands_df`` only) go to ``bucket_pairs``.
     """
     from ._buckets import bucket_pairs
 
@@ -561,6 +562,7 @@ def lsh_candidate_pairs(
         materialize=False,  # 32×-exploded band table: recompute beats storing
         salt_oversized=salt_oversized,
         oversized=oversized,
+        history=history,
     )
     return raw.dropDuplicates(["id_l", "id_r"]), audit
 

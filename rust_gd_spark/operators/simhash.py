@@ -190,7 +190,8 @@ def simhash_candidate_pairs(
     size, so the raw pair stream is NOT deduplicated here — the cheap
     JVM-side Hamming filter in ``verify_hamming`` runs first and the dedup
     shuffle sees only survivors. ONE shuffle of the band table
-    (``_buckets.bucket_pairs``); oversized buckets are excluded + audited.
+    (``_buckets.bucket_pairs``); oversized buckets are salted
+    (``salt_oversized=True``) or excluded (``False``), and audited.
     """
     from ._buckets import bucket_pairs
 

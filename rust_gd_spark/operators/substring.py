@@ -146,8 +146,12 @@ def substring_candidate_pairs(
     """Inverted-index bucket pairs on shared fingerprints → distinct pairs.
 
     ONE shuffle of the posting table (``_buckets.bucket_pairs``).
-    Fingerprints present in more than ``max_posting_size`` docs are
-    excluded + audited (boilerplate guard, same policy as LSH bands).
+    Fingerprints present in more than ``max_posting_size`` docs are salted
+    (``salt_oversized=True``) or excluded (``False``), and audited either
+    way (boilerplate guard, same policies as LSH bands). The posting
+    explode is not pinned: both callers pass an already pinned ``fps``
+    (the pipeline's ``sketches`` stage, ``substring_near_dup_pairs``' winnow
+    table), and the explode re-derives from it in codegen.
     """
     from ._buckets import bucket_pairs
 
@@ -157,6 +161,7 @@ def substring_candidate_pairs(
         ["fp"],
         max_bucket_size=max_posting_size,
         neighbor_window=neighbor_window,
+        materialize=False,
         salt_oversized=salt_oversized,
     )
     return raw.dropDuplicates(["id_l", "id_r"]), audit

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from .operators import exactdup, minhash, simhash, substring
 from .operators.components import assign_clusters
+from .session import job_description
 
 
 @dataclass
@@ -179,27 +180,18 @@ class _StageRunner:
         """``lazy=True`` marks a stage whose output is consumed at most
         once downstream (verify-pair frames, the pair union) or is an
         optional side-product (skew-audit frames): with no checkpoint_dir
-        it is returned unmaterialized — the single consumer's action
-        evaluates it exactly once from the already-checkpointed upstream
-        stages, and an unread audit costs zero jobs (guide §1.2: don't
-        compute what you throw away — every removed ``localCheckpoint``
-        barrier is one fewer driver round-trip + eager job). Its ``rows``
-        is NULL. With a checkpoint_dir every stage is written to parquet,
-        so resumed runs keep their parquet and the resume contract is
-        unchanged; a stage whose parquet is already committed is read back
-        with NULL ``rows``.
+        it is returned unmaterialized, so its one consumer evaluates it
+        once from the checkpointed upstream stages and an unread audit
+        costs no job; its ``rows`` is NULL. With a checkpoint_dir every
+        stage is written to parquet, and a committed one is read back with
+        NULL ``rows``.
 
-        ``local_only=True`` marks a REUSE point that is worth pinning in
-        executor memory interactively but not worth a full parquet write
-        in resume mode (the ``base`` stage: id-hashed corpus text — in
-        resume mode downstream stages inline it, exactly the pre-round-6
-        plan shape).
+        ``local_only=True`` marks a reuse point worth pinning in executor
+        memory but not worth a parquet write in resume mode (the ``base``
+        stage: resume mode inlines it).
 
         Every job the stage submits — including eager sub-jobs of a lazy
-        ``build()`` (internal checkpoints) — runs under the label
-        ``stage:<name>`` (guide §1.5)."""
-        from .session import job_description
-
+        ``build()`` (internal checkpoints) — runs under ``stage:<name>``."""
         if self.dir is not None and local_only:
             # inline in resume mode — not a materialized stage, so it has
             # no metrics row (a fully-resumed run stays all-resumed)
@@ -292,9 +284,6 @@ def exact_stages(
     return exact_groups, reps
 
 
-_BAND_KEY = ["band_idx", "band_hash"]
-
-
 def minhash_stages(
     runner: _StageRunner,
     sk: DataFrame,
@@ -305,69 +294,29 @@ def minhash_stages(
     """The MinHash candidate, skew-audit and verify stages over the pinned
     sketch frame ``sk(id, shingles, bands)``: ``(pairs, audit, n_audit)``,
     pairs as edge rows scored by Jaccard. Candidates are
-    ``minhash.lsh_candidate_pairs`` over the band postings (oversized
-    buckets salted) plus, with ``bands_hist(band_idx, band_hash, id)``, the
-    batch-vs-history band join; ``minhash.verify_jaccard`` checks them
-    against ``sk``'s shingles plus ``shingles_hist(id, shingles)``. ``audit`` lists the salted
-    buckets and the keys the history join skipped (``dropped``);
-    ``n_audit``, its row count from the stage's own pins (None if the
-    candidate stage was resumed), lets a caller append it only when
-    non-empty without a probe job.
-
-    Skew guard: the history join emits |new| × |history| postings per key,
-    and history grows every batch, so a key whose TOTAL posting count
-    exceeds the cap is excluded from it (reachable still through the other
-    ``bands − 1`` keys and the exact path). Salting there instead would
-    re-read a hot key's whole stored posting list every batch. Only the
-    history postings of keys the batch posts are read (a semi-join): no
-    batch aggregates all of history, and a key is audited only in an
-    epoch that skipped its join.
+    ``minhash.lsh_candidate_pairs`` over the band postings, with
+    ``bands_hist(band_idx, band_hash, id)`` as its ``history``
+    (``_buckets.bucket_pairs`` owns the skew policy for both: which keys
+    are salted and which drop their history); ``minhash.verify_jaccard``
+    checks them against ``sk``'s shingles plus ``shingles_hist(id,
+    shingles)``. ``n_audit``, the audit's row count observed on the
+    candidates' own pins (None if the candidate stage was resumed), lets a
+    caller append the audit only when non-empty without a probe job.
     """
-    cap = cfg.max_bucket_size
     # the band explode re-derives from the pinned sketch frame in codegen
-    # for every reader (bucket_pairs' count agg and prune join, the
-    # history join): never the signature kernel
+    # for every reader (bucket_pairs' count agg and prune join, or its
+    # history union pin): never the signature kernel
     banded = minhash.explode_band_hashes(sk.select("id", "bands"))
     n_audit: list = []
 
     def _cands():
-        salted = Observation()
+        oversized = Observation()
         pairs, audit = minhash.lsh_candidate_pairs(
-            banded, cap, neighbor_window=cfg.neighbor_window,
-            salt_oversized=True, oversized=salted,
+            banded, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
+            salt_oversized=True, oversized=oversized, history=bands_hist,
         )
-        pairs = pairs.select("id_l", "id_r")
-        n = salted.get["n"]
-        if bands_hist is not None:
-            keys = banded.select(*_BAND_KEY)
-            hist = bands_hist.select(*_BAND_KEY, "id").join(keys, _BAND_KEY, "left_semi")
-            n_hot = Observation()
-            hot = (
-                hist.select(*_BAND_KEY, F.lit(1).alias("h"))
-                .unionByName(keys.withColumn("h", F.lit(0)))
-                .groupBy(*_BAND_KEY)
-                .agg(F.count("*").alias("bucket_size"), F.sum("h").alias("n_hist"))
-                .filter((F.col("bucket_size") > cap) & (F.col("n_hist") > 0))
-                .observe(n_hot, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            n += n_hot.get["n"]
-            hist_pairs = (
-                banded.join(hot.select(*_BAND_KEY), _BAND_KEY, "left_anti")
-                .join(hist.withColumnRenamed("id", "hist_id"), _BAND_KEY)
-                .select(
-                    F.least("id", "hist_id").alias("id_l"),
-                    F.greatest("id", "hist_id").alias("id_r"),
-                )
-                .filter(F.col("id_l") != F.col("id_r"))
-                .dropDuplicates(["id_l", "id_r"])
-            )
-            pairs = pairs.unionByName(hist_pairs)
-            audit = audit.unionByName(
-                hot.select(*_BAND_KEY, "bucket_size", F.lit("dropped").alias("action"))
-            )
-        n_audit.append(n)
-        return pairs, audit
+        n_audit.append(oversized.get["n"])
+        return pairs.select("id_l", "id_r"), audit
 
     # lazy: the verify is the candidates' only reader
     cand, audit = _staged_candidates(runner, "minhash", _cands, lazy=True)
@@ -436,12 +385,9 @@ def near_dup_pipeline(
     # a 64-bit collision can only merge two clusters, never corrupt ids
     # (same contract as assign_clusters).
     #
-    # The keyed corpus is pinned ONCE (guide §2.4/§1.2): exact_groups,
-    # reps and the final id join-back all read it, where the previous
-    # shape re-evaluated the caller's plan (a full input scan, often with
-    # the caller's own window/shuffle upstream) three times per run.
-    # local_only: in resume mode a parquet write of the whole corpus text
-    # is not worth the reuse — stages inline it exactly as before.
+    # The keyed corpus is pinned ONCE: exact_groups, reps, the substring
+    # verify and the id join-back read it instead of re-evaluating the
+    # caller's plan (local_only: resume mode inlines it).
     keyed = runner.run(
         "base",
         lambda: src.select(
@@ -734,7 +680,9 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
     n_refs)`` and ``deviations(conv_id, chunk_idx, base_id, deviation,
     last_chunk_pad)`` — together lossless (reconstruct = deviations ⋈ bases
     → gd_reconstruct). Reference analogue: the packed record stream
-    `src/gd_byte_unit.rs:78-98`, as columnar tables."""
+    `src/gd_byte_unit.rs:78-98`, as columnar tables. Its jobs (the decompose
+    pin, both table writes) and ``read_gd_outputs``' run under
+    ``gd:store:<run_id>``."""
     from .gd.spark import assign_base_ids
 
     base = os.path.join(out_dir, run_id)
@@ -744,16 +692,17 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
     # at half-written tables
     if os.path.exists(manifest_path):
         os.remove(manifest_path)
-    # both tables derive from the same chunks: pin them once (at the
-    # width the upstream shuffle left them) so the decompose kernel runs
-    # once per archive, not once per table write
-    bases, with_id = assign_base_ids(chunks.localCheckpoint(eager=True))
     paths = {"bases": os.path.join(base, "bases"),
              "deviations": os.path.join(base, "deviations")}
-    bases.write.mode("overwrite").parquet(paths["bases"])
-    with_id.select(
-        "conv_id", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
-    ).write.mode("overwrite").parquet(paths["deviations"])
+    with job_description(chunks.sparkSession.sparkContext, f"gd:store:{run_id}"):
+        # both tables derive from the same chunks: pin them once (at the
+        # width the upstream shuffle left them) so the decompose kernel
+        # runs once per archive, not once per table write
+        bases, with_id = assign_base_ids(chunks.localCheckpoint(eager=True))
+        bases.write.mode("overwrite").parquet(paths["bases"])
+        with_id.select(
+            "conv_id", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
+        ).write.mode("overwrite").parquet(paths["deviations"])
     manifest = {"run_id": run_id, "tables": paths}
     _publish_manifest(manifest_path, manifest)
     return manifest
@@ -775,8 +724,9 @@ def read_gd_outputs(spark, out_dir: str, run_id: str = "run-0") -> DataFrame:
             f"GD archive {run_id!r} under {out_dir!r} has no gd_manifest.json: "
             "its write never completed"
         ) from None
-    bases = spark.read.parquet(tables["bases"])
-    devs = spark.read.parquet(tables["deviations"])
+    with job_description(spark.sparkContext, f"gd:store:{run_id}"):
+        bases = spark.read.parquet(tables["bases"])
+        devs = spark.read.parquet(tables["deviations"])
     return devs.join(bases.select("base_id", "base"), "base_id").select(
         "conv_id", "chunk_idx", "base", "deviation", "last_chunk_pad"
     )

@@ -24,18 +24,19 @@ Design (scale-first):
   inputs — ``pipeline.exact_stages`` groups the batch against the
   ``content_keys`` store (a stored key keeps its canonical id; a new key's
   canonical is the batch's min uid); ``pipeline.sketches`` sketches the
-  new reps (MinHash outputs only); ``pipeline.minhash_stages`` unions the
-  in-batch bucket pairs (oversized buckets salted, as in the batch
-  pipeline) with the batch-vs-history band join and verifies exact
-  Jaccard against the batch's and the stored shingles. Identical config
-  ⇒ identical candidate semantics. Edges ``(id_l, id_r, path, score)``
-  are appended to ``edges/``.
-* **Skew guard on the history join**: a band key the batch posts whose
-  TOTAL posting count (history + batch) exceeds ``max_bucket_size`` is
-  excluded from the history join and audited to ``band_audits`` as
-  ``dropped`` — "this epoch skipped the history join for this key";
-  salted in-batch buckets are audited as ``salted``. Why history is
-  excluded rather than salted: ``pipeline.minhash_stages``.
+  new reps (MinHash outputs only); ``pipeline.minhash_stages`` pairs the
+  batch's band postings with each other and with the stored ones in one
+  ``minhash.lsh_candidate_pairs`` call (the ``bands`` store is its
+  ``history``) and verifies exact Jaccard against the batch's and the
+  stored shingles. Identical config ⇒ identical candidate semantics.
+  Edges ``(id_l, id_r, path, score)`` are appended to ``edges/``.
+* **Skew guard**: ``_buckets.bucket_pairs`` owns it, for history and
+  batch alike. A band key the batch posts whose TOTAL posting count
+  (history + batch) exceeds ``max_bucket_size`` drops its history and is
+  audited to ``band_audits`` as ``dropped``; batch members over the cap
+  on their own are salted, as in the batch pipeline, and audited as
+  ``salted``. Why history is dropped rather than salted: the
+  ``bucket_pairs`` docstring.
 * **Assignments are eventually-exact**: per-batch output assigns each row
   its exact-dup canonical; cluster structure over near-dup edges is
   recovered by ``compact_clusters`` — a batch connected-components job
@@ -46,7 +47,8 @@ Design (scale-first):
   micro-batch embarrassingly parallel and gives bit-identical clusters to
   the batch pipeline on the same input (pinned by test).
 * **State maintenance**: ``compact_state`` rewrites the stores deduped,
-  coalesced, and partitioned (bands by ``band_idx``) — run it periodically
+  coalesced, and partitioned (bands by ``band_idx``), and swaps each in by
+  renames that a later read rolls back or completes — run it periodically
   so a year of micro-batch appends doesn't degrade every history join
   into a million-small-file scan. Its optional ``max_epoch_age`` drops
   state older than the bound — the streaming analogue of the reference
@@ -66,6 +68,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, functions as F
@@ -97,10 +100,27 @@ def _empty_1part(spark, schema: str):
     )
 
 
+def _finish_swap(path: str) -> None:
+    """Settle a ``compact_state`` swap that a crash interrupted, so the
+    store at ``path`` is whole again. The swap moves the old store to
+    ``<path>.old``, the compacted one in, then deletes ``<path>.old``: an
+    ``.old`` dir beside a store is a finished swap's leftover (delete it);
+    one WITHOUT a store is the original, moved aside before the new one
+    landed (move it back). Either way no store is ever read as missing."""
+    old = path + ".old"
+    if not os.path.exists(old):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, path)
+
+
 def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame:
     """Read a state store; an ABSENT store is empty, a BROKEN store raises
     (treating a mis-permissioned or corrupt store as empty history would
-    produce wrong, missed-duplicate output).
+    produce wrong, missed-duplicate output). A store whose compaction swap
+    was interrupted is settled first (``_finish_swap``).
 
     The schema is known, so the read skips the inference job a plain
     parquet read runs (one per store per micro-batch), and an empty dir
@@ -112,10 +132,8 @@ def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame:
     # union/join against the store then pays a cores-wide stage of no-op
     # task launches (measured: five ~64-task, ~0.4 s pure-overhead jobs in
     # the first micro-batch of a fresh state dir).
-    path = _store_path(state_dir, name)
-    if not os.path.exists(path):
-        return _empty_1part(spark, schema)
-    return spark.read.schema(schema).parquet(path)
+    df = _read_store_opt(spark, state_dir, name, schema)
+    return _empty_1part(spark, schema) if df is None else df
 
 
 def _read_store_opt(spark, state_dir: str, name: str, schema: str) -> DataFrame | None:
@@ -124,9 +142,11 @@ def _read_store_opt(spark, state_dir: str, name: str, schema: str) -> DataFrame 
     joining or unioning an empty frame is a no-op — but the skipped plan
     nodes cost real AQE stage jobs per micro-batch, the dominant cost of
     a small batch). A present-but-empty store still returns a frame."""
-    if not os.path.exists(_store_path(state_dir, name)):
+    path = _store_path(state_dir, name)
+    _finish_swap(path)
+    if not os.path.exists(path):
         return None
-    return _read_store(spark, state_dir, name, schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _next_epoch(state_dir: str) -> int:
@@ -260,12 +280,14 @@ def compact_state(
       re-enters as a new canonical. The ``edges``/``assignments`` output
       logs are never aged (they are results, not state).
 
-    The rewrite is atomic per store (write to ``<name>.compact``, then
-    rename); a crash mid-compaction leaves the original store intact.
+    Each store is swapped in by renames: the compacted copy is written to
+    ``<name>.compact``, the old store is renamed to ``<name>.old``, the
+    copy to ``<name>``, and only then is ``<name>.old`` deleted. A crash at
+    any point leaves the old store or the new one: every read (and the
+    next compaction) first rolls an interrupted swap back or completes it
+    (``_finish_swap``), so a store is never read as empty history.
     Returns per-store row counts after compaction.
     """
-    import shutil
-
     epoch_path = os.path.join(state_dir, "_epoch.json")
     current = 0
     if os.path.exists(epoch_path):
@@ -282,13 +304,15 @@ def compact_state(
     }
     out: dict = {"epoch": current}
     for name, keys in dedup_keys.items():
-        path = _store_path(state_dir, name)
-        if not os.path.exists(path):
+        df = _read_store_opt(spark, state_dir, name, _STORE_SCHEMAS[name])
+        if df is None:
             continue
-        df = _read_store(spark, state_dir, name, _STORE_SCHEMAS[name])
+        path = _store_path(state_dir, name)
         if horizon is not None:
             df = df.filter(F.col("epoch") >= horizon)
-        df = df.dropDuplicates(keys)
+        # the write is the rewrite's only evaluation: it records the count
+        rows = Observation()
+        df = df.dropDuplicates(keys).observe(rows, F.count(F.lit(1)).alias("n"))
         tmp = path + ".compact"
         writer = df.repartition(partitions).write.mode("overwrite")
         if name == "bands":
@@ -296,10 +320,10 @@ def compact_state(
                 "overwrite"
             ).partitionBy("band_idx")
         writer.parquet(tmp)
-        # count AFTER the write (from the written files — no recompute)
-        out[name] = spark.read.parquet(tmp).count()
-        shutil.rmtree(path)
+        out[name] = rows.get["n"]
+        os.rename(path, path + ".old")
         os.rename(tmp, path)
+        shutil.rmtree(path + ".old")
     return out
 
 
@@ -337,18 +361,21 @@ def compact_clusters(
     ``edges``) → the SAME large-star/small-star CC the batch pipeline
     uses → ``(id, cluster_id)`` for every streamed row. Run periodically
     (or on demand); equivalent to re-running the batch pipeline on the
-    union of all micro-batches at identical config.
+    union of all micro-batches at identical config. Every job it submits
+    (the CC edge pin, the union-find probe) is labeled ``stream:compact``
+    or a ``cc:`` label nested in it.
     """
-    assigns = spark.read.schema("uid string, canonical_id string, path string").parquet(
-        _store_path(state_dir, "assignments")
-    )
-    exact_edges = assigns.filter(F.col("uid") != F.col("canonical_id")).select(
-        F.col("canonical_id").alias("id_l"), F.col("uid").alias("id_r")
-    )
-    near = _read_store(
-        spark, state_dir, "edges",
-        "id_l string, id_r string, path string, score double",
-    ).select("id_l", "id_r")
-    edges = exact_edges.unionByName(near).dropDuplicates(["id_l", "id_r"])
-    ids = assigns.select(F.col("uid").alias("id")).dropDuplicates(["id"])
-    return assign_clusters(ids, edges, "id", small_graph_rows=small_graph_rows)
+    with job_description(spark.sparkContext, "stream:compact"):
+        assigns = spark.read.schema(
+            "uid string, canonical_id string, path string"
+        ).parquet(_store_path(state_dir, "assignments"))
+        exact_edges = assigns.filter(F.col("uid") != F.col("canonical_id")).select(
+            F.col("canonical_id").alias("id_l"), F.col("uid").alias("id_r")
+        )
+        near = _read_store(
+            spark, state_dir, "edges",
+            "id_l string, id_r string, path string, score double",
+        ).select("id_l", "id_r")
+        edges = exact_edges.unionByName(near).dropDuplicates(["id_l", "id_r"])
+        ids = assigns.select(F.col("uid").alias("id")).dropDuplicates(["id"])
+        return assign_clusters(ids, edges, "id", small_graph_rows=small_graph_rows)

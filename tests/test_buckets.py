@@ -5,7 +5,7 @@ skew cap + audit contract, and the neighbor_window band-graph bound."""
 import itertools
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, functions as F
 
 from rust_gd_spark.operators._buckets import bucket_pairs
 
@@ -128,3 +128,82 @@ def test_salt_oversized_with_neighbor_window(spark):
 def test_dropped_action_in_audit(spark, posting):
     _, audit = bucket_pairs(posting, ["k"], max_bucket_size=4)
     assert audit.collect()[0].action == "dropped"
+
+
+# history: stored postings probed by a batch (the stream's bands store)
+@pytest.fixture(scope="module")
+def batch_and_history(spark):
+    batch = spark.createDataFrame(
+        [(5, "x"), (1, "x"), (9, "y")], "id long, k string"
+    )
+    # id 5 is in both; key "z" is history only
+    history = spark.createDataFrame(
+        [(3, "x"), (0, "x"), (5, "x"), (2, "y"), (4, "y"), (8, "z"), (6, "z")],
+        "id long, k string",
+    )
+    return batch, history
+
+
+def test_history_pairs_new_with_new_and_history_only(spark, batch_and_history):
+    batch, history = batch_and_history
+    pairs, audit = bucket_pairs(
+        batch, ["k"], max_bucket_size=10, history=history
+    )
+    rows = [(r.id_l, r.id_r) for r in pairs.collect()]
+    assert all(l < r for l, r in rows)
+    # new x new, new x history; no (5, 5) self pair from the shared id
+    assert set(rows) == {(1, 5), (0, 1), (1, 3), (0, 5), (3, 5), (2, 9), (4, 9)}
+    # never history x history: (0, 3), (2, 4), (6, 8)
+    assert audit.count() == 0
+
+
+def test_history_over_cap_is_dropped_batch_still_paired(spark):
+    batch = spark.createDataFrame(
+        [(10, "h"), (11, "h"), (12, "h"), (20, "x")], "id long, k string"
+    )
+    history = spark.createDataFrame(
+        [(1, "h"), (2, "h"), (3, "h"), (21, "x")], "id long, k string"
+    )
+    obs = Observation()
+    pairs, audit = bucket_pairs(
+        batch, ["k"], max_bucket_size=4, salt_oversized=True, oversized=obs,
+        history=history,
+    )
+    # key h: 6 postings > cap 4 -> its history is excluded, the batch's
+    # own 3 members are still paired; key x pairs with its history
+    assert _pairs_set(pairs) == {(10, 11), (10, 12), (11, 12), (20, 21)}
+    a = audit.collect()
+    assert [(r.k, r.bucket_size, r.action) for r in a] == [("h", 6, "dropped")]
+    assert obs.get["n"] == 1
+
+
+def test_history_over_cap_batch_over_cap_salted(spark):
+    batch = spark.createDataFrame(
+        [(10 + i, "h") for i in range(12)], "id long, k string"
+    )
+    history = spark.createDataFrame(
+        [(1, "h"), (2, "h"), (3, "h")], "id long, k string"
+    )
+    obs = Observation()
+    pairs, audit = bucket_pairs(
+        batch, ["k"], max_bucket_size=4, salt_oversized=True, oversized=obs,
+        history=history,
+    )
+    got = _pairs_set(pairs)
+    assert all(l < r and l >= 10 for l, r in got)  # no history member
+    # the salt chain keeps the 12 batch members connected, O(size) pairs
+    assert len(_connectivity(got, set(range(10, 22)))) == 1
+    assert len(got) < 66
+    rows = {(r.k, r.bucket_size, r.action) for r in audit.collect()}
+    assert rows == {("h", 15, "dropped"), ("h", 12, "salted")}
+    assert obs.get["n"] == 2
+
+
+def test_history_payload_follows_swapped_ids(spark):
+    batch = spark.createDataFrame([(5, "x", 50)], "id long, k string, fp long")
+    history = spark.createDataFrame([(1, "x", 10)], "id long, k string, fp long")
+    pairs, _ = bucket_pairs(
+        batch, ["k"], payload_cols=["fp"], max_bucket_size=10, history=history
+    )
+    r = pairs.collect()
+    assert [(x.id_l, x.id_r, x.fp_l, x.fp_r) for x in r] == [(1, 5, 10, 50)]

@@ -305,3 +305,42 @@ def test_compact_age_bound_between_incremental_batches(spark, turn_batches, tmp_
     assert frozenset({"probe:0"}) in got  # re-entered as its own canonical
     # batch-0 assignments are results, not state: they survive eviction
     assert {u for c in got for u in c} == uids[0] | uids[1] | {"probe:0"}
+
+
+@pytest.mark.parametrize("fail_at", [0, 1, 2])
+def test_compact_state_interrupted_swap_keeps_history(spark, tmp_path, monkeypatch, fail_at):
+    """A crash at any step of compact_state's store swap must not lose the
+    store: a later duplicate of a stored text keeps the stored canonical
+    (or the batch raises) — it is never treated as unseen content."""
+    import os
+    import shutil
+
+    state = str(tmp_path / "state")
+    mk = lambda rs: spark.createDataFrame(rs, "uid string, text string")
+    text = "a text that was streamed once and then compacted"
+    st.process_batch(mk([("a", text)]), state)
+
+    calls = []
+
+    def failing(fn):
+        def wrapped(*args, **kwargs):
+            if str(args[0]).startswith(state):
+                calls.append(args[0])
+                if len(calls) - 1 == fail_at:
+                    raise OSError("injected crash")
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(os, "rename", failing(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", failing(shutil.rmtree))
+    with pytest.raises(OSError, match="injected crash"):
+        st.compact_state(spark, state, partitions=2)
+    monkeypatch.undo()
+
+    try:
+        st.process_batch(mk([("z", text)]), state)
+    except Exception:
+        return  # a clean error is acceptable; silent history loss is not
+    assigns = spark.read.parquet(f"{state}/assignments")
+    got = {r.uid: r.canonical_id for r in assigns.collect()}
+    assert got["z"] == "a"
