@@ -102,7 +102,8 @@ def sketches(
     values are identical. One pass instead of four: every Python task pays
     a fixed start-up cost that dwarfs the kernels at transcript sizes, and
     each pass ships every rep's text to the Python workers again.
-    ``near_dup_pipeline`` and ``process_batch`` both sketch through here.
+    ``dedup_stages`` runs it once over the new reps of a batch run or a
+    micro-batch, so both paths sketch through here.
     """
     import pandas as pd
 
@@ -241,24 +242,47 @@ def _staged_candidates(runner: _StageRunner, name: str, build_cands, lazy=False)
     return cand, runner.run(f"{name}_skew_audit", lambda: build()[1], lazy=True)
 
 
-def exact_stages(
-    runner: _StageRunner, base: DataFrame, known: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The exact path: ``exact_groups(id, content_key, canonical_id, new)``
-    for every ``base`` row (``exactdup.exact_dup_groups``: canonical = the
-    group's min id) and ``reps(id, text)``, the canonical rows of the new
-    groups. With ``known(content_key, canonical_id)`` (the stream's
-    ``content_keys`` store) a stored key keeps its canonical id and is
-    not new.
+def dedup_stages(
+    runner: _StageRunner,
+    base: DataFrame,
+    cfg: DedupConfig,
+    history: dict | None = None,
+) -> tuple[DataFrame, DataFrame | None, list[DataFrame], dict, int | None]:
+    """The dedup core both paths share, over the keyed ``base(id, text)``:
+    exact groups → lazy reps → the one ``sketches`` pass → the enabled
+    near-dup chains. Returns ``(exact_groups, sk, path_pairs, audits,
+    n_audit)``:
+
+    * ``exact_groups(id, content_key, canonical_id, new)`` for every
+      ``base`` row (``exactdup.exact_dup_groups``: canonical = the group's
+      min id) and ``sk``, the pinned sketch frame of the new groups'
+      canonical rows (None when every near-dup path is off);
+    * one verified edge frame per enabled path (MinHash, SimHash,
+      substring order) and the skew audits by name;
+    * ``n_audit``, the MinHash audit's row count observed on the
+      candidates' own pins (None if that stage was resumed or is off), so
+      a caller appends the audit only when non-empty without a probe job.
+
+    ``history`` holds the stream's stores by name (``content_keys``,
+    ``bands``, ``shingles``; each None when absent). A stored content key
+    keeps its canonical id and is not new; the stored band postings are
+    ``minhash.lsh_candidate_pairs``' ``history`` (``_buckets.bucket_pairs``
+    owns the skew policy for both: which keys are salted and which drop
+    their history); the verify reads the stored shingles too. SimHash and
+    substring keep no stores, so enabling either with ``history`` raises
+    ``ValueError`` instead of silently losing the pairs with history.
 
     Every near-dup path runs on one representative per exact-text group;
     exact star edges re-attach the copies through connected components
     (transitive closure ⇒ identical final clusters). At web scale this is
     the load-bearing reduction — candidate-join and verify cost scale with
     DISTINCT content, not corpus size, and verbatim boilerplate collapses
-    to one node instead of flooding LSH buckets. ``reps`` is lazy: the
-    sketch pass is its only reader.
+    to one node instead of flooding LSH buckets.
     """
+    if history is not None and (cfg.enable_simhash or cfg.enable_substring):
+        raise ValueError("history covers the exact and MinHash paths only: "
+                         "disable SimHash and substring to pass it")
+    hist = history or {}
 
     def _groups():
         # base is pinned, so the group agg and the join back inside
@@ -267,6 +291,7 @@ def exact_stages(
         groups = exactdup.exact_dup_groups(
             base, "id", "text", materialize=runner.dir is not None
         )
+        known = hist.get("content_keys")
         if known is None:
             return groups.withColumn("new", F.lit(True)).drop("group_size")
         stored = known.select("content_key", F.col("canonical_id").alias("known"))
@@ -277,61 +302,120 @@ def exact_stages(
 
     exact_groups = runner.run("exact_groups", _groups)
     new_reps = F.col("new") & (F.col("id") == F.col("canonical_id"))
+    # lazy: the sketch pass is its only reader
     reps = runner.run(
         "reps", lambda: exact_groups.filter(new_reps).select("id").join(base, "id"),
         lazy=True,
     )
-    return exact_groups, reps
-
-
-def minhash_stages(
-    runner: _StageRunner,
-    sk: DataFrame,
-    cfg: DedupConfig,
-    bands_hist: DataFrame | None = None,
-    shingles_hist: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, int | None]:
-    """The MinHash candidate, skew-audit and verify stages over the pinned
-    sketch frame ``sk(id, shingles, bands)``: ``(pairs, audit, n_audit)``,
-    pairs as edge rows scored by Jaccard. Candidates are
-    ``minhash.lsh_candidate_pairs`` over the band postings, with
-    ``bands_hist(band_idx, band_hash, id)`` as its ``history``
-    (``_buckets.bucket_pairs`` owns the skew policy for both: which keys
-    are salted and which drop their history); ``minhash.verify_jaccard``
-    checks them against ``sk``'s shingles plus ``shingles_hist(id,
-    shingles)``. ``n_audit``, the audit's row count observed on the
-    candidates' own pins (None if the candidate stage was resumed), lets a
-    caller append the audit only when non-empty without a probe job.
-    """
-    # the band explode re-derives from the pinned sketch frame in codegen
-    # for every reader (bucket_pairs' count agg and prune join, or its
-    # history union pin): never the signature kernel
-    banded = minhash.explode_band_hashes(sk.select("id", "bands"))
+    audits: dict = {}
     n_audit: list = []
 
-    def _cands():
-        oversized = Observation()
-        pairs, audit = minhash.lsh_candidate_pairs(
-            banded, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-            salt_oversized=True, oversized=oversized, history=bands_hist,
-        )
-        n_audit.append(oversized.get["n"])
-        return pairs.select("id_l", "id_r"), audit
+    # --- MinHash/LSH path -------------------------------------------------
+    def _mh_chain():
+        # the band explode re-derives from the pinned sketch frame in
+        # codegen for every reader (bucket_pairs' count agg and prune join,
+        # or its history union pin): never the signature kernel
+        banded = minhash.explode_band_hashes(sk.select("id", "bands"))
 
-    # lazy: the verify is the candidates' only reader
-    cand, audit = _staged_candidates(runner, "minhash", _cands, lazy=True)
-    shingles = sk.select("id", "shingles")
-    if shingles_hist is not None:
-        shingles = shingles.unionByName(shingles_hist.select("id", "shingles"))
-    # lazy: the verify joins read only pinned frames and feed exactly one
-    # consumer (the pair union, or the stream's edges append)
-    pairs = runner.run(
-        "minhash_pairs",
-        lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
-        lazy=True,
-    )
-    n_audit = n_audit[0] if n_audit else None
-    return _edges(pairs, "minhash", F.col("jaccard")), audit, n_audit
+        def _cands():
+            oversized = Observation()
+            pairs, audit = minhash.lsh_candidate_pairs(
+                banded, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
+                salt_oversized=True, oversized=oversized, history=hist.get("bands"),
+            )
+            n_audit.append(oversized.get["n"])
+            return pairs.select("id_l", "id_r"), audit
+
+        # lazy: the verify is the candidates' only reader
+        cand, audits["lsh_skew"] = _staged_candidates(runner, "minhash", _cands, lazy=True)
+        shingles = sk.select("id", "shingles")
+        if hist.get("shingles") is not None:
+            shingles = shingles.unionByName(hist["shingles"].select("id", "shingles"))
+        # lazy: the verify joins read only pinned frames and feed exactly
+        # one consumer (the pair union, or the stream's edges append)
+        pairs = runner.run(
+            "minhash_pairs",
+            lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
+            lazy=True,
+        )
+        return _edges(pairs, "minhash", F.col("jaccard"))
+
+    # --- SimHash path -------------------------------------------------------
+    def _sh_chain():
+        # the fp column is compact (one int64 per rep) — the band explode
+        # is a cheap JVM re-derivation from the pinned sketch frame for
+        # both consumers below.
+        fps = sk.select("id", "fp")
+
+        # memoized: building the candidate DAG runs an eager sub-job
+        # (the bucket-count checkpoint inside bucket_pairs); the audit
+        # stage and the verify stage must share ONE build, not pay it
+        # twice.
+        @functools.cache
+        def _sh_cands():
+            return simhash.simhash_candidate_pairs(
+                simhash.simhash_bands(fps, bands=cfg.sim_bands),
+                cfg.max_bucket_size,
+                neighbor_window=cfg.neighbor_window,
+                materialize=False,
+                salt_oversized=True,
+            )
+
+        # the audit derives from the compact bucket-count agg — persist it
+        # as its own stage. The raw 16-bit-band collision stream is
+        # quadratic in corpus size and is deliberately NEVER staged: the
+        # JVM Hamming filter in verify fuses over it before anything
+        # materializes.
+        audits["simhash_skew"] = runner.run(
+            "simhash_skew_audit", lambda: _sh_cands()[1], lazy=True
+        )
+        pairs = runner.run(
+            "simhash_pairs",
+            lambda: simhash.verify_hamming(_sh_cands()[0], cfg.max_hamming),
+            lazy=True,
+        )
+        return _edges(pairs, "simhash", 1.0 - F.col("hamming_dist") / 64.0)
+
+    # --- substring path -----------------------------------------------------
+    def _ss_chain():
+        def _ss_cands():
+            return substring.substring_candidate_pairs(
+                sk.select("id", "fps"), cfg.max_bucket_size,
+                neighbor_window=cfg.neighbor_window, salt_oversized=True,
+            )
+
+        cand, audits["substring_skew"] = _staged_candidates(runner, "substring", _ss_cands)
+        pairs = runner.run(
+            "substring_pairs",
+            # texts from the pinned base: candidate ids are all reps
+            lambda: substring.verify_common_substring(
+                cand, base, "id", "text", cfg.min_substring_len,
+                # clustering needs only the threshold decision; the exact
+                # LCS length is ~10× slower on long documents
+                exact_length=False,
+            ),
+            lazy=True,
+        )
+        return _edges(pairs, "substring", F.col("common_len").cast("double"))
+
+    chains = [chain for on, chain in ((cfg.enable_minhash, _mh_chain),
+                                      (cfg.enable_simhash, _sh_chain),
+                                      (cfg.enable_substring, _ss_chain)) if on]
+    # ONE Arrow pass over the reps computes every sketch the enabled paths
+    # read (shingles + fused MinHash bands, SimHash fp, winnow fps); the
+    # chains fork from this pinned frame with plain selects. The
+    # exact-only config runs no sketch pass at all.
+    sk = runner.run("sketches", lambda: sketches(reps, cfg)) if chains else None
+    # The chains are independent DAGs over `sketches` (and `base` for the
+    # substring verify), each submitted from its own driver thread; Spark
+    # schedules their jobs fairly, so one chain's stages fill the
+    # driver-barrier gaps of another's (measured 23-39% faster than
+    # sequential submission on the full 4-path config at sf0.1, local[N]).
+    # max_workers=0 raises, so a run with every near-dup path off still
+    # gets a (never used) one-thread pool
+    with ThreadPoolExecutor(max_workers=max(1, len(chains))) as pool:
+        path_pairs = list(pool.map(lambda chain: chain(), chains))
+    return exact_groups, sk, path_pairs, audits, n_audit[0] if n_audit else None
 
 
 def with_turn_uid(transcripts: DataFrame) -> DataFrame:
@@ -397,95 +481,7 @@ def near_dup_pipeline(
     )
     base = keyed.select("id", "text")
 
-    exact_groups, reps = exact_stages(runner, base)
-    exact_pairs = exactdup.exact_dup_pairs(exact_groups)
-    runner_audits: dict = {}
-
-    # --- shared sketch pass ------------------------------------------------
-    # ONE Arrow pass over the reps computes every sketch the enabled paths
-    # read (shingles + fused MinHash bands, SimHash fp, winnow fps); the
-    # chains below fork from this pinned frame with plain selects. The
-    # exact-only config runs no sketch pass at all.
-    near_dup = cfg.enable_minhash or cfg.enable_simhash or cfg.enable_substring
-    sk = runner.run("sketches", lambda: sketches(reps, cfg)) if near_dup else None
-
-    # --- MinHash/LSH path -------------------------------------------------
-    def _mh_chain():
-        pairs, runner_audits["lsh_skew"], _ = minhash_stages(runner, sk, cfg)
-        return pairs
-
-    # --- SimHash path -------------------------------------------------------
-    def _sh_chain():
-        # the fp column is compact (one int64 per rep) — the band explode
-        # is a cheap JVM re-derivation from the pinned sketch frame for
-        # both consumers below.
-        fps = sk.select("id", "fp")
-
-        # memoized: building the candidate DAG runs an eager sub-job
-        # (the bucket-count checkpoint inside bucket_pairs); the audit
-        # stage and the verify stage must share ONE build, not pay it
-        # twice.
-        @functools.cache
-        def _sh_cands():
-            return simhash.simhash_candidate_pairs(
-                simhash.simhash_bands(fps, bands=cfg.sim_bands),
-                cfg.max_bucket_size,
-                neighbor_window=cfg.neighbor_window,
-                materialize=False,
-                salt_oversized=True,
-            )
-
-        # the audit derives from the compact bucket-count agg — persist it
-        # as its own stage. The raw 16-bit-band collision stream is
-        # quadratic in corpus size and is deliberately NEVER staged: the
-        # JVM Hamming filter in verify fuses over it before anything
-        # materializes.
-        runner_audits["simhash_skew"] = runner.run(
-            "simhash_skew_audit", lambda: _sh_cands()[1], lazy=True
-        )
-        pairs = runner.run(
-            "simhash_pairs",
-            lambda: simhash.verify_hamming(_sh_cands()[0], cfg.max_hamming),
-            lazy=True,
-        )
-        return _edges(pairs, "simhash", 1.0 - F.col("hamming_dist") / 64.0)
-
-    # --- substring path -----------------------------------------------------
-    def _ss_chain():
-        def _ss_cands():
-            return substring.substring_candidate_pairs(
-                sk.select("id", "fps"), cfg.max_bucket_size,
-                neighbor_window=cfg.neighbor_window, salt_oversized=True,
-            )
-
-        cand, audit = _staged_candidates(runner, "substring", _ss_cands)
-        runner_audits["substring_skew"] = audit
-        pairs = runner.run(
-            "substring_pairs",
-            # texts from the pinned base: candidate ids are all reps
-            lambda: substring.verify_common_substring(
-                cand, base, "id", "text", cfg.min_substring_len,
-                # clustering needs only the threshold decision; the exact
-                # LCS length is ~10× slower on long documents
-                exact_length=False,
-            ),
-            lazy=True,
-        )
-        return _edges(pairs, "substring", F.col("common_len").cast("double"))
-
-    # The candidate paths fork after the one shared sketch pass into
-    # independent DAGs over `sketches` (and `base` for the substring
-    # verify), each submitted from its own driver thread; Spark schedules
-    # their jobs fairly, so one chain's stages fill the driver-barrier gaps
-    # of another's (measured 23-39% faster than sequential submission on
-    # the full 4-path config at sf0.1, local[N]).
-    chains = [chain for on, chain in ((cfg.enable_minhash, _mh_chain),
-                                      (cfg.enable_simhash, _sh_chain),
-                                      (cfg.enable_substring, _ss_chain)) if on]
-    # max_workers=0 raises, so a run with every near-dup path off still
-    # gets a (never used) one-thread pool
-    with ThreadPoolExecutor(max_workers=max(1, len(chains))) as pool:
-        path_pairs = list(pool.map(lambda chain: chain(), chains))
+    exact_groups, _, path_pairs, audits, _ = dedup_stages(runner, base, cfg)
 
     # --- union + clustering ---------------------------------------------------
     # lazy: every input of the union is either checkpointed (cands,
@@ -494,7 +490,7 @@ def near_dup_pipeline(
     # which materializes the union exactly once.
     pairs = runner.run("pairs", lambda: functools.reduce(
         DataFrame.unionByName, path_pairs,
-        _edges(exact_pairs, "exact", F.lit(1.0)),
+        _edges(exactdup.exact_dup_pairs(exact_groups), "exact", F.lit(1.0)),
     ), lazy=True)
 
     def _clusters():
@@ -540,7 +536,7 @@ def near_dup_pipeline(
         clusters=clusters,
         pairs=pairs,
         metrics=runner.metrics_df(),
-        audits=runner_audits,
+        audits=audits,
         source=keyed.select(F.col("orig_id").alias("id"), "text"),
     )
 

@@ -19,17 +19,19 @@ Design (scale-first):
   uses for checkpoints). ``epoch`` is the micro-batch counter — the
   insertion-order clock that makes an age/LRU bound possible, mirroring
   the reference's bounded LRU dictionary (`src/dict.rs:50-63`).
-* **Per micro-batch**: the batch pipeline's own stages on a
-  ``_StageRunner`` (run id ``epoch<N>``), with the stores as history
-  inputs — ``pipeline.exact_stages`` groups the batch against the
-  ``content_keys`` store (a stored key keeps its canonical id; a new key's
-  canonical is the batch's min uid); ``pipeline.sketches`` sketches the
-  new reps (MinHash outputs only); ``pipeline.minhash_stages`` pairs the
-  batch's band postings with each other and with the stored ones in one
-  ``minhash.lsh_candidate_pairs`` call (the ``bands`` store is its
-  ``history``) and verifies exact Jaccard against the batch's and the
-  stored shingles. Identical config ⇒ identical candidate semantics.
-  Edges ``(id_l, id_r, path, score)`` are appended to ``edges/``.
+* **Per micro-batch**: one ``pipeline.dedup_stages`` call on a
+  ``_StageRunner`` (run id ``epoch<N>``) with the stores as its
+  ``history``, the batch pipeline's own core: the batch is grouped
+  against the ``content_keys`` store (a stored key keeps its canonical
+  id; a new key's canonical is the batch's min uid), the new reps are
+  sketched (MinHash outputs only), their band postings are paired with
+  each other and with the stored ones in one
+  ``minhash.lsh_candidate_pairs`` call, and candidates are verified by
+  exact Jaccard against the batch's and the stored shingles. Identical
+  config ⇒ identical candidate semantics. The commit appends
+  ``shingles`` → ``bands`` → ``content_keys`` in that order (postings
+  before the keys that mark their texts as seen), beside the ``edges``
+  ``(id_l, id_r, path, score)`` and ``assignments`` logs.
 * **Skew guard**: ``_buckets.bucket_pairs`` owns it, for history and
   batch alike. A band key the batch posts whose TOTAL posting count
   (history + batch) exceeds ``max_bucket_size`` drops its history and is
@@ -75,8 +77,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from .operators import minhash
 from .operators.components import assign_clusters
-from .pipeline import (DedupConfig, _StageRunner, exact_stages, minhash_stages,
-                       sketches, with_turn_uid)
+from .pipeline import DedupConfig, _StageRunner, dedup_stages, with_turn_uid
 from .session import job_description
 
 _STORE_SCHEMAS = {
@@ -88,16 +89,6 @@ _STORE_SCHEMAS = {
 
 def _store_path(state_dir: str, name: str) -> str:
     return os.path.join(state_dir, name)
-
-
-def _empty_1part(spark, schema: str):
-    """Zero-row frame on ONE partition slice (parallelize([], 1))."""
-    from pyspark.sql import types as T
-
-    struct = T._parse_datatype_string(schema)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([], 1), struct
-    )
 
 
 def _finish_swap(path: str) -> None:
@@ -116,32 +107,20 @@ def _finish_swap(path: str) -> None:
         os.rename(old, path)
 
 
-def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame:
-    """Read a state store; an ABSENT store is empty, a BROKEN store raises
-    (treating a mis-permissioned or corrupt store as empty history would
-    produce wrong, missed-duplicate output). A store whose compaction swap
-    was interrupted is settled first (``_finish_swap``).
+def _read_store(spark, state_dir: str, name: str, schema: str) -> DataFrame | None:
+    """Read a state store. An ABSENT store is ``None``, so callers skip the
+    union/join against it outright (joining or unioning an empty frame is
+    a no-op, but the skipped plan nodes cost real AQE stage jobs per
+    micro-batch, the dominant cost of a small batch). A BROKEN store
+    raises: treating a mis-permissioned or corrupt store as empty history
+    would produce wrong, missed-duplicate output. A store whose compaction
+    swap was interrupted is settled first (``_finish_swap``).
 
     The schema is known, so the read skips the inference job a plain
     parquet read runs (one per store per micro-batch), and an empty dir
     left by a crashed first write reads as empty. Partitioned rewrites
     (``compact_state``'s bands) read the same way.
     """
-    # empty stores COALESCE to one partition: createDataFrame([], schema)
-    # spreads zero rows over defaultParallelism empty slices, and every
-    # union/join against the store then pays a cores-wide stage of no-op
-    # task launches (measured: five ~64-task, ~0.4 s pure-overhead jobs in
-    # the first micro-batch of a fresh state dir).
-    df = _read_store_opt(spark, state_dir, name, schema)
-    return _empty_1part(spark, schema) if df is None else df
-
-
-def _read_store_opt(spark, state_dir: str, name: str, schema: str) -> DataFrame | None:
-    """``_read_store`` that reports an ABSENT store as ``None`` so callers
-    can skip the union/join against it outright (identical semantics —
-    joining or unioning an empty frame is a no-op — but the skipped plan
-    nodes cost real AQE stage jobs per micro-batch, the dominant cost of
-    a small batch). A present-but-empty store still returns a frame."""
     path = _store_path(state_dir, name)
     _finish_swap(path)
     if not os.path.exists(path):
@@ -198,57 +177,54 @@ def process_batch(
     # (the stages relabel their own jobs stage:<name>)
     with job_description(sc, f"stream:epoch{epoch}"):
         hist = {
-            name: _read_store_opt(spark, state_dir, name, schema)
+            name: _read_store(spark, state_dir, name, schema)
             for name, schema in _STORE_SCHEMAS.items()
         }
         base = runner.run("base", lambda: batch_df.select(
             F.col("uid").alias("id"), "text"), local_only=True)
-        groups, reps = exact_stages(runner, base, hist["content_keys"])
-        sk = runner.run("sketches", lambda: sketches(reps, cfg))
-        pairs, audit, n_audit = minhash_stages(runner, sk, cfg, hist["bands"],
-                                               hist["shingles"])
+        groups, sk, (pairs,), audits, n_audit = dedup_stages(
+            runner, base, cfg, history=hist)
 
     # the append is the edges' only evaluation: it records their count
     n_edges = Observation()
     ep = F.lit(epoch).cast("long").alias("epoch")
+    # Each inner list commits in order on one pool thread; the lists run
+    # side by side (distinct append paths, no read-after-write), so the
+    # tiny dictionary/assignment writes back-fill cores while the
+    # verify-bearing edges write runs, instead of paying one driver
+    # barrier each in sequence. Postings go before the keys that
+    # mark their texts as seen: a crash before ``content_keys`` lands
+    # leaves the texts unseen, so a replay of the batch re-sketches them
+    # and writes their postings again (duplicates ``compact_state``
+    # drops), where keys without postings would make the replay treat
+    # the texts as history and never write them: recall lost for good.
+    # Shingles go before bands so every stored band posting has the
+    # shingles the verify's inner join needs; a posting without them
+    # would yield candidates the verify silently drops in later epochs.
     writes = [
-        ("content_keys", groups.filter(
-            F.col("new") & (F.col("id") == F.col("canonical_id"))
-        ).select("content_key", "canonical_id", ep)),
-        ("bands", minhash.explode_band_hashes(sk.select("id", "bands")).select(
-            "band_idx", "band_hash", "id", ep
-        )),
-        ("shingles", sk.select("id", "shingles", ep)),
-        ("edges", pairs.observe(n_edges, F.count(F.lit(1)).alias("rows"))),
-        ("assignments", groups.select(
+        [("shingles", sk.select("id", "shingles", ep)),
+         ("bands", minhash.explode_band_hashes(sk.select("id", "bands")).select(
+             "band_idx", "band_hash", "id", ep)),
+         ("content_keys", groups.filter(
+             F.col("new") & (F.col("id") == F.col("canonical_id"))
+         ).select("content_key", "canonical_id", ep))],
+        [("edges", pairs.observe(n_edges, F.count(F.lit(1)).alias("rows")))],
+        [("assignments", groups.select(
             F.col("id").alias("uid"), "canonical_id", F.lit("exact").alias("path")
-        )),
+        ))],
     ]
     # audit rows exist only when a bucket was salted or a history join
     # skipped: counted on the candidate stage's own pins, no probe job
     if n_audit:
-        writes.append(("band_audits", audit.withColumn("epoch", F.lit(epoch))))
+        writes.append([("band_audits", audits["lsh_skew"].withColumn("epoch", F.lit(epoch)))])
 
-    # The store writes are independent within a batch (distinct append
-    # paths, no read-after-write); submitting them from a small driver
-    # pool (guide §2.6) lets the tiny dictionary/assignment writes
-    # back-fill cores while the verify-bearing edges write runs, instead
-    # of paying one driver barrier each in sequence. EXCEPT content_keys:
-    # it commits FIRST and alone, preserving the crash invariant the old
-    # sequential order gave — a mid-batch crash may leave band/shingle
-    # rows for ids whose content key never landed, and the next epoch
-    # would then mint a SECOND canonical id for the same content while
-    # the orphaned postings still join as history. Writing the dictionary
-    # before its references makes that state unreachable (the converse —
-    # keys without postings — only costs recall on the crashed batch).
-    def _write(item):
-        name, df_ = item
-        with job_description(sc, f"stream:epoch{epoch}:write:{name}"):
-            df_.write.mode("append").parquet(_store_path(state_dir, name))
+    def _commit(chain):
+        for name, df_ in chain:
+            with job_description(sc, f"stream:epoch{epoch}:write:{name}"):
+                df_.write.mode("append").parquet(_store_path(state_dir, name))
 
-    _write(writes[0])  # content_keys — the commit-order anchor
     with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_write, writes[1:]))
+        list(pool.map(_commit, writes))
     stage_rows = {m[1]: m[2] for m in runner.metrics}
     return {
         "epoch": epoch,
@@ -304,7 +280,7 @@ def compact_state(
     }
     out: dict = {"epoch": current}
     for name, keys in dedup_keys.items():
-        df = _read_store_opt(spark, state_dir, name, _STORE_SCHEMAS[name])
+        df = _read_store(spark, state_dir, name, _STORE_SCHEMAS[name])
         if df is None:
             continue
         path = _store_path(state_dir, name)
@@ -369,13 +345,13 @@ def compact_clusters(
         assigns = spark.read.schema(
             "uid string, canonical_id string, path string"
         ).parquet(_store_path(state_dir, "assignments"))
-        exact_edges = assigns.filter(F.col("uid") != F.col("canonical_id")).select(
+        edges = assigns.filter(F.col("uid") != F.col("canonical_id")).select(
             F.col("canonical_id").alias("id_l"), F.col("uid").alias("id_r")
         )
-        near = _read_store(
-            spark, state_dir, "edges",
-            "id_l string, id_r string, path string, score double",
-        ).select("id_l", "id_r")
-        edges = exact_edges.unionByName(near).dropDuplicates(["id_l", "id_r"])
+        near = _read_store(spark, state_dir, "edges",
+                           "id_l string, id_r string, path string, score double")
+        if near is not None:
+            edges = edges.unionByName(near.select("id_l", "id_r"))
+        edges = edges.dropDuplicates(["id_l", "id_r"])
         ids = assigns.select(F.col("uid").alias("id")).dropDuplicates(["id"])
         return assign_clusters(ids, edges, "id", small_graph_rows=small_graph_rows)

@@ -344,3 +344,47 @@ def test_compact_state_interrupted_swap_keeps_history(spark, tmp_path, monkeypat
     assigns = spark.read.parquet(f"{state}/assignments")
     got = {r.uid: r.canonical_id for r in assigns.collect()}
     assert got["z"] == "a"
+
+
+def test_replay_after_crashed_bands_write_keeps_recall(spark, tmp_path, monkeypatch):
+    """A crash in the ``bands`` write must not lose the batch's postings
+    for good: the replay of the same batch writes them, so a later
+    near-duplicate still clusters with the crashed batch's text."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    state = str(tmp_path / "state")
+    mk = lambda rs: spark.createDataFrame(rs, "uid string, text string")
+    words = ("apple banana cherry dragon eagle falcon garden harbor island "
+             "jungle kettle lantern meadow needle orchard").split()
+    text = " ".join(words + ["pepper"])
+    near = " ".join(words + ["quartz"])  # Jaccard of the 5-shingles: 11/13
+
+    write = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path == f"{state}/bands":
+            raise OSError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="injected crash"):
+        st.process_batch(mk([("a", text)]), state)
+    monkeypatch.undo()
+
+    st.process_batch(mk([("a", text)]), state)  # the replay
+    st.process_batch(mk([("b", near)]), state)
+    clusters = _clusters_as_partition(st.compact_clusters(spark, state))
+    assert clusters == {frozenset({"a", "b"})}
+
+
+@pytest.mark.parametrize("path", ["enable_simhash", "enable_substring"])
+def test_dedup_stages_rejects_history_on_storeless_paths(spark, path):
+    """SimHash and substring keep no state stores: running either with
+    history would silently pair the batch with itself only."""
+    from rust_gd_spark.pipeline import _StageRunner, dedup_stages
+
+    cfg = DedupConfig(**{"enable_simhash": False, "enable_substring": False, path: True})
+    base = spark.createDataFrame([("a", "some text")], "id string, text string")
+    history = dict.fromkeys(("content_keys", "bands", "shingles"))
+    with pytest.raises(ValueError, match="history"):
+        dedup_stages(_StageRunner(spark, None, "t"), base, cfg, history=history)
