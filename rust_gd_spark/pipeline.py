@@ -77,8 +77,7 @@ class PipelineResult:
     # (id, text) in the caller's id space, backed by the pipeline's pinned
     # ``base`` stage — survivorship/encoding consumers join texts against
     # THIS instead of re-evaluating the caller's input plan (often a full
-    # scan + the caller's own upstream shuffles). None for results loaded
-    # from disk (read_outputs).
+    # scan + the caller's own upstream shuffles).
     source: DataFrame | None = None
 
 
@@ -619,56 +618,6 @@ def _publish_manifest(path: str, manifest: dict) -> None:
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=2, sort_keys=True)
     os.replace(tmp, path)
-
-
-def write_outputs(result: PipelineResult, out_dir: str, run_id: str = "run-0") -> dict:
-    """Persist the pipeline's output contract — the engine's analogue of the
-    reference's ``Deduped`` output struct (`src/lib.rs:90-94`):
-
-        {out_dir}/{run_id}/clusters/   (id, cluster_id)
-        {out_dir}/{run_id}/pairs/      (id_l, id_r, path, score)
-        {out_dir}/{run_id}/metrics/    (run_id, stage, rows, wall_ms, resumed)
-        {out_dir}/{run_id}/audits/<name>/  skew-audit frames
-        {out_dir}/{run_id}/manifest.json
-
-    The manifest records each audit's row count, observed on its write.
-
-    Parquet-dir-with-_SUCCESS is the sandbox stand-in for an Iceberg
-    snapshot commit (SURVEY.md §1.2/§4.3); on a real cluster these are
-    ``df.writeTo(tbl).append()`` calls. Returns the manifest dict.
-    """
-    base = os.path.join(out_dir, run_id)
-    tables = {"clusters": result.clusters, "pairs": result.pairs,
-              "metrics": result.metrics}
-    manifest: dict = {"run_id": run_id, "tables": {}, "audits": {}}
-    for name, df_ in tables.items():
-        path = os.path.join(base, name)
-        df_.write.mode("overwrite").parquet(path)
-        manifest["tables"][name] = {"path": path, "schema": df_.schema.simpleString()}
-    for name, adf in result.audits.items():
-        path = os.path.join(base, "audits", name)
-        obs = Observation()
-        adf.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        manifest["audits"][name] = {"path": path, "rows": obs.get["rows"]}
-    _publish_manifest(os.path.join(base, "manifest.json"), manifest)
-    return manifest
-
-
-def read_outputs(spark, out_dir: str, run_id: str = "run-0") -> PipelineResult:
-    """Load a persisted output set back into a ``PipelineResult``."""
-    import json
-
-    base = os.path.join(out_dir, run_id)
-    with open(os.path.join(base, "manifest.json")) as fh:
-        manifest = json.load(fh)
-    t = {n: spark.read.parquet(m["path"]) for n, m in manifest["tables"].items()}
-    audits = {n: spark.read.parquet(m["path"]) for n, m in manifest["audits"].items()}
-    return PipelineResult(
-        clusters=t["clusters"], pairs=t["pairs"], metrics=t["metrics"],
-        audits=audits,
-    )
 
 
 def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> dict:

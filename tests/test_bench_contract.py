@@ -2,8 +2,8 @@
 
 ``perfbench/layers.py`` wraps module attributes in timing spans. A
 refactor that removes or renames one breaks the traced run or zeroes a
-per-layer metric; this pins every ``(module, attr)`` it patches. No Spark
-session is started.
+per-layer metric; this pins every ``(module, attr)`` it patches, and every
+store it sizes. No Spark session is started.
 """
 
 import os
@@ -30,3 +30,12 @@ def test_patched_layer_functions_resolve(layers):
         assert callable(getattr(module, attr, None)), (
             f"{module.__name__}.{attr} (span {span}) is gone"
         )
+
+
+def test_state_stores_are_written(layers):
+    """``streaming.state_bytes`` sums the stores ``layers.STATE_STORES``
+    names: one the stream no longer writes would silently read 0."""
+    from rust_gd_spark import streaming
+
+    assert layers.STATE_STORES
+    assert set(layers.STATE_STORES) <= set(streaming._STORES)

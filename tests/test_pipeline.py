@@ -218,28 +218,6 @@ def test_audits_populated_on_resume(spark, turns_df, tmp_path):
         adf.count()  # readable
 
 
-def test_write_read_outputs_roundtrip(spark, turns_df, tmp_path):
-    import json
-    import os as _os
-
-    from rust_gd_spark.pipeline import read_outputs, write_outputs
-
-    out = str(tmp_path / "out")
-    res = near_dup_pipeline(turns_df, "uid", "text")
-    manifest = write_outputs(res, out, run_id="w1")
-    assert set(manifest["tables"]) == {"clusters", "pairs", "metrics"}
-    assert _os.path.exists(_os.path.join(out, "w1", "manifest.json"))
-    with open(_os.path.join(out, "w1", "manifest.json")) as fh:
-        assert json.load(fh)["run_id"] == "w1"
-
-    back = read_outputs(spark, out, run_id="w1")
-    c1 = sorted((r.id, r.cluster_id) for r in res.clusters.collect())
-    c2 = sorted((r.id, r.cluster_id) for r in back.clusters.collect())
-    assert c1 == c2
-    assert back.pairs.count() == res.pairs.count()
-    assert set(back.audits) == set(res.audits)
-
-
 def test_write_read_gd_outputs_roundtrip(spark, transcripts_df, tmp_path):
     from rust_gd_spark.gd.spark import gd_decompose, gd_reconstruct
     from rust_gd_spark.pipeline import read_gd_outputs, write_gd_outputs

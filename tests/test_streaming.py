@@ -2,6 +2,8 @@
 Structured Streaming run over a file source, and compaction equivalence
 with the batch pipeline at matched config."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -190,8 +192,8 @@ def test_compact_state_mid_stream(spark, turn_batches, tmp_path):
     ref = _clusters_as_partition(st.compact_clusters(spark, ref_state))
     got = _clusters_as_partition(st.compact_clusters(spark, cmp_state))
     assert ref == got
-    # bands store is partitioned by band_idx after compaction
-    assert glob.glob(f"{cmp_state}/bands/band_idx=*"), "partitioned rewrite"
+    # compaction coalesces the bands store into one commit of <= 2 files
+    assert len(glob.glob(f"{cmp_state}/bands/commit=1/*.parquet")) <= 2
 
 
 def test_compact_state_age_bound(spark, tmp_path):
@@ -362,7 +364,7 @@ def test_replay_after_crashed_bands_write_keeps_recall(spark, tmp_path, monkeypa
     write = DataFrameWriter.parquet
 
     def failing(self, path, *args, **kwargs):
-        if path == f"{state}/bands":
+        if path.startswith(f"{state}/bands/"):
             raise OSError("injected crash")
         return write(self, path, *args, **kwargs)
 
@@ -375,6 +377,68 @@ def test_replay_after_crashed_bands_write_keeps_recall(spark, tmp_path, monkeypa
     st.process_batch(mk([("b", near)]), state)
     clusters = _clusters_as_partition(st.compact_clusters(spark, state))
     assert clusters == {frozenset({"a", "b"})}
+
+
+@pytest.fixture(scope="module")
+def crash_batches(spark, tmp_path_factory):
+    """Batch 1 writes every store at ``max_bucket_size=4`` (the six
+    variants salt, ``u6`` is an exact dup); batch 2 holds an exact and a
+    near duplicate of it. Returns the batches and the uncrashed partitions
+    of ``[b1, b2]`` and ``[b2]``, keyed by whether batch 1 is in."""
+    texts = dict(_six_variants())
+    b1 = [*texts.items(), ("u6", texts["u0"])]
+    b2 = [("v0", texts["u1"]), ("v1", texts["u2"].replace("variant2", "variant9"))]
+    mk = lambda rs: spark.createDataFrame(rs, "uid string, text string")
+    ref = {}
+    for with_b1, batches in ((True, [b1, b2]), (False, [b2])):
+        state = str(tmp_path_factory.mktemp("uncrashed"))
+        for b in batches:
+            st.process_batch(mk(b), state, max_bucket_size=4)
+        ref[with_b1] = _clusters_as_partition(st.compact_clusters(spark, state))
+    return mk, b1, b2, ref
+
+
+@pytest.mark.parametrize("replay", [True, False])
+@pytest.mark.parametrize("store", st._STORES)
+def test_crashed_epoch_leaves_nothing_visible(spark, tmp_path, monkeypatch,
+                                              crash_batches, store, replay):
+    """A write that crashes in any store publishes none of the epoch:
+    replayed or not, the stream ends in the clusters of an uncrashed run
+    of the same batches (no edges lost, no orphan rows left visible)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    mk, b1, b2, ref = crash_batches
+    state = str(tmp_path / "state")
+    write = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if f"{path}/".startswith(f"{state}/{store}/"):  # the store or a dir in it
+            raise OSError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="injected crash"):
+        st.process_batch(mk(b1), state, max_bucket_size=4)
+    monkeypatch.undo()
+
+    if replay:
+        st.process_batch(mk(b1), state, max_bucket_size=4)
+    st.process_batch(mk(b2), state, max_bucket_size=4)
+    assert _clusters_as_partition(st.compact_clusters(spark, state)) == ref[replay]
+
+
+def test_old_store_layout_raises(spark, tmp_path):
+    """A state dir of the flat-append layout is refused, never read as
+    partial history."""
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "_epoch.json").write_text('{"epoch": 0}')
+    df = spark.createDataFrame([("a", "some text")], "uid string, text string")
+    for call in (lambda: st.process_batch(df, str(state)),
+                 lambda: st.compact_state(spark, str(state)),
+                 lambda: st.compact_clusters(spark, str(state))):
+        with pytest.raises(ValueError, match=re.escape(str(state))):
+            call()
 
 
 @pytest.mark.parametrize("path", ["enable_simhash", "enable_substring"])
