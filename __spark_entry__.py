@@ -2482,17 +2482,18 @@ def _q_gd_roundtrip_aligned(spark, sf_dir):
 
 def _q_gd_chunk_stats(spark, sf_dir):
     """Chunker semantics (A5: fixed n-byte grid + last-chunk zero pad,
-    `gd_byte_unit.rs:42-65`) verified against SQL arithmetic: the chunk
-    count and pad of a conversation's serialized byte stream are pure
-    functions of its per-turn byte lengths."""
+    `gd_byte_unit.rs:42-65`, applied to each turn on its own) verified
+    against SQL arithmetic: a conversation's chunk count and pad bytes are
+    pure functions of its per-turn byte lengths (an empty turn is one
+    all-pad chunk)."""
     from rust_gd_spark.gd.spark import gd_decompose
 
     tr = _transcripts_from_docs(spark, sf_dir)
     chunks = gd_decompose(tr, n=128, k=124)
     return chunks.groupBy("conv_id").agg(
         F.count("*").alias("n_chunks"),
-        F.max("last_chunk_pad").cast("int").alias("pad_bytes"),
-        (F.count("*") * 128 - F.max("last_chunk_pad")).alias("orig_bytes"),
+        F.sum("last_chunk_pad").cast("int").alias("pad_bytes"),
+        (F.count("*") * 128 - F.sum("last_chunk_pad")).alias("orig_bytes"),
     )
 
 
@@ -4934,15 +4935,16 @@ def oracle_sql() -> dict[str, str]:
             from documents group by 1
         """,
         "gd_chunk_stats": """
-            with conv as (
+            with turn as (
               select printf('conv-%04d', (doc_id % 50)::int) as conv_id,
-                     sum(8 + octet_length(encode(text)))::bigint as b
-              from documents group by 1
+                     octet_length(encode(text))::bigint as b,
+                     greatest(1, (octet_length(encode(text)) + 127) // 128)::bigint as c
+              from documents
             )
-            select conv_id, ((b + 127) // 128)::bigint as n_chunks,
-                   ((128 - b % 128) % 128)::int as pad_bytes,
-                   b as orig_bytes
-            from conv
+            select conv_id, sum(c)::bigint as n_chunks,
+                   sum(c * 128 - b)::int as pad_bytes,
+                   sum(b)::bigint as orig_bytes
+            from turn group by 1
         """,
         "transcript_clusters": _CLUSTERS_SQL,
         "cluster_representatives": _CLUSTER_REPS_SQL,

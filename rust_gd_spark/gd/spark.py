@@ -11,18 +11,21 @@ Two paths, both DataFrame-native:
    `spawn_blocking` chunk parallelism, `gd_byte_unit.rs:67-76`, becomes
    Spark task parallelism).
 
+   Serialization contract (this path only): a conversation's turns are
+   packed as repeated ``[u32 turn_idx][u32 byte length][utf-8 bytes]``
+   records in turn order — lossless and order-stable, so per-turn text
+   equality is checkable.
+
 2. **Scalable decompose/dictionary-join** (`gd_decompose` →
-   `assign_base_ids` → `gd_dedup_metrics` → `gd_reconstruct`): chunks
-   become rows `(conv_id, chunk_idx, base, deviation)`; the reference's
-   stateful LRU dictionary probe (`src/dict.rs:38-63`) becomes a
+   `assign_base_ids` → `gd_dedup_metrics` → `gd_reconstruct`): each turn's
+   UTF-8 bytes are chunked on their own, so a repeated turn decomposes into
+   the same bases wherever it occurs. Chunks become rows
+   `(conv_id, turn_idx, chunk_idx, base, deviation, last_chunk_pad)`; the
+   reference's stateful LRU dictionary probe (`src/dict.rs:38-63`) becomes a
    dictionary-encoding *join* against a distinct-base table; reconstruction
-   is the inverse join + batched re-encode + ordered reassembly. This is
+   is the inverse join + batched re-encode + per-turn reassembly. This is
    the path that scales to 10^12 turns: no global state, one shuffle by
    conv_id, one by base.
-
-Serialization contract: a conversation's turns are packed as repeated
-``[u32 big-endian byte length][utf-8 bytes]`` records in turn order —
-lossless and order-stable, so per-turn text equality is checkable.
 """
 
 from __future__ import annotations
@@ -70,9 +73,8 @@ def _conv_spread(df: DataFrame) -> DataFrame:
     is scale-free: defaultParallelism is the cluster's core count, which
     is what a compute-bound stage wants. Applied ONLY to the kernel whose
     output feeds no further shuffle (gd_conversation_roundtrip returns one
-    row per conv): gd_decompose's consumers join/aggregate its chunks, and
-    the extra map tasks measurably cost more than the kernel spread saves
-    (ABAB 1.29x worse) — those stay at AQE's width.
+    row per conv). gd_decompose's output is an archive: its conv_id
+    repartition stays at AQE's width, which sizes the archive files.
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n_parts, "conv_id")
@@ -173,6 +175,7 @@ def gd_conversation_roundtrip(
 CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
         T.StructField("chunk_idx", T.LongType()),
         T.StructField("base", T.BinaryType()),
         T.StructField("deviation", T.BinaryType()),
@@ -184,44 +187,54 @@ CHUNK_SCHEMA = T.StructType(
 def gd_decompose(
     transcripts: DataFrame, n: int = 128, k: int = 124, precoding=None
 ) -> DataFrame:
-    """Chunk + RS-decompose every conversation into base/deviation rows.
+    """Chunk + RS-decompose every turn into base/deviation rows.
 
-    One shuffle (groupBy conv_id); decode is numpy-batched over all chunks
-    of a conversation at once inside the Arrow batch. ``precoding``:
-    optional n×n error-alignment matrix T — decompose then operates on
-    c·T (`rs/mod.rs:105-114`), moving 'fluctuating' symbol positions into
-    the deviation so more bases coincide (`DESIGN.md:62-109`).
+    Each turn's UTF-8 bytes are cut on their own n-byte grid, with the
+    last chunk zero-padded on the left (`core._chunk_bytes`), so
+    ``chunk_idx`` restarts at 0 in every turn. The kernel is row-local: one batched decode per
+    Arrow batch. The input is repartitioned by conv_id at AQE's width, so
+    every conversation's rows land in one partition (one archive file).
+    ``precoding``: optional n×n error-alignment matrix T — decompose then
+    operates on c·T (`rs/mod.rs:105-114`), moving 'fluctuating' symbol
+    positions into the deviation so more bases coincide
+    (`DESIGN.md:62-109`).
     """
     if precoding is not None:
         precoding = np.asarray(precoding, dtype=np.uint8).tolist()
 
-    def run(group: pd.DataFrame) -> pd.DataFrame:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         code = _rs_cached(n, k, precoding)
-        group = group.sort_values("turn_idx")
-        buf = serialize_turns(
-            group["turn_idx"].astype(int).tolist(), group["text"].tolist()
-        )
-        from .core import _chunk_bytes
-
-        chunks, pad = _chunk_bytes(buf, n)
-        bases, devs = code.decode(chunks)
-        b = bases.shape[0]
-        return pd.DataFrame(
-            {
-                "conv_id": [group["conv_id"].iloc[0]] * b,
-                "chunk_idx": np.arange(b, dtype=np.int64),
-                "base": [row.tobytes() for row in bases],
-                "deviation": [row.tobytes() for row in devs],
-                "last_chunk_pad": np.where(
-                    np.arange(b) == b - 1, pad, 0
-                ).astype(np.int32),
-            }
-        )
+        for pdf in batches:
+            raw = [t.encode("utf-8") for t in pdf["text"]]
+            lens = np.fromiter(map(len, raw), dtype=np.int64, count=len(raw))
+            # every turn takes at least one chunk: an empty turn is one
+            # all-pad chunk (pad == n), so it survives the round trip
+            n_chunks = np.maximum(1, -(-lens // n))
+            pads = n_chunks * n - lens
+            cuts = (n_chunks - 1) * n  # where each turn's last chunk starts
+            buf = b"".join(
+                r[:c] + bytes(p) + r[c:] for r, c, p in zip(raw, cuts.tolist(), pads.tolist())
+            )
+            bases, devs = code.decode(np.frombuffer(buf, dtype=np.uint8).reshape(-1, n))
+            ends = np.cumsum(n_chunks)
+            chunk_idx = np.arange(n_chunks.sum()) - np.repeat(ends - n_chunks, n_chunks)
+            last_pad = np.zeros(len(chunk_idx), dtype=np.int32)
+            last_pad[ends - 1] = pads
+            yield pd.DataFrame(
+                {
+                    "conv_id": np.repeat(pdf["conv_id"].to_numpy(), n_chunks),
+                    "turn_idx": np.repeat(pdf["turn_idx"].to_numpy(np.int32), n_chunks),
+                    "chunk_idx": chunk_idx.astype(np.int64),
+                    "base": [row.tobytes() for row in bases],
+                    "deviation": [row.tobytes() for row in devs],
+                    "last_chunk_pad": last_pad,
+                }
+            )
 
     return (
         transcripts.select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandas(run, schema=CHUNK_SCHEMA)
+        .repartition("conv_id")
+        .mapInPandas(run, schema=CHUNK_SCHEMA)
     )
 
 
@@ -253,7 +266,7 @@ def gd_dedup_metrics(chunks: DataFrame, dict_size: int = 255, n: int = 128, k: i
     id_bitlen = dict_size.bit_length()
     base_bits, dev_bits = 8 * k, 8 * (n - k)
     first = F.row_number().over(
-        Window.partitionBy("base").orderBy("conv_id", "chunk_idx")
+        Window.partitionBy("base").orderBy("conv_id", "turn_idx", "chunk_idx")
     )
     costed = chunks.withColumn("occ", first).withColumn(
         "bit_cost",
@@ -283,29 +296,34 @@ def gd_reconstruct(
     chunks: DataFrame, n: int = 128, k: int = 124, precoding=None
 ) -> DataFrame:
     """Inverse of gd_decompose: re-encode chunks (applying T^-1 last when
-    error alignment is installed, `rs/mod.rs:147-152`), reassemble
-    conversations in chunk order, deserialize back to
+    error alignment is installed, `rs/mod.rs:147-152`) with one batched
+    encode per conversation, then cut the codewords at turn boundaries,
+    strip each turn's last-chunk pad and decode its UTF-8 bytes back to
     (conv_id, turn_idx, text) rows."""
     if precoding is not None:
         precoding = np.asarray(precoding, dtype=np.uint8).tolist()
 
     def run(group: pd.DataFrame) -> pd.DataFrame:
         code = _rs_cached(n, k, precoding)
-        group = group.sort_values("chunk_idx")
+        group = group.sort_values(["turn_idx", "chunk_idx"])
         bases = np.frombuffer(b"".join(group["base"]), dtype=np.uint8).reshape(-1, k)
         devs = np.frombuffer(b"".join(group["deviation"]), dtype=np.uint8).reshape(
             -1, n - k
         )
-        cw = code.encode(bases, devs)
-        pad = int(group["last_chunk_pad"].iloc[-1])
-        flat = cw.reshape(-1)
-        if pad:
-            flat = np.concatenate([cw[:-1].reshape(-1), cw[-1, pad:]])
-        idxs, texts = deserialize_turns(flat.tobytes())
+        flat = code.encode(bases, devs).tobytes()
+        turn_idx = group["turn_idx"].to_numpy(np.int32)
+        # one (start, end) chunk span per turn, in turn order
+        ends = np.flatnonzero(np.diff(turn_idx, append=turn_idx[-1] + 1)) + 1
+        starts = np.concatenate([[0], ends[:-1]])
+        pads = group["last_chunk_pad"].to_numpy()[ends - 1]
+        texts = [
+            (flat[s * n : (e - 1) * n] + flat[(e - 1) * n + p : e * n]).decode("utf-8")
+            for s, e, p in zip(starts.tolist(), ends.tolist(), pads.tolist())
+        ]
         return pd.DataFrame(
             {
                 "conv_id": [group["conv_id"].iloc[0]] * len(texts),
-                "turn_idx": np.asarray(idxs, dtype=np.int32),
+                "turn_idx": turn_idx[starts],
                 "text": texts,
             }
         )

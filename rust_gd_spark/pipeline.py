@@ -622,12 +622,18 @@ def _publish_manifest(path: str, manifest: dict) -> None:
 
 def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> dict:
     """Persist the GD decomposition contract: ``bases(base_id, base,
-    n_refs)`` and ``deviations(conv_id, chunk_idx, base_id, deviation,
-    last_chunk_pad)`` — together lossless (reconstruct = deviations ⋈ bases
-    → gd_reconstruct). Reference analogue: the packed record stream
-    `src/gd_byte_unit.rs:78-98`, as columnar tables. Its jobs (the decompose
-    pin, both table writes) and ``read_gd_outputs``' run under
-    ``gd:store:<run_id>``."""
+    n_refs)`` and ``deviations(conv_id, turn_idx, chunk_idx, base_id,
+    deviation, last_chunk_pad)`` — together lossless (reconstruct =
+    deviations ⋈ bases → gd_reconstruct). Reference analogue: the packed
+    record stream `src/gd_byte_unit.rs:78-98`, as columnar tables.
+
+    Layout: chunks are turn-aligned (each turn on its own n-byte grid, as
+    ``gd_decompose`` emits them), and the deviations keep the decompose's
+    conv_id partitioning, so each conversation lies in one file. Both
+    tables are written with zstd pages, a fixed property of the format.
+    The manifest records ``"layout": "turn"``; ``read_gd_outputs`` refuses
+    an archive without it. Its jobs (the decompose pin, both table writes)
+    and ``read_gd_outputs``' run under ``gd:store:<run_id>``."""
     from .gd.spark import assign_base_ids
 
     base = os.path.join(out_dir, run_id)
@@ -644,11 +650,11 @@ def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> 
         # width the upstream shuffle left them) so the decompose kernel
         # runs once per archive, not once per table write
         bases, with_id = assign_base_ids(chunks.localCheckpoint(eager=True))
-        bases.write.mode("overwrite").parquet(paths["bases"])
+        bases.write.mode("overwrite").option("compression", "zstd").parquet(paths["bases"])
         with_id.select(
-            "conv_id", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
-        ).write.mode("overwrite").parquet(paths["deviations"])
-    manifest = {"run_id": run_id, "tables": paths}
+            "conv_id", "turn_idx", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
+        ).write.mode("overwrite").option("compression", "zstd").parquet(paths["deviations"])
+    manifest = {"run_id": run_id, "layout": "turn", "tables": paths}
     _publish_manifest(manifest_path, manifest)
     return manifest
 
@@ -657,23 +663,32 @@ def read_gd_outputs(spark, out_dir: str, run_id: str = "run-0") -> DataFrame:
     """Inverse of ``write_gd_outputs``: join deviations back to bases,
     returning the full chunk table gd_reconstruct expects. Table paths
     come from the manifest; an archive without one (a write that never
-    finished) raises ``FileNotFoundError`` instead of being read."""
+    finished) raises ``FileNotFoundError``, and one whose manifest does
+    not record the turn-aligned layout raises ``ValueError``, instead of
+    being read."""
     import json
 
     path = os.path.join(out_dir, run_id, "gd_manifest.json")
     try:
         with open(path) as fh:
-            tables = json.load(fh)["tables"]
+            manifest = json.load(fh)
     except FileNotFoundError:
         raise FileNotFoundError(
             f"GD archive {run_id!r} under {out_dir!r} has no gd_manifest.json: "
             "its write never completed"
         ) from None
+    if manifest.get("layout") != "turn":
+        raise ValueError(
+            f"GD archive {run_id!r} under {out_dir!r} is not turn-aligned "
+            f"(layout {manifest.get('layout')!r}): it was written in an older "
+            "format and cannot be reconstructed"
+        )
+    tables = manifest["tables"]
     with job_description(spark.sparkContext, f"gd:store:{run_id}"):
         bases = spark.read.parquet(tables["bases"])
         devs = spark.read.parquet(tables["deviations"])
     return devs.join(bases.select("base_id", "base"), "base_id").select(
-        "conv_id", "chunk_idx", "base", "deviation", "last_chunk_pad"
+        "conv_id", "turn_idx", "chunk_idx", "base", "deviation", "last_chunk_pad"
     )
 
 

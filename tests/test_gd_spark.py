@@ -98,9 +98,46 @@ def test_decompose_reconstruct_with_alignment(spark, transcripts_df):
     assert restored.exceptAll(orig).count() == 0
     # aligned decompose must differ from unaligned (T actually applied)
     plain = gd_decompose(sample, n=64, k=60)
-    a = {(r.conv_id, r.chunk_idx): r.base for r in chunks.collect()}
-    b = {(r.conv_id, r.chunk_idx): r.base for r in plain.collect()}
+    a = {(r.conv_id, r.turn_idx, r.chunk_idx): r.base for r in chunks.collect()}
+    b = {(r.conv_id, r.turn_idx, r.chunk_idx): r.base for r in plain.collect()}
     assert any(a[key] != b[key] for key in a)
+
+
+def test_edge_case_turns_survive_archive(spark, tmp_path):
+    """Decompose -> write -> read -> reconstruct keeps an empty turn (one
+    all-pad chunk, not zero rows), a multi-byte character cut by a chunk
+    boundary, and gives identical turns in different conversations the
+    same bases."""
+    from rust_gd_spark.pipeline import read_gd_outputs, write_gd_outputs
+
+    n, k = 64, 60
+    same = "the same turn in two conversations " * 5
+    rows = [
+        ("conv-a", 0, ""),
+        ("conv-a", 1, "x" * 62 + "寿" + "y" * 10),  # bytes 62..64 straddle chunk 0/1
+        ("conv-a", 2, same),
+        ("conv-b", 0, same),
+    ]
+    tr = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    out = str(tmp_path / "gdout")
+    write_gd_outputs(gd_decompose(tr, n=n, k=k), out, run_id="edge")
+    chunks = read_gd_outputs(spark, out, run_id="edge").cache()
+
+    empty = chunks.filter("conv_id = 'conv-a' and turn_idx = 0").collect()
+    assert [(r.chunk_idx, r.last_chunk_pad) for r in empty] == [(0, n)]
+    restored = gd_reconstruct(chunks, n=n, k=k)
+    assert sorted(restored.collect()) == sorted(tr.collect())
+
+    ids = (
+        spark.read.parquet(f"{out}/edge/deviations")
+        .filter("(conv_id = 'conv-a' and turn_idx = 2) or conv_id = 'conv-b'")
+        .collect()
+    )
+    by_turn: dict = {}
+    for r in sorted(ids, key=lambda r: r.chunk_idx):
+        by_turn.setdefault(r.conv_id, []).append(r.base_id)
+    assert len(by_turn["conv-a"]) == 3
+    assert by_turn["conv-a"] == by_turn["conv-b"]
 
 
 def test_hamming_rejects_alignment(spark):

@@ -248,6 +248,53 @@ def test_read_gd_outputs_requires_manifest(spark, transcripts_df, tmp_path):
         read_gd_outputs(spark, out, run_id="g1")
 
 
+def test_read_gd_outputs_rejects_conversation_packed_archive(spark, transcripts_df, tmp_path):
+    """A manifest without the turn-aligned layout key (an archive of the
+    older conversation-packed format) raises instead of being
+    reconstructed as garbage."""
+    import json
+
+    from rust_gd_spark.gd.spark import gd_decompose
+    from rust_gd_spark.pipeline import read_gd_outputs, write_gd_outputs
+
+    out = str(tmp_path / "gdout")
+    manifest = write_gd_outputs(gd_decompose(transcripts_df.limit(20)), out, run_id="g1")
+    assert manifest["layout"] == "turn"
+    del manifest["layout"]
+    with open(os.path.join(out, "g1", "gd_manifest.json"), "w") as fh:
+        json.dump(manifest, fh)
+    with pytest.raises(ValueError, match="'g1'"):
+        read_gd_outputs(spark, out, run_id="g1")
+
+
+def test_gd_archive_layout(spark, transcripts_df, tmp_path):
+    """Both archive tables carry zstd pages on every column, and each
+    conversation's deviation rows lie in one parquet file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from rust_gd_spark.gd.spark import gd_decompose
+    from rust_gd_spark.pipeline import write_gd_outputs
+
+    out = str(tmp_path / "gdout")
+    write_gd_outputs(gd_decompose(transcripts_df), out, run_id="g1")
+    for table in ("bases", "deviations"):
+        files = glob.glob(os.path.join(out, "g1", table, "*.parquet"))
+        assert files, table
+        for f in files:
+            meta = pq.ParquetFile(f).metadata
+            for g in range(meta.num_row_groups):
+                rg = meta.row_group(g)
+                assert {rg.column(c).compression for c in range(rg.num_columns)} == {"ZSTD"}
+    files_of: dict = {}
+    for f in glob.glob(os.path.join(out, "g1", "deviations", "*.parquet")):
+        for conv in set(pq.read_table(f, columns=["conv_id"]).column("conv_id").to_pylist()):
+            files_of.setdefault(conv, []).append(f)
+    assert len(files_of) == transcripts_df.select("conv_id").distinct().count()
+    assert all(len(fs) == 1 for fs in files_of.values())
+
+
 def test_path_toggles_disable_stages(spark, turns_df):
     res = near_dup_pipeline(
         turns_df, "uid", "text",
