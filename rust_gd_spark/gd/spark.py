@@ -16,16 +16,19 @@ Two paths, both DataFrame-native:
    records in turn order — lossless and order-stable, so per-turn text
    equality is checkable.
 
-2. **Scalable decompose/dictionary-join** (`gd_decompose` →
-   `assign_base_ids` → `gd_dedup_metrics` → `gd_reconstruct`): each turn's
-   UTF-8 bytes are chunked on their own, so a repeated turn decomposes into
-   the same bases wherever it occurs. Chunks become rows
-   `(conv_id, turn_idx, chunk_idx, base, deviation, last_chunk_pad)`; the
-   reference's stateful LRU dictionary probe (`src/dict.rs:38-63`) becomes a
-   dictionary-encoding *join* against a distinct-base table; reconstruction
-   is the inverse join + batched re-encode + per-turn reassembly. This is
-   the path that scales to 10^12 turns: no global state, one shuffle by
-   conv_id, one by base.
+2. **Scalable decompose/dictionary/reconstruct** (`gd_decompose` →
+   `pipeline.write_gd_outputs` → `pipeline.read_gd_outputs` →
+   `gd_reconstruct`): each turn's UTF-8 bytes are chunked on their own, so
+   a repeated turn decomposes into the same bases wherever it occurs.
+   Chunks become rows `(conv_id, turn_idx, chunk_idx, base, deviation,
+   last_chunk_pad)`; the reference's stateful LRU dictionary probe
+   (`src/dict.rs:38-63`) becomes a join against a distinct-base table.
+   That table is the archive's committed `bases` file (`BASES_SCHEMA`):
+   each distinct base gets a dense id counted within its file, and the
+   `deviations` (`DEVIATIONS_SCHEMA`) hold that id in place of the base.
+   Reconstruction is the inverse join + batched re-encode + per-turn
+   reassembly. No global state and no global counter (ids count within
+   each file, so nothing serializes): one shuffle by conv_id, one by base.
 """
 
 from __future__ import annotations
@@ -183,6 +186,14 @@ CHUNK_SCHEMA = T.StructType(
     ]
 )
 
+# the two archive tables: the dictionary, and the chunks with each base
+# replaced by its id in that dictionary
+_BASE_ID = T.StructField("base_id", T.LongType())
+BASES_SCHEMA = T.StructType([_BASE_ID, CHUNK_SCHEMA["base"]])
+DEVIATIONS_SCHEMA = T.StructType(
+    [_BASE_ID if f.name == "base" else f for f in CHUNK_SCHEMA.fields]
+)
+
 
 def gd_decompose(
     transcripts: DataFrame, n: int = 128, k: int = 124, precoding=None
@@ -236,22 +247,6 @@ def gd_decompose(
         .repartition("conv_id")
         .mapInPandas(run, schema=CHUNK_SCHEMA)
     )
-
-
-def assign_base_ids(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Dictionary-encode bases: the GD dictionary as a DataFrame join.
-
-    Returns (bases table ``(base_id, base, n_refs)``, chunks with base_id).
-    base_id = xxhash64(base) — content-addressed, deterministic, no global
-    sequential counter (which would serialize at 10^12 scale). 64-bit
-    collision odds at 10^9 distinct bases ~ 3e-2 per Birthday bound on the
-    whole corpus — acceptable for dedup-metric purposes; the reconstruct
-    path carries the base column itself so correctness never depends on id
-    uniqueness.
-    """
-    with_id = chunks.withColumn("base_id", F.xxhash64("base"))
-    bases = with_id.groupBy("base_id", "base").agg(F.count("*").alias("n_refs"))
-    return bases, with_id
 
 
 def gd_dedup_metrics(chunks: DataFrame, dict_size: int = 255, n: int = 128, k: int = 124) -> DataFrame:

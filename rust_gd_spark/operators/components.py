@@ -205,9 +205,9 @@ def assign_clusters(
 
     ``pair_edges`` carries string ids (id_l, id_r); nodes are mapped to
     int64 via xxhash64 (content-addressed — no sequential counter to
-    serialize on, same reasoning as ``assign_base_ids``); singletons keep
-    their own hash as cluster_id. The id→hash mapping stays in the output,
-    so a 64-bit collision can only merge two clusters, never corrupt ids.
+    serialize on); singletons keep their own hash as cluster_id. The
+    id→hash mapping stays in the output, so a 64-bit collision can only
+    merge two clusters, never corrupt ids.
     """
     nodes = ids.select(F.col(id_col).alias("id"), F.xxhash64(id_col).alias("node"))
     edges = pair_edges.select(

@@ -620,40 +620,60 @@ def _publish_manifest(path: str, manifest: dict) -> None:
     os.replace(tmp, path)
 
 
+# both archive tables: zstd pages, and v2 pages, whose DELTA_BINARY_PACKED
+# stores the bases' consecutive ids in almost nothing (zstd alone leaves
+# them at about 4 bytes each); fixed properties of the format
+_GD_PAGES = {"compression": "zstd", "parquet.writer.version": "v2"}
+
+
 def write_gd_outputs(chunks: DataFrame, out_dir: str, run_id: str = "run-0") -> dict:
-    """Persist the GD decomposition contract: ``bases(base_id, base,
-    n_refs)`` and ``deviations(conv_id, turn_idx, chunk_idx, base_id,
-    deviation, last_chunk_pad)`` — together lossless (reconstruct =
-    deviations ⋈ bases → gd_reconstruct). Reference analogue: the packed
-    record stream `src/gd_byte_unit.rs:78-98`, as columnar tables.
+    """Persist the GD decomposition contract: ``bases(base_id, base)`` and
+    ``deviations(conv_id, turn_idx, chunk_idx, base_id, deviation,
+    last_chunk_pad)`` — together lossless (reconstruct = deviations ⋈
+    bases → gd_reconstruct). Reference analogue: the packed record stream
+    `src/gd_byte_unit.rs:78-98`, as columnar tables.
+
+    The committed ``bases`` file is the dictionary. It is written first,
+    sorted by content within each partition, with ``base_id`` its
+    ``monotonically_increasing_id``: consecutive within a file, exactly
+    ``0..D-1`` when AQE coalesces the dictionary to one partition. Bases
+    are unique, so the sort is total and a retried task numbers its rows
+    the same way. The deviations are the chunks joined to that file as
+    read back, so every id they hold is one the bases hold.
 
     Layout: chunks are turn-aligned (each turn on its own n-byte grid, as
-    ``gd_decompose`` emits them), and the deviations keep the decompose's
-    conv_id partitioning, so each conversation lies in one file. Both
-    tables are written with zstd pages, a fixed property of the format.
-    The manifest records ``"layout": "turn"``; ``read_gd_outputs`` refuses
-    an archive without it. Its jobs (the decompose pin, both table writes)
-    and ``read_gd_outputs``' run under ``gd:store:<run_id>``."""
-    from .gd.spark import assign_base_ids
+    ``gd_decompose`` emits them). While the dictionary file is under
+    ``spark.sql.autoBroadcastJoinThreshold`` the join broadcasts it, so the
+    deviations keep the decompose's conv_id partitioning and each
+    conversation lies in one file; past that the join shuffles, which is
+    still correct. Both tables are written with zstd and Parquet v2 pages,
+    fixed properties of the format. The manifest records ``"layout":
+    "turn"``; ``read_gd_outputs`` refuses an archive without it. Its jobs
+    (the decompose pin, both table writes, the dictionary broadcast) run
+    under ``gd:store:<run_id>``."""
+    from .gd.spark import BASES_SCHEMA, DEVIATIONS_SCHEMA
 
     base = os.path.join(out_dir, run_id)
     manifest_path = os.path.join(base, "gd_manifest.json")
     # a rewrite of an existing archive unpublishes it first: a crash while
     # the tables are overwritten must not leave the old manifest pointing
-    # at half-written tables
+    # at half-written tables (old deviations against a new dictionary)
     if os.path.exists(manifest_path):
         os.remove(manifest_path)
     paths = {"bases": os.path.join(base, "bases"),
              "deviations": os.path.join(base, "deviations")}
-    with job_description(chunks.sparkSession.sparkContext, f"gd:store:{run_id}"):
+    spark = chunks.sparkSession
+    with job_description(spark.sparkContext, f"gd:store:{run_id}"):
         # both tables derive from the same chunks: pin them once (at the
         # width the upstream shuffle left them) so the decompose kernel
         # runs once per archive, not once per table write
-        bases, with_id = assign_base_ids(chunks.localCheckpoint(eager=True))
-        bases.write.mode("overwrite").option("compression", "zstd").parquet(paths["bases"])
-        with_id.select(
-            "conv_id", "turn_idx", "chunk_idx", "base_id", "deviation", "last_chunk_pad"
-        ).write.mode("overwrite").option("compression", "zstd").parquet(paths["deviations"])
+        pinned = chunks.localCheckpoint(eager=True)
+        (pinned.select("base").distinct().sortWithinPartitions("base")
+         .select(F.monotonically_increasing_id().alias("base_id"), "base")
+         .write.mode("overwrite").options(**_GD_PAGES).parquet(paths["bases"]))
+        bases = spark.read.schema(BASES_SCHEMA).parquet(paths["bases"])
+        (pinned.join(bases, "base").select(*DEVIATIONS_SCHEMA.fieldNames())
+         .write.mode("overwrite").options(**_GD_PAGES).parquet(paths["deviations"]))
     manifest = {"run_id": run_id, "layout": "turn", "tables": paths}
     _publish_manifest(manifest_path, manifest)
     return manifest
@@ -665,8 +685,16 @@ def read_gd_outputs(spark, out_dir: str, run_id: str = "run-0") -> DataFrame:
     come from the manifest; an archive without one (a write that never
     finished) raises ``FileNotFoundError``, and one whose manifest does
     not record the turn-aligned layout raises ``ValueError``, instead of
-    being read."""
+    being read.
+
+    Both tables are read with their known schemas (``BASES_SCHEMA``,
+    ``DEVIATIONS_SCHEMA``), so the read runs no schema-inference job; the
+    join runs in the caller's action. Columns outside those schemas are
+    ignored, so an archive with content-hashed ids and an ``n_refs``
+    column reads the same way."""
     import json
+
+    from .gd.spark import BASES_SCHEMA, CHUNK_SCHEMA, DEVIATIONS_SCHEMA
 
     path = os.path.join(out_dir, run_id, "gd_manifest.json")
     try:
@@ -684,12 +712,9 @@ def read_gd_outputs(spark, out_dir: str, run_id: str = "run-0") -> DataFrame:
             "format and cannot be reconstructed"
         )
     tables = manifest["tables"]
-    with job_description(spark.sparkContext, f"gd:store:{run_id}"):
-        bases = spark.read.parquet(tables["bases"])
-        devs = spark.read.parquet(tables["deviations"])
-    return devs.join(bases.select("base_id", "base"), "base_id").select(
-        "conv_id", "turn_idx", "chunk_idx", "base", "deviation", "last_chunk_pad"
-    )
+    bases = spark.read.schema(BASES_SCHEMA).parquet(tables["bases"])
+    devs = spark.read.schema(DEVIATIONS_SCHEMA).parquet(tables["deviations"])
+    return devs.join(bases, "base_id").select(*CHUNK_SCHEMA.fieldNames())
 
 
 def dedup_metrics(clusters: DataFrame) -> DataFrame:

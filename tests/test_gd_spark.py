@@ -4,7 +4,6 @@
 import pyspark.sql.functions as F
 
 from rust_gd_spark.gd.spark import (
-    assign_base_ids,
     deserialize_turns,
     gd_conversation_roundtrip,
     gd_decompose,
@@ -48,13 +47,22 @@ def test_decompose_reconstruct_identity(spark, transcripts_df):
     assert restored.exceptAll(orig).count() == 0
 
 
-def test_base_dictionary_join(spark, transcripts_df):
+def test_archive_integrity(spark, transcripts_df, tmp_path):
+    """The committed bases file is the dictionary: one base per id (the
+    check_inner_integrity analogue), every deviation's id is in it, and on
+    this one-partition fixture the ids are exactly 0..D-1."""
+    from rust_gd_spark.pipeline import write_gd_outputs
+
+    out = str(tmp_path / "gdout")
     chunks = gd_decompose(transcripts_df, n=64, k=60)
-    bases, with_id = assign_base_ids(chunks)
-    # dictionary integrity: one base per id (the check_inner_integrity analogue)
-    dup_ids = bases.groupBy("base_id").count().filter("count > 1")
-    assert dup_ids.count() == 0
-    assert with_id.count() == chunks.count()
+    write_gd_outputs(chunks, out, run_id="g1")
+    bases = spark.read.parquet(f"{out}/g1/bases")
+    devs = spark.read.parquet(f"{out}/g1/deviations")
+    ids = sorted(r.base_id for r in bases.collect())
+    assert len(set(ids)) == len(ids) == chunks.select("base").distinct().count()
+    assert ids == list(range(len(ids)))
+    assert devs.join(bases, "base_id", "left_anti").isEmpty()
+    assert devs.count() == chunks.count()
 
 
 def test_dedup_metrics(spark, transcripts_df):

@@ -268,7 +268,8 @@ def test_read_gd_outputs_rejects_conversation_packed_archive(spark, transcripts_
 
 
 def test_gd_archive_layout(spark, transcripts_df, tmp_path):
-    """Both archive tables carry zstd pages on every column, and each
+    """Both archive tables carry zstd pages on every column, the bases are
+    ``(base_id, base)`` with delta-packed ids (Parquet v2 pages), and each
     conversation's deviation rows lie in one parquet file."""
     import glob
 
@@ -279,6 +280,11 @@ def test_gd_archive_layout(spark, transcripts_df, tmp_path):
 
     out = str(tmp_path / "gdout")
     write_gd_outputs(gd_decompose(transcripts_df), out, run_id="g1")
+    for f in glob.glob(os.path.join(out, "g1", "bases", "*.parquet")):
+        pf = pq.ParquetFile(f)
+        assert pf.schema_arrow.names == ["base_id", "base"]
+        for g in range(pf.metadata.num_row_groups):
+            assert "DELTA_BINARY_PACKED" in pf.metadata.row_group(g).column(0).encodings
     for table in ("bases", "deviations"):
         files = glob.glob(os.path.join(out, "g1", table, "*.parquet"))
         assert files, table
@@ -293,6 +299,72 @@ def test_gd_archive_layout(spark, transcripts_df, tmp_path):
             files_of.setdefault(conv, []).append(f)
     assert len(files_of) == transcripts_df.select("conv_id").distinct().count()
     assert all(len(fs) == 1 for fs in files_of.values())
+
+
+def test_crashed_gd_rewrite_is_not_read(spark, transcripts_df, tmp_path, monkeypatch):
+    """Base ids count within each archive's bases file, so old deviations
+    read against a new dictionary would decode to wrong bytes. A rewrite
+    that crashes after its bases landed must leave the archive unreadable,
+    and a clean rewrite must then restore the new turns byte for byte."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from rust_gd_spark.gd.spark import gd_decompose, gd_reconstruct
+    from rust_gd_spark.pipeline import read_gd_outputs, write_gd_outputs
+
+    out = str(tmp_path / "gdout")
+    convs = sorted(r.conv_id for r in transcripts_df.select("conv_id").distinct().collect())
+    x = transcripts_df.filter(F.col("conv_id").isin(convs[:5]))
+    y = transcripts_df.filter(F.col("conv_id").isin(convs[5:10]))
+    write_gd_outputs(gd_decompose(x), out, run_id="g1")
+
+    devs_path = os.path.join(out, "g1", "deviations")
+    write = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path == devs_path:
+            raise OSError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="injected crash"):
+        write_gd_outputs(gd_decompose(y), out, run_id="g1")
+    monkeypatch.undo()
+    # the crash came after the new dictionary replaced the old one
+    on_disk = {r.base for r in spark.read.parquet(os.path.join(out, "g1", "bases")).collect()}
+    assert on_disk == {r.base for r in gd_decompose(y).select("base").distinct().collect()}
+    with pytest.raises(FileNotFoundError, match="gd_manifest.json"):
+        read_gd_outputs(spark, out, run_id="g1")
+
+    write_gd_outputs(gd_decompose(y), out, run_id="g1")
+    restored = gd_reconstruct(read_gd_outputs(spark, out, run_id="g1"))
+    assert sorted(restored.collect()) == sorted(y.select("conv_id", "turn_idx", "text").collect())
+
+
+def test_read_gd_outputs_reads_content_hashed_archive(spark, transcripts_df, tmp_path):
+    """An archive in the earlier turn-aligned form (xxhash64 ids, an
+    ``n_refs`` column, v1 pages, ``"layout": "turn"``) still reads and
+    reconstructs byte for byte."""
+    import json
+
+    from rust_gd_spark.gd.spark import gd_decompose, gd_reconstruct
+    from rust_gd_spark.pipeline import read_gd_outputs
+
+    out = str(tmp_path / "gdout")
+    convs = sorted(r.conv_id for r in transcripts_df.select("conv_id").distinct().collect())
+    tr = transcripts_df.filter(F.col("conv_id").isin(convs[:5]))
+    with_id = gd_decompose(tr).withColumn("base_id", F.xxhash64("base"))
+    paths = {t: os.path.join(out, "g0", t) for t in ("bases", "deviations")}
+    (with_id.groupBy("base_id", "base").agg(F.count("*").alias("n_refs"))
+     .write.option("compression", "zstd").option("parquet.writer.version", "v1")
+     .parquet(paths["bases"]))
+    (with_id.select("conv_id", "turn_idx", "chunk_idx", "base_id", "deviation", "last_chunk_pad")
+     .write.option("compression", "zstd").option("parquet.writer.version", "v1")
+     .parquet(paths["deviations"]))
+    with open(os.path.join(out, "g0", "gd_manifest.json"), "w") as fh:
+        json.dump({"run_id": "g0", "layout": "turn", "tables": paths}, fh)
+
+    restored = gd_reconstruct(read_gd_outputs(spark, out, run_id="g0"))
+    assert sorted(restored.collect()) == sorted(tr.select("conv_id", "turn_idx", "text").collect())
 
 
 def test_path_toggles_disable_stages(spark, turns_df):
