@@ -2,15 +2,20 @@
 
 All candidate paths (LSH bands, SimHash bands, winnow postings, embedding
 LSH bands) reduce to: hash rows into buckets, emit every within-bucket
-pair, cap and audit oversized buckets. The naive formulation — window-count
-the bucket sizes, then self-equi-join on the bucket key — costs THREE
-shuffles of the full posting table (window sort, join left, join right)
-plus a shuffle of the raw pair blow-up for dedup. This helper does it with
-ONE shuffle:
+pair, cap and audit oversized buckets. Its main caller is
+``pipeline.bucket_candidates``, which posts the MinHash, SimHash and
+winnowing keys of both dedup paths (the batch pipeline and the stream)
+into ONE table ``(path, band, key, id)`` and calls this once; the
+standalone ``*_candidate_pairs`` wrappers call it per path. The naive
+formulation — window-count the bucket sizes, then self-equi-join on the
+bucket key — costs THREE shuffles of the full posting table (window sort,
+join left, join right) plus a shuffle of the raw pair blow-up for dedup.
+This helper does it with ONE shuffle:
 
-    materialize postings → prune singleton buckets (count-agg + join) →
-    groupBy(bucket key) → collect capped, sorted member list →
-    JVM-side pair explosion (two Generate operators, codegen)
+    materialize postings → prune singleton buckets (count-agg + one
+    broadcast join that carries the sizes) → groupBy(bucket key, salt) →
+    collect capped, sorted member list → JVM-side pair explosion (two
+    Generate operators, codegen)
 
 The member array is bounded by ``max_bucket_size`` BEFORE explosion, so a
 hot bucket costs at most cap²/2 generated rows streamed out of a single
@@ -20,7 +25,8 @@ task. Oversized buckets take one of two policies, both audited:
   (audit ``action='dropped'``). Pairs inside a mega-bucket are then only
   found via other bands / the exact path.
 * ``salt_oversized=True`` — SALT-AND-KEEP (SURVEY.md §4.2): members are
-  hashed into ``ceil(size/cap)`` sub-buckets (pairs within each), and the
+  hashed into ``ceil(size/cap)`` sub-buckets (pairs within each; the
+  same groupBy that collects every other bucket, whose salt is 0), and the
   per-sub-bucket min members are chained within the original key — so
   every member of a hot bucket stays CONNECTED to the bucket's component
   with O(size) extra edges and no task ever sees more than ~cap members.
@@ -129,14 +135,15 @@ def bucket_pairs(
     cap = max_bucket_size
     lead = [F.col(order_col).alias(order_col)] if order_col else []
     if history is not None:
-        cols = [*key_cols, id_col, *payload_cols, *filter(None, [order_col])]
+        # a payload column may also be a key column (the pipeline's ``path``)
+        cols = list(dict.fromkeys([*key_cols, id_col, *payload_cols, *filter(None, [order_col])]))
         hist = history.select(*cols).join(df.select(*key_cols), key_cols, "left_semi")
         df = df.select(*cols, F.lit(False).alias("__old")).unionByName(
             hist.withColumn("__old", F.lit(True))
         )
         lead.insert(0, F.col("__old").alias("__old"))  # batch members first
-    # The posting table is scanned below for bucket-size counts, the prune
-    # join, and (when salting) the oversized join. materialize=True
+    # The posting table is scanned twice below: for the bucket-size counts
+    # and by the prune join. materialize=True
     # computes it once (right when the upstream UDF is the expensive part —
     # SimHash fingerprints, winnow); pass False when the posting table is
     # huge but derives cheaply from an already-materialized parent (band
@@ -182,60 +189,45 @@ def bucket_pairs(
         new.alias("bucket_size"),
         F.lit("salted" if salt_oversized else "dropped").alias("action"),
     )
-    if history is None:
-        multi = counts.filter(total <= cap).select(*key_cols)
-        members, n_open = df.join(multi, key_cols), []
-    else:
+    if history is not None:
         audit = counts.filter(hot).select(
             *key_cols, "bucket_size", F.lit("dropped").alias("action")
         ).unionByName(audit)
-        # under the cap: every posting; over it: the batch's own, if 2..cap
-        multi = counts.filter((total <= cap) | ((new >= 2) & (new <= cap)))
-        members = df.join(multi, key_cols).filter((total <= cap) | ~F.col("__old"))
-        n_open = ["n_new"]  # the batch members, sorted first, open the pairs
-    ok = (
-        members.groupBy(*key_cols, *n_open)
-        .agg(F.collect_list(member).alias("ms"))
+    # ONE join of the postings to the counts carries the sizes (one
+    # broadcast of the counts), and ONE filter keeps what gets paired: every
+    # posting of a bucket within the cap; over it, the batch's own (history
+    # is dropped) if 2 or more, and only up to the cap unless salting.
+    keep = new >= 2 if salt_oversized else (new >= 2) & (new <= cap)
+    if history is not None:
+        keep = keep & ~F.col("__old")
+    members = df.join(counts, key_cols).filter((total <= cap) | keep)
+    # Salt-and-keep (SURVEY.md §4.2): a bucket over the cap is split into
+    # ceil(size/cap) hash sub-buckets (AQE-splittable agg on the wider key;
+    # each task sees ~cap members whp) paired within, and the sub-buckets'
+    # min members are CHAINED within the original key below. Connectivity
+    # of the hot bucket is fully preserved; edge count is O(size). Within
+    # the cap there is one sub-bucket (salt 0): the whole bucket.
+    n_open = [] if history is None else ["n_new"]  # batch members open pairs
+    salt = F.pmod(F.xxhash64(id_col), F.ceil(new / F.lit(cap)))
+    groups = (
+        members.groupBy(*key_cols, salt.alias("__salt"), *n_open)
         # sorted by the struct's first field: id (⇒ id_l < id_r), or
         # order_col when set (⇒ sorted-neighborhood pairing)
-        .select(F.array_sort("ms").alias("ms"), *n_open)
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
     )
-    pairs = _explode_pairs(ok, payload_cols, neighbor_window, *n_open)
-
-    # The salted branch adds two more scans of the posting table (the
-    # oversized join + the representative agg). Hot buckets are the
-    # exception, not the rule — build the branch only when the counts
-    # checkpoint saw an oversized bucket.
+    pairs = _explode_pairs(groups, payload_cols, neighbor_window, *n_open)
+    # The chain costs one more shuffle (of one row per group: the groups'
+    # own shuffle is shared). Hot buckets are the exception, not the rule —
+    # build it only when the counts checkpoint saw one. It reads every
+    # group, not just the salted ones: a filter would be pushed below the
+    # groups' agg and split that shared shuffle, and a bucket within the
+    # cap has one group, hence no chain pair.
     if salt_oversized and n_over.get["salted"]:
-        # Salt-and-keep: split each hot bucket into ceil(size/cap) hash
-        # sub-buckets (AQE-splittable agg on the wider key; each task sees
-        # ~cap members whp), pair within sub-buckets, then CHAIN the
-        # per-sub-bucket min members within the original key. Connectivity
-        # of the hot bucket is fully preserved; edge count is O(size).
-        n_sub = F.ceil(new / F.lit(cap))
-        batch = df if history is None else df.filter(~F.col("__old"))
-        salted = batch.join(over, key_cols).withColumn(
-            "__salt", F.pmod(F.xxhash64(id_col), n_sub)
-        )
-        sub = (
-            salted.groupBy(*key_cols, "__salt")
-            .agg(F.collect_list(member).alias("ms"))
-            .select(F.array_sort("ms").alias("ms"))
-        )
-        reps = (
-            salted.groupBy(*key_cols, "__salt")
-            .agg(F.min(member).alias("m"))  # struct min = min id (id first)
-            .groupBy(*key_cols)
-            .agg(F.collect_list("m").alias("ms"))
-            .select(F.array_sort("ms").alias("ms"))
-        )
-        pairs = pairs.unionByName(
-            _explode_pairs(sub, payload_cols, neighbor_window)
-        ).unionByName(
-            # pure chain over the (possibly many) representatives: linear
-            # output regardless of sub-bucket count
-            _explode_pairs(reps, payload_cols, neighbor_window=1)
-        )
+        reps = groups.groupBy(*key_cols).agg(
+            F.array_sort(F.collect_list(F.col("ms")[0])).alias("ms"))
+        # pure chain over the (possibly many) sub-bucket minima: linear
+        # output regardless of sub-bucket count
+        pairs = pairs.unionByName(_explode_pairs(reps, payload_cols, neighbor_window=1))
 
     if history is not None:
         # batch-first order breaks id order: swap both sides where needed,

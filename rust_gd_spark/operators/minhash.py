@@ -22,7 +22,9 @@ Scale notes (the parts that matter at 10^12 turns):
   mega-buckets; buckets larger than ``max_bucket_size`` are salted (hashed
   into chained ~cap-sized sub-buckets) or excluded from the O(m²)
   expansion, per ``salt_oversized``, and audited either way — never
-  silent (see ``lsh_candidate_pairs`` return).
+  silent (see ``lsh_candidate_pairs`` return). The pipelines post the
+  same ``(band_idx, band_hash)`` keys as path 0 of the one posting table
+  of ``pipeline.bucket_candidates`` instead of calling the wrapper.
 * Verification joins the (small) candidate-pair table back to per-doc
   shingle arrays — 2 hash joins, broadcast when the pair table is small.
 

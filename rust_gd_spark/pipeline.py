@@ -1,11 +1,12 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
 north_rule shape: transcripts → (turn or conversation granularity) →
-exact hash dedup → one fused sketch pass over the representatives → three
-candidate paths (MinHash/LSH, SimHash, winnowing-substring) → union of
-verified pair edges → large-star/small-star connected components →
-cluster table, with per-stage materialization (resume from
-checkpoint), per-stage row counts, and dedup-ratio metrics.
+exact hash dedup → one fused sketch pass over the representatives → one
+posting table of the three candidate paths (MinHash/LSH bands, SimHash
+bands, winnowing fingerprints) and one bucket pass over it → one verify
+per path → union of verified pair edges → large-star/small-star
+connected components → cluster table, with per-stage materialization
+(resume from checkpoint), per-stage row counts, and dedup-ratio metrics.
 
 Resumability (SURVEY.md §4.3): when ``checkpoint_dir`` is set, every stage
 writes parquet under ``{checkpoint_dir}/{run_id}/{stage}``; a stage whose
@@ -20,12 +21,12 @@ from __future__ import annotations
 import functools
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from .operators import exactdup, minhash, simhash, substring
+from .operators._buckets import bucket_pairs
 from .operators.components import assign_clusters
 from .session import job_description
 
@@ -156,13 +157,10 @@ class _StageRunner:
     """
 
     def __init__(self, spark, checkpoint_dir: str | None, run_id: str):
-        import threading
-
         self.spark = spark
         self.dir = checkpoint_dir
         self.run_id = run_id
         self.metrics: list[tuple] = []
-        self._lock = threading.Lock()  # stages run from concurrent threads
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.dir, self.run_id, stage)
@@ -178,8 +176,9 @@ class _StageRunner:
         local_only: bool = False,
     ) -> DataFrame:
         """``lazy=True`` marks a stage whose output is consumed at most
-        once downstream (verify-pair frames, the pair union) or is an
-        optional side-product (skew-audit frames): with no checkpoint_dir
+        once downstream (verify-pair frames, the pair union, the
+        candidates when one path reads them) or is an optional
+        side-product (the skew-audit frame): with no checkpoint_dir
         it is returned unmaterialized, so its one consumer evaluates it
         once from the checkpointed upstream stages and an unread audit
         costs no job; its ``rows`` is NULL. With a checkpoint_dir every
@@ -214,8 +213,7 @@ class _StageRunner:
                     out = self.spark.read.parquet(self._path(stage))
         rows = None if obs is None else obs.get["rows"]
         wall_ms = int((time.monotonic() - t0) * 1000)
-        with self._lock:
-            self.metrics.append((self.run_id, stage, rows, wall_ms, resumed))
+        self.metrics.append((self.run_id, stage, rows, wall_ms, resumed))
         return out
 
     def metrics_df(self) -> DataFrame:
@@ -229,16 +227,80 @@ def _edges(pairs: DataFrame, path: str, score) -> DataFrame:
     return pairs.select("id_l", "id_r", F.lit(path).alias("path"), score.alias("score"))
 
 
-def _staged_candidates(runner: _StageRunner, name: str, build_cands, lazy=False):
-    """Materialize a candidate-pair stage AND its skew-audit frame as
-    two resumable stages sharing one (memoized) build. On resume both
-    read back from parquet, so ``PipelineResult.audits`` is populated
-    on resumed runs too — oversized buckets are never silently
-    invisible just because the run restarted. ``lazy`` leaves the
-    candidate stage unmaterialized (its verify is its only reader)."""
-    build = functools.cache(build_cands)
-    cand = runner.run(f"{name}_cands", lambda: build()[0], lazy=lazy)
-    return cand, runner.run(f"{name}_skew_audit", lambda: build()[1], lazy=True)
+# the candidate paths by their code in the shared posting table: edge path
+# name, audit name, and the audit's names for the posting's band and key
+# (a path without a band posts band 0)
+_PATHS = {
+    0: ("minhash", "lsh_skew", {"band": "band_idx", "key": "band_hash"}),
+    1: ("simhash", "simhash_skew", {"band": "band_idx", "key": "band_val"}),
+    2: ("substring", "substring_skew", {"key": "fp"}),
+}
+
+
+def _postings(path: int, frame: DataFrame) -> DataFrame:
+    """``(path tinyint, band int, key long, id)`` rows of one path, from a
+    frame holding that path's own band/key column names."""
+    keys = _PATHS[path][2]
+    band = F.col(keys["band"]) if "band" in keys else F.lit(0)
+    return frame.select(
+        F.lit(path).cast("tinyint").alias("path"), band.alias("band"),
+        F.col(keys["key"]).alias("key"), "id",
+    )
+
+
+def _enabled(cfg: DedupConfig) -> list[int]:
+    """The codes of the enabled near-dup paths."""
+    return [p for p, on in enumerate(
+        (cfg.enable_minhash, cfg.enable_simhash, cfg.enable_substring)) if on]
+
+
+def bucket_candidates(
+    sk: DataFrame,
+    cfg: DedupConfig,
+    history: DataFrame | None = None,
+    oversized: Observation | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(cands, audit)`` of every enabled path from ONE posting table and
+    one ``_buckets.bucket_pairs`` call over the sketch frame ``sk``:
+    ``cands(path, id_l, id_r)`` deduplicated, ``audit(path, band, key,
+    bucket_size, action)``. Each path posts ``(path, band, key, id)``:
+    MinHash ``(0, band_idx, band_hash)``, SimHash ``(1, band_idx,
+    band_val)``, winnowing ``(2, 0, fp)``. ``path`` leads the bucket key,
+    so equal keys of two paths never share a bucket; it also rides along
+    as a payload, so each pair carries its path. Per path the result
+    equals the standalone ``lsh_candidate_pairs``,
+    ``simhash_candidate_pairs`` and ``substring_candidate_pairs`` (salted
+    at ``cfg.max_bucket_size``). ``history`` (stored MinHash band
+    postings, ``(band_idx, band_hash, id)``) goes to ``bucket_pairs`` as
+    path 0's, and ``oversized`` goes with it."""
+    # every explode re-derives from the pinned sketch frame in codegen for
+    # each reader (the count agg, the prune join): never a sketch kernel
+    parts = []
+    if cfg.enable_minhash:
+        parts.append(_postings(0, minhash.explode_band_hashes(sk.select("id", "bands"))))
+    if cfg.enable_simhash:
+        parts.append(_postings(1, simhash.simhash_bands(sk.select("id", "fp"), cfg.sim_bands)))
+    if cfg.enable_substring:
+        parts.append(_postings(2, sk.select("id", F.explode("fps").alias("fp"))))
+    pairs, audit = bucket_pairs(
+        functools.reduce(DataFrame.unionByName, parts), ["path", "band", "key"],
+        payload_cols=["path"],
+        max_bucket_size=cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
+        materialize=False, salt_oversized=True, oversized=oversized,
+        history=None if history is None else _postings(0, history),
+    )
+    return pairs.select(F.col("path_l").alias("path"), "id_l", "id_r").dropDuplicates(), audit
+
+
+def path_audits(audit: DataFrame, cfg: DedupConfig) -> dict:
+    """``bucket_candidates``' audit split by path, each in its path's own
+    column names: ``lsh_skew(band_idx, band_hash, …)``,
+    ``simhash_skew(band_idx, band_val, …)``, ``substring_skew(fp, …)``."""
+    return {
+        _PATHS[p][1]: audit.filter(F.col("path") == p).select(
+            *[F.col(c).alias(a) for c, a in _PATHS[p][2].items()], "bucket_size", "action")
+        for p in _enabled(cfg)
+    }
 
 
 def dedup_stages(
@@ -248,24 +310,34 @@ def dedup_stages(
     history: dict | None = None,
 ) -> tuple[DataFrame, DataFrame | None, list[DataFrame], dict, int | None]:
     """The dedup core both paths share, over the keyed ``base(id, text)``:
-    exact groups → lazy reps → the one ``sketches`` pass → the enabled
-    near-dup chains. Returns ``(exact_groups, sk, path_pairs, audits,
-    n_audit)``:
+    exact groups → lazy reps → the one ``sketches`` pass → one bucket pass
+    over the enabled paths' postings → one verify per path. Returns
+    ``(exact_groups, sk, path_pairs, audits, n_audit)``:
 
     * ``exact_groups(id, content_key, canonical_id, new)`` for every
       ``base`` row (``exactdup.exact_dup_groups``: canonical = the group's
       min id) and ``sk``, the pinned sketch frame of the new groups'
       canonical rows (None when every near-dup path is off);
     * one verified edge frame per enabled path (MinHash, SimHash,
-      substring order) and the skew audits by name;
-    * ``n_audit``, the MinHash audit's row count observed on the
-      candidates' own pins (None if that stage was resumed or is off), so
-      a caller appends the audit only when non-empty without a probe job.
+      substring order) and the skew audits by name (``lsh_skew``,
+      ``simhash_skew``, ``substring_skew``), each in its path's own
+      column names;
+    * ``n_audit``, the audit's row count observed on the bucket pass's
+      counts pin (None if that stage was resumed or every path is off),
+      so a caller appends the audit only when non-empty without a probe
+      job.
+
+    The candidates of all paths come from one bucket pass
+    (``bucket_candidates``): one count agg, one prune join, one salting
+    decision and one audit for every path. Its ``cands(path, id_l, id_r)``
+    stage is pinned when several verifies read it, and lazy when one path
+    is on: its verify is then its only reader. Each verify filters its
+    own path (SimHash joins its fingerprints back from ``sk``).
 
     ``history`` holds the stream's stores by name (``content_keys``,
     ``bands``, ``shingles``; each None when absent). A stored content key
     keeps its canonical id and is not new; the stored band postings are
-    ``minhash.lsh_candidate_pairs``' ``history`` (``_buckets.bucket_pairs``
+    the bucket pass's ``history``, as path 0 (``_buckets.bucket_pairs``
     owns the skew policy for both: which keys are salted and which drop
     their history); the verify reads the stored shingles too. SimHash and
     substring keep no stores, so enabling either with ``history`` raises
@@ -306,114 +378,63 @@ def dedup_stages(
         "reps", lambda: exact_groups.filter(new_reps).select("id").join(base, "id"),
         lazy=True,
     )
-    audits: dict = {}
+    on = _enabled(cfg)
+    if not on:  # exact only: no sketch pass at all
+        return exact_groups, None, [], {}, None
+    # ONE Arrow pass over the reps computes every sketch the enabled paths
+    # read (shingles + fused MinHash bands, SimHash fp, winnow fps); the
+    # posting table and the verifies fork from this pinned frame
+    sk = runner.run("sketches", lambda: sketches(reps, cfg))
     n_audit: list = []
 
-    # --- MinHash/LSH path -------------------------------------------------
-    def _mh_chain():
-        # the band explode re-derives from the pinned sketch frame in
-        # codegen for every reader (bucket_pairs' count agg and prune join,
-        # or its history union pin): never the signature kernel
-        banded = minhash.explode_band_hashes(sk.select("id", "bands"))
+    @functools.cache  # the cands and skew_audit stages share one build
+    def build():
+        oversized = Observation()
+        out = bucket_candidates(sk, cfg, hist.get("bands"), oversized)
+        n_audit.append(oversized.get["n"])  # observed on the counts pin
+        return out
 
-        def _cands():
-            oversized = Observation()
-            pairs, audit = minhash.lsh_candidate_pairs(
-                banded, cfg.max_bucket_size, neighbor_window=cfg.neighbor_window,
-                salt_oversized=True, oversized=oversized, history=hist.get("bands"),
-            )
-            n_audit.append(oversized.get["n"])
-            return pairs.select("id_l", "id_r"), audit
+    # pinned when several verifies read it; lazy when one path is on, as
+    # its verify is then its only reader
+    cands = runner.run("cands", lambda: build()[0], lazy=len(on) == 1)
+    # lazy: read only if a caller reads an audit; on resume it is read back
+    # from parquet, so the audits are there on resumed runs too
+    audits = path_audits(runner.run("skew_audit", lambda: build()[1], lazy=True), cfg)
 
-        # lazy: the verify is the candidates' only reader
-        cand, audits["lsh_skew"] = _staged_candidates(runner, "minhash", _cands, lazy=True)
+    path_pairs: list = []
+
+    def _verified(path: int, verify, score) -> None:
+        # lazy: the verify joins read only pinned frames and feed exactly
+        # one consumer (the pair union, or the stream's edges append)
+        name = _PATHS[path][0]
+        pairs = runner.run(f"{name}_pairs", lambda: verify(
+            cands.filter(F.col("path") == path).select("id_l", "id_r")), lazy=True)
+        path_pairs.append(_edges(pairs, name, score))
+
+    if cfg.enable_minhash:
         shingles = sk.select("id", "shingles")
         if hist.get("shingles") is not None:
             shingles = shingles.unionByName(hist["shingles"].select("id", "shingles"))
-        # lazy: the verify joins read only pinned frames and feed exactly
-        # one consumer (the pair union, or the stream's edges append)
-        pairs = runner.run(
-            "minhash_pairs",
-            lambda: minhash.verify_jaccard(cand, shingles, cfg.jaccard_threshold),
-            lazy=True,
-        )
-        return _edges(pairs, "minhash", F.col("jaccard"))
+        _verified(0, lambda c: minhash.verify_jaccard(c, shingles, cfg.jaccard_threshold),
+                  F.col("jaccard"))
+    if cfg.enable_simhash:
+        # the fingerprints join back onto the deduplicated candidates
+        fp = sk.select("id", "fp")
 
-    # --- SimHash path -------------------------------------------------------
-    def _sh_chain():
-        # the fp column is compact (one int64 per rep) — the band explode
-        # is a cheap JVM re-derivation from the pinned sketch frame for
-        # both consumers below.
-        fps = sk.select("id", "fp")
+        def _hamming(c):
+            dist = F.bit_count(F.col("fp_l").bitwiseXOR(F.col("fp_r")))
+            return (c.join(fp.toDF("id_l", "fp_l"), "id_l").join(fp.toDF("id_r", "fp_r"), "id_r")
+                    .select("id_l", "id_r", dist.alias("hamming_dist"))
+                    .filter(F.col("hamming_dist") <= cfg.max_hamming))
 
-        # memoized: building the candidate DAG runs an eager sub-job
-        # (the bucket-count checkpoint inside bucket_pairs); the audit
-        # stage and the verify stage must share ONE build, not pay it
-        # twice.
-        @functools.cache
-        def _sh_cands():
-            return simhash.simhash_candidate_pairs(
-                simhash.simhash_bands(fps, bands=cfg.sim_bands),
-                cfg.max_bucket_size,
-                neighbor_window=cfg.neighbor_window,
-                materialize=False,
-                salt_oversized=True,
-            )
-
-        # the audit derives from the compact bucket-count agg — persist it
-        # as its own stage. The raw 16-bit-band collision stream is
-        # quadratic in corpus size and is deliberately NEVER staged: the
-        # JVM Hamming filter in verify fuses over it before anything
-        # materializes.
-        audits["simhash_skew"] = runner.run(
-            "simhash_skew_audit", lambda: _sh_cands()[1], lazy=True
-        )
-        pairs = runner.run(
-            "simhash_pairs",
-            lambda: simhash.verify_hamming(_sh_cands()[0], cfg.max_hamming),
-            lazy=True,
-        )
-        return _edges(pairs, "simhash", 1.0 - F.col("hamming_dist") / 64.0)
-
-    # --- substring path -----------------------------------------------------
-    def _ss_chain():
-        def _ss_cands():
-            return substring.substring_candidate_pairs(
-                sk.select("id", "fps"), cfg.max_bucket_size,
-                neighbor_window=cfg.neighbor_window, salt_oversized=True,
-            )
-
-        cand, audits["substring_skew"] = _staged_candidates(runner, "substring", _ss_cands)
-        pairs = runner.run(
-            "substring_pairs",
-            # texts from the pinned base: candidate ids are all reps
-            lambda: substring.verify_common_substring(
-                cand, base, "id", "text", cfg.min_substring_len,
-                # clustering needs only the threshold decision; the exact
-                # LCS length is ~10× slower on long documents
-                exact_length=False,
-            ),
-            lazy=True,
-        )
-        return _edges(pairs, "substring", F.col("common_len").cast("double"))
-
-    chains = [chain for on, chain in ((cfg.enable_minhash, _mh_chain),
-                                      (cfg.enable_simhash, _sh_chain),
-                                      (cfg.enable_substring, _ss_chain)) if on]
-    # ONE Arrow pass over the reps computes every sketch the enabled paths
-    # read (shingles + fused MinHash bands, SimHash fp, winnow fps); the
-    # chains fork from this pinned frame with plain selects. The
-    # exact-only config runs no sketch pass at all.
-    sk = runner.run("sketches", lambda: sketches(reps, cfg)) if chains else None
-    # The chains are independent DAGs over `sketches` (and `base` for the
-    # substring verify), each submitted from its own driver thread; Spark
-    # schedules their jobs fairly, so one chain's stages fill the
-    # driver-barrier gaps of another's (measured 23-39% faster than
-    # sequential submission on the full 4-path config at sf0.1, local[N]).
-    # max_workers=0 raises, so a run with every near-dup path off still
-    # gets a (never used) one-thread pool
-    with ThreadPoolExecutor(max_workers=max(1, len(chains))) as pool:
-        path_pairs = list(pool.map(lambda chain: chain(), chains))
+        _verified(1, _hamming, 1.0 - F.col("hamming_dist") / 64.0)
+    if cfg.enable_substring:
+        # texts from the pinned base: candidate ids are all reps; clustering
+        # needs only the threshold decision (the exact LCS length is ~10×
+        # slower on long documents)
+        _verified(2, lambda c: substring.verify_common_substring(
+            c, base, "id", "text", cfg.min_substring_len, exact_length=False),
+            F.col("common_len").cast("double"))
     return exact_groups, sk, path_pairs, audits, n_audit[0] if n_audit else None
 
 

@@ -32,8 +32,9 @@ Design (scale-first):
   against the ``content_keys`` store (a stored key keeps its canonical
   id; a new key's canonical is the batch's min uid), the new reps are
   sketched (MinHash outputs only), their band postings are paired with
-  each other and with the stored ones in one
-  ``minhash.lsh_candidate_pairs`` call, and candidates are verified by
+  each other and with the stored ones in the one bucket pass of
+  ``pipeline.bucket_candidates`` (the stored postings as path 0, the
+  MinHash path, of its posting table), and candidates are verified by
   exact Jaccard against the batch's and the stored shingles. Identical
   config ⇒ identical candidate semantics.
 * **Skew guard**: ``_buckets.bucket_pairs`` owns it, for history and

@@ -474,3 +474,72 @@ def test_cluster_representatives_pipeline(spark, turns_df):
     for r in rows:
         assert members[r.rep_id] == r.cluster_id
         assert 0 <= r.kept_bytes <= r.total_bytes
+
+
+@pytest.fixture(scope="module")
+def hot_sketches(spark):
+    """Sketches where every path has a bucket over the cap of 3: six
+    variants of one long paragraph (shared MinHash bands, SimHash band
+    values and winnow fingerprints), plus unrelated texts."""
+    from rust_gd_spark.pipeline import sketches
+
+    para = " ".join(f"token{i} shares the paragraph body number {i * 7}" for i in range(12))
+    rows = [(i, f"{para} variant ending {i}") for i in range(6)]
+    rows += [(10 + i, f"unrelated note {i} " * (5 + i)) for i in range(4)]
+    cfg = DedupConfig(max_bucket_size=3, min_substring_len=120)
+    df = spark.createDataFrame(rows, "id long, text string")
+    return cfg, sketches(df, cfg).localCheckpoint(eager=True)
+
+
+def test_shared_bucket_pass_matches_standalone_paths(spark, hot_sketches):
+    """One posting table and one bucket pass give each path the candidate
+    pairs and the audit rows its standalone wrapper gives on the same
+    sketches."""
+    from rust_gd_spark.operators import minhash, simhash, substring
+    from rust_gd_spark.pipeline import bucket_candidates, path_audits
+
+    cfg, sk = hot_sketches
+    cap, nw = cfg.max_bucket_size, cfg.neighbor_window
+    cands, audit = bucket_candidates(sk, cfg)
+    got = {p: {(r.id_l, r.id_r) for r in cands.filter(F.col("path") == p).collect()}
+           for p in range(3)}
+    audits = path_audits(audit, cfg)
+
+    expect = {
+        0: minhash.lsh_candidate_pairs(
+            minhash.explode_band_hashes(sk.select("id", "bands")), cap,
+            neighbor_window=nw, salt_oversized=True),
+        1: simhash.simhash_candidate_pairs(
+            simhash.simhash_bands(sk.select("id", "fp"), bands=cfg.sim_bands), cap,
+            neighbor_window=nw, materialize=False, salt_oversized=True),
+        2: substring.substring_candidate_pairs(
+            sk.select("id", "fps"), cap, neighbor_window=nw, salt_oversized=True),
+    }
+    for p, name in enumerate(("lsh_skew", "simhash_skew", "substring_skew")):
+        pairs, want_audit = expect[p]
+        assert got[p] == {(r.id_l, r.id_r) for r in pairs.collect()}, name
+        rows = audits[name].collect()
+        assert any(r.action == "salted" for r in rows), f"{name}: no hot bucket"
+        assert audits[name].columns == want_audit.columns, name
+        assert sorted(rows) == sorted(want_audit.collect()), name
+
+
+def test_equal_keys_of_two_paths_never_pair(spark):
+    """The same numeric key posted under MinHash (a band hash), SimHash (a
+    band value) and winnowing (a fingerprint) keeps three buckets."""
+    from rust_gd_spark.pipeline import bucket_candidates
+
+    def fp(i):  # SimHash bands 0x1234+i, 0x5678+i, …: no band shared
+        return 0x1234_5678_9ABC_DEF0 + i * 0x0001_0001_0001_0001
+
+    rows = [
+        (1, [], [7, 100], fp(1), []), (2, [], [7, 200], fp(2), []),  # MinHash band 0
+        (3, [], [], 7, []), (4, [], [], 7, []),  # SimHash bands (7, 0, 0, 0)
+        (5, [], [], fp(3), [7]), (6, [], [], fp(4), [7]),  # winnow fp
+    ]
+    sk = spark.createDataFrame(
+        rows, "id long, shingles array<long>, bands array<long>, fp long, fps array<long>")
+    cands, audit = bucket_candidates(sk, DedupConfig())
+    got = {(r.path, r.id_l, r.id_r) for r in cands.collect()}
+    assert got == {(0, 1, 2), (1, 3, 4), (2, 5, 6)}
+    assert audit.count() == 0
